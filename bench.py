@@ -35,6 +35,15 @@ KG_CONVS = int(os.environ.get("SPARK_GRAFT_KG_CONVS", "0"))  # 0 → scale by sf
 # legs (--kg-only) keep 1 rep — scripts/scaling_bench.py interleaves and
 # best-ofs across its own reps so pairs share ambient conditions.
 KG_REPS = int(os.environ.get("SPARK_GRAFT_KG_REPS", "2"))
+# Shuffle settings, the best config of the A/B in BENCH.md §Shuffle-config
+# A/B: the shuffle codec trades compression CPU against tmpfs bytes (=
+# memory-bus traffic, the single-box 4→16 ceiling), the shuffle file
+# buffer batches flush syscalls, and the Arrow batch size amortizes
+# Python-worker socket round-trips.
+IO_CODEC = "lz4"
+SHUFFLE_FILE_BUFFER = "32k"
+ARROW_BATCH = "2048"
+SHUFFLE_PARTS_PER_CORE = 4
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -58,16 +67,6 @@ def build_spark() -> SparkSession:
         if os.path.isdir("/dev/shm")
         else None
     )
-    # A/B-tunable knobs (scripts/diag_shuffle_configs.py sweeps these;
-    # defaults are the adopted best config — see BENCH.md §Shuffle-config
-    # A/B): shuffle codec trades compression CPU against tmpfs bytes (=
-    # memory-bus traffic, the single-box 4→16 ceiling), the shuffle file
-    # buffer batches flush syscalls, and the Arrow batch size amortizes
-    # Python-worker socket round-trips.
-    codec = os.environ.get("SPARK_GRAFT_CODEC", "lz4")
-    shuffle_buf = os.environ.get("SPARK_GRAFT_SHUFFLE_BUFFER", "32k")
-    arrow_batch = os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048")
-    parts_per_core = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PPC", "4"))
     builder = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("graphrag-rs-spark-bench")
@@ -75,13 +74,13 @@ def build_spark() -> SparkSession:
         # exchanges back down, while the big ones (the 40M-row edge
         # dedupe) keep per-task group counts inside the hash-agg map
         # threshold and skew smears across more, smaller tasks
-        .config("spark.sql.shuffle.partitions", str(CPUS * parts_per_core))
+        .config("spark.sql.shuffle.partitions", str(CPUS * SHUFFLE_PARTS_PER_CORE))
         .config("spark.default.parallelism", str(CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", arrow_batch)
-        .config("spark.io.compression.codec", codec)
-        .config("spark.shuffle.file.buffer", shuffle_buf)
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", ARROW_BATCH)
+        .config("spark.io.compression.codec", IO_CODEC)
+        .config("spark.shuffle.file.buffer", SHUFFLE_FILE_BUFFER)
         # Shuffle compression OFF by default ONLY when shuffle dirs live
         # on tmpfs (same /dev/shm check as spark.local.dir above): there
         # writes are memory copies and lz4's CPU work buys nothing back —
@@ -276,14 +275,10 @@ def _bench_settings(kg_only: bool) -> dict:
         "spark_local_dir": (
             "/dev/shm/spark-graft-local" if os.path.isdir("/dev/shm") else "default"
         ),
-        "shuffle_partitions": (
-            CPUS * int(os.environ.get("SPARK_GRAFT_SHUFFLE_PPC", "4"))
-        ),
-        "io_codec": os.environ.get("SPARK_GRAFT_CODEC", "lz4"),
-        "shuffle_file_buffer": os.environ.get(
-            "SPARK_GRAFT_SHUFFLE_BUFFER", "32k"
-        ),
-        "arrow_batch": os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"),
+        "shuffle_partitions": CPUS * SHUFFLE_PARTS_PER_CORE,
+        "io_codec": IO_CODEC,
+        "shuffle_file_buffer": SHUFFLE_FILE_BUFFER,
+        "arrow_batch": ARROW_BATCH,
         "shuffle_compress": os.environ.get(
             "SPARK_GRAFT_SHUFFLE_COMPRESS",
             "false" if os.path.isdir("/dev/shm") else "true",

@@ -11,7 +11,9 @@ tables at 10^12-turn scale:
 * canonicalization replaces the reference's O(n²) all-pairs similarity scan
   with blocking keys + distributed pair scoring + large-star/small-star
   connected components,
-* skew (mega-conversations, hub entities) is handled with explicit salting,
+* skew is bounded explicitly: mega-conversations can be range-split, hot
+  blocking keys are capped, and hub-entity edges re-point through
+  broadcast joins,
 * each stage checkpoints with per-partition lineage for exact resume.
 
 Reference semantics are cited per-module as ``path:line`` into

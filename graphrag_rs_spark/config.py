@@ -4,7 +4,7 @@ Mirrors the knobs of the reference's ``Config`` /
 ``EntityExtractionConfig`` / ``EntityLinkingConfig`` / ``GleaningConfig``
 (graphrag-rs: config/mod.rs:844-910, entity/string_similarity_linker.rs:17-52,
 entity/gleaning_extractor.rs:22-57) plus Spark-scale knobs (partitions,
-blocking caps, salting) that have no single-process counterpart.
+blocking caps) that have no single-process counterpart.
 """
 
 from __future__ import annotations
@@ -115,24 +115,6 @@ class PipelineConfig:
     # names into triples). Multi-token names (≥7 keys) still face the
     # full gate — they carry the junk mass the gate exists to shed.
     key_poor_max_keys: int = 4
-    # Broadcast the (entity_id, type, norm_name) scorer meta onto the
-    # candidate-pair table instead of shuffle-joining it. The pair table
-    # is the stage's largest (tens of millions of rows) and meta is one
-    # slim row per DISTINCT entity (~25 MB at 388k entities), so shuffle
-    # joins would re-exchange the pair table twice right after the dedupe
-    # shuffle — measured as a dominant non-scaling fraction on a single
-    # box. Broadcast size grows with distinct entities, not corpus: ~600
-    # MB at 10M entities. Set False beyond that to restore shuffle joins.
-    broadcast_pair_meta: bool = True
-
-    # --- graph materialization ---
-    # salting fan-out for hub-entity edge re-pointing joins
-    salt_buckets: int = 16
-    # ObjectHashAggregate sort-fallback key threshold applied SESSION-WIDE
-    # by the pipeline (see functions.tune_object_agg — the outputs are lazy
-    # so the conf must outlive build_graph). 0 leaves the session conf
-    # untouched; functions.restore_object_agg(spark) undoes it.
-    object_agg_threshold: int = 2_000_000
 
     # --- embeddings stage (vector/mod.rs:559-685 hash embeddings;
     # retrieval/mod.rs:425-458: chunks embed content, entities embed
@@ -149,7 +131,6 @@ class PipelineConfig:
 
     # --- spark-scale knobs ---
     shuffle_partitions: int = 32
-    arrow_max_records_per_batch: int = 2048
     # extraction is the pipeline's most CPU-dense stage (~0.7 ms/KB — a
     # 64 MB shuffle partition is ~45 s of single-core work), so sizing its
     # tasks by shuffle BYTES (what shuffle.partitions/AQE give) leaves it

@@ -164,13 +164,10 @@ _KEY_MAP: dict[tuple[str, str], str] = {
     ("parallel_processing", "max_threads"): "shuffle_partitions",
     # our Spark-native section, same file format
     ("spark", "shuffle_partitions"): "shuffle_partitions",
-    ("spark", "arrow_max_records_per_batch"): "arrow_max_records_per_batch",
     ("spark", "extraction_partitions_per_core"): "extraction_partitions_per_core",
     ("spark", "max_block_size"): "max_block_size",
     ("spark", "max_derived_block_size"): "max_derived_block_size",
     ("spark", "min_shared_blocks"): "min_shared_blocks",
-    ("spark", "salt_buckets"): "salt_buckets",
-    ("spark", "broadcast_pair_meta"): "broadcast_pair_meta",
     ("graph_construction", "semantic_edges"): "semantic_edges",
     (
         "graph_construction",

@@ -9,9 +9,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _OBJ_AGG_FALLBACK = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+_OBJ_AGG_THRESHOLD = 2_000_000
 
 
-def tune_object_agg(spark: SparkSession, threshold: int = 2_000_000) -> None:
+def tune_object_agg(spark: SparkSession) -> None:
     """Keep ``collect_set``/``collect_list`` aggregations hash-based.
 
     Spark's ObjectHashAggregateExec falls back to SORT-BASED aggregation
@@ -39,16 +40,13 @@ def tune_object_agg(spark: SparkSession, threshold: int = 2_000_000) -> None:
     buffers per group now risks spill-less memory pressure instead of
     degrading to sort. Callers who share a session with such jobs should
     call ``restore_object_agg(spark)`` after materializing the pipeline
-    outputs, or pass ``object_agg_threshold=0`` in ``PipelineConfig`` to
-    leave the conf untouched.
+    outputs; that is the one way back.
     """
-    if threshold <= 0:
-        return
     try:
         prior = spark.conf.get(_OBJ_AGG_FALLBACK)
         if prior == "128":
             _PRIOR_OBJ_AGG.setdefault(id(spark), prior)
-            spark.conf.set(_OBJ_AGG_FALLBACK, str(threshold))
+            spark.conf.set(_OBJ_AGG_FALLBACK, str(_OBJ_AGG_THRESHOLD))
     except Exception:  # pragma: no cover - conf missing on exotic builds
         pass
 
@@ -130,25 +128,6 @@ def unit_normalize_col(vec: Column) -> Column:
     return F.when(
         norm > 0, F.transform(vec, lambda x: x / norm)
     ).otherwise(F.transform(vec, lambda x: x * F.lit(0.0)))
-
-
-def salted_join_small_side(small: DataFrame, key: str, buckets: int) -> DataFrame:
-    """Replicate the small side of a skewed join over ``buckets`` salt values.
-
-    Classic skew-join salting: the big side derives ``_salt`` deterministically
-    (e.g. pmod(xxhash64(varying_col), buckets)); the small side is exploded
-    so every (key, salt) bucket can be joined without one reducer owning a
-    hub key's entire row set.
-    """
-    return small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    )
-
-
-def with_salt(df: DataFrame, varying_col: str, buckets: int) -> DataFrame:
-    return df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(varying_col)), F.lit(buckets)).cast("int")
-    )
 
 
 def compute_once(df: DataFrame, exprs: dict[str, Column], tmp: str = "_co") -> DataFrame:

@@ -335,22 +335,16 @@ def candidate_pairs(
     # grow with cores the way it grows with executors). Broadcasting
     # leaves exactly ONE wide exchange in the stage: the (id1, id2)
     # dedupe itself. The broadcast grows with DISTINCT entities, not
-    # corpus size; at ~10M entities it is ~600 MB — still inside driver
-    # budgets that run builds of that scale, and `config.
-    # broadcast_pair_meta=False` restores the shuffle joins beyond it.
+    # corpus size: ~60 B per entity, so ~600 MB at ~10M entities, which
+    # must fit the driver's and every executor's memory.
     meta = entities.select(
         "entity_id",
         "entity_type",
         normalize_name_col(F.col("name")).alias("norm_name"),
     )
-    bcast = (
-        F.broadcast
-        if getattr(config, "broadcast_pair_meta", True)
-        else (lambda df: df)
-    )
     return (
         pairs.join(
-            bcast(meta.select(
+            F.broadcast(meta.select(
                 F.col("entity_id").alias("id1"),
                 F.col("entity_type").alias("type1"),
                 F.col("norm_name").alias("norm1"),
@@ -358,7 +352,7 @@ def candidate_pairs(
             "id1",
         )
         .join(
-            bcast(meta.select(
+            F.broadcast(meta.select(
                 F.col("entity_id").alias("id2"),
                 F.col("entity_type").alias("type2"),
                 F.col("norm_name").alias("norm2"),

@@ -4,9 +4,7 @@
   canonical id (the consumer side of the linker's links map,
   graphrag-rs string_similarity_linker.rs:66-71). Hub entities make the
   re-point join the pipeline's skew hot spot: the linkmap side is small
-  relative to edges, so we BROADCAST it; when a linkmap is too large to
-  broadcast, ``salt_buckets`` activates the salted shuffle join
-  (functions.with_salt / salted_join_small_side).
+  relative to edges, so we BROADCAST it and no reducer owns a hub.
 * Self-loops created by merging near-duplicate endpoints are dropped.
 * Edge dedupe — key (subj, obj, pred), keep max confidence, union contexts
   (gleaning_extractor.rs:418-435).
@@ -29,9 +27,7 @@ from graphrag_rs_spark.operators.graph import communities, degrees
 def repoint_edges(
     edges_raw: DataFrame,
     clusters: DataFrame,
-    broadcast_linkmap: bool = True,
     relationship_confidence: float = 0.5,
-    int_coded_agg: bool = True,
 ) -> DataFrame:
     """Map subj/obj to canonical cluster ids and dedupe.
 
@@ -46,26 +42,23 @@ def repoint_edges(
 
     Returns edges(subj, pred, obj, confidence, context array<string>).
 
-    ``int_coded_agg`` (occurrence path only): the dedupe exchange is the
-    build's largest shuffle — tens of millions of occurrence rows keyed
-    by two ~22-byte canonical-id strings. The same broadcast join that
-    re-points an endpoint also attaches a per-cluster LONG code (built
-    once from the distinct cluster ids, materialized so the encode and
-    decode sides read one snapshot), the aggregation groups on the code
-    pair (~45% fewer shuffle bytes, long comparisons instead of string),
-    and a broadcast decode restores the canonical-id strings afterwards —
-    the output is IDENTICAL row-for-row. Endpoints absent from the
-    linkmap (impossible in the pipeline, where every entity maps to a
-    cluster — singletons to themselves — but legal for foreign inputs)
-    keep their raw string in the group key, so correctness does not
-    depend on coverage.
+    Occurrence-level rows are aggregated on integer codes. The dedupe
+    exchange is the build's largest shuffle: tens of millions of
+    occurrence rows, which would be keyed by two ~22-byte canonical-id
+    strings. The same broadcast join that re-points an endpoint also
+    attaches a per-cluster LONG code (built once from the distinct
+    cluster ids, materialized so the encode and decode sides read one
+    snapshot), the aggregation groups on the code pair (~45% fewer
+    shuffle bytes, long comparisons instead of string), and a broadcast
+    decode restores the canonical-id strings afterwards — the output is
+    IDENTICAL row-for-row to grouping on the strings. Endpoints absent
+    from the linkmap (impossible in the pipeline, where every entity
+    maps to a cluster — singletons to themselves — but legal for foreign
+    inputs) keep their raw string in the group key, so correctness does
+    not depend on coverage.
     """
-    combined = "contexts" in edges_raw.columns
-
-    if combined:
-        repointed, _ = repointed_occurrences(
-            edges_raw, clusters, broadcast_linkmap
-        )
+    if "contexts" in edges_raw.columns:
+        repointed = repointed_occurrences(edges_raw, clusters)
         # occurrence rows all carry the constant config confidence
         # (edges_raw_table semantics, config/mod.rs:887-889), so max == lit
         return (
@@ -84,19 +77,6 @@ def repoint_edges(
             )
         )
 
-    if not int_coded_agg:
-        repointed, _ = repointed_occurrences(
-            edges_raw, clusters, broadcast_linkmap
-        )
-        # dedupe on (subj, obj, pred): max confidence, contexts unioned
-        # (groupBy does map-side partial aggregation, so hub-entity skew
-        # is absorbed by the combiner before the shuffle)
-        return repointed.groupBy("subj", "pred", "obj").agg(
-            F.max("confidence").alias("confidence"),
-            F.array_sort(F.collect_set("context_chunk")).alias("context"),
-        )
-
-    # ---- int-coded aggregation path ----
     codes = (
         clusters.select("cluster_id")
         .distinct()
@@ -108,8 +88,8 @@ def repoint_edges(
     )
     # Identity rows for cluster_ids that are NOT themselves mapped
     # entity_ids: a raw endpoint string equal to such a cluster_id must
-    # land in the SAME group as rows coded to that cluster (the legacy
-    # path groups on decoded strings, where they collide). Pipeline-
+    # land in the SAME group as rows coded to that cluster (as it would
+    # when grouping on decoded strings). Pipeline-
     # produced clusters always contain their representative, so this
     # anti-join is empty there; it only fires on foreign inputs.
     identity = (
@@ -118,13 +98,11 @@ def repoint_edges(
         )
         .join(clusters.select("entity_id"), "entity_id", "left_anti")
     )
-    linkmap = (
+    linkmap = F.broadcast(
         clusters.select("entity_id", "cluster_id")
         .join(codes, "cluster_id")
         .unionByName(identity)
     )
-    if broadcast_linkmap:
-        linkmap = F.broadcast(linkmap)
 
     coded = (
         edges_raw.join(
@@ -188,30 +166,21 @@ def repoint_edges(
         # The pre-agg coded filter is conservative: it cannot see a
         # MAPPED endpoint whose cluster_id string equals the other
         # side's UNMAPPED raw string (code vs raw compare), and it keeps
-        # rows with NULL endpoints that the legacy path's `subj != obj`
-        # null semantics drop. Finish both on the decoded (post-agg,
-        # small) rows so the two paths are row-identical on any input.
+        # rows with NULL endpoints that `subj != obj` null semantics
+        # drop. Finish both on the decoded (post-agg, small) rows, so the
+        # output equals a string-grouped aggregation on any input.
         .where(F.col("subj") != F.col("obj"))
     )
 
 
-def repointed_occurrences(
-    edges_raw: DataFrame,
-    clusters: DataFrame,
-    broadcast_linkmap: bool = True,
-) -> tuple[DataFrame, bool]:
-    """Occurrence-level triples with endpoints re-pointed to cluster ids,
-    self-loops dropped — the shared input of the context-carrying edge
-    aggregation AND the slim (subj, pred, obj) key table."""
-    combined = "contexts" in edges_raw.columns
-    linkmap = clusters.select("entity_id", "cluster_id")
-    if broadcast_linkmap:
-        linkmap = F.broadcast(linkmap)
-
-    carry = ["contexts", "n_occurrences"] if combined else [
+def repointed_occurrences(edges_raw: DataFrame, clusters: DataFrame) -> DataFrame:
+    """Raw triples (either shape ``repoint_edges`` accepts) with endpoints
+    re-pointed to cluster ids, self-loops dropped, not yet deduped."""
+    linkmap = F.broadcast(clusters.select("entity_id", "cluster_id"))
+    carry = ["contexts", "n_occurrences"] if "contexts" in edges_raw.columns else [
         "confidence", "context_chunk"
     ]
-    repointed = (
+    return (
         edges_raw.join(
             linkmap.select(
                 F.col("entity_id").alias("subj"), F.col("cluster_id").alias("subj_c")
@@ -234,7 +203,6 @@ def repointed_occurrences(
         )
         .where(F.col("subj") != F.col("obj"))  # merged endpoints → self-loop → drop
     )
-    return repointed, combined
 
 
 def nodes_table(clusters: DataFrame, entities_raw: DataFrame) -> DataFrame:
@@ -261,15 +229,20 @@ def materialize_graph(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Returns (nodes, edges, node_stats).
 
+    The stats key table feeding degrees and communities is the
+    (subj, pred, obj) projection of ``edges`` itself, so the two can
+    never disagree. Column pruning drops the ``max``/``collect_set``
+    buffers from that projection's aggregate, leaving a plain distinct
+    over the grouping keys.
+
     ``cache_intermediate`` caches the SLIM tables that multiple consumers
-    scan (nodes; the distinct (subj, pred, obj) key set feeding degrees and
-    communities). The context-carrying edge table itself is deliberately
-    NEVER memory-cached: Spark's in-memory columnar encoder is pathological
-    on array columns (measured 255 s to cache 4.2M context-carrying rows
-    that took 31 s to COMPUTE), so persisting it costs ~8× the recompute
-    it saves. Stats consumers read the flat key table instead; callers who
-    rescan `edges` repeatedly should checkpoint it to parquet
-    (plans/checkpoint.py), which encodes arrays natively."""
+    scan (nodes; the key table). The context-carrying edge table itself
+    is deliberately NEVER memory-cached: Spark's in-memory columnar
+    encoder is pathological on array columns (measured 255 s to cache
+    4.2M context-carrying rows that took 31 s to COMPUTE), so persisting
+    it costs ~8× the recompute it saves. Callers who rescan `edges`
+    repeatedly should checkpoint it to parquet (plans/checkpoint.py),
+    which encodes arrays natively."""
     config = config or PipelineConfig()
     tune_object_agg(edges_raw.sparkSession)
     nodes = nodes_table(clusters, entities_raw)
@@ -280,25 +253,13 @@ def materialize_graph(
         edges_raw, clusters,
         relationship_confidence=config.relationship_confidence,
     )
-    # slim dedupe for stats: same key set as `edges`, no context arrays —
-    # cheap to aggregate (no array buffers), flat-column cacheable
-    repointed, _ = repointed_occurrences(edges_raw, clusters)
-    edge_keys = repointed.select("subj", "pred", "obj").distinct()
 
     # referential integrity (core/mod.rs:291-306): drop edges with unknown
     # endpoints — left-semi joins prune without widening rows
-    node_ids = nodes.select(F.col("cluster_id").alias("_nid"))
-
-    def integrity(df: DataFrame) -> DataFrame:
-        df = df.join(
-            F.broadcast(node_ids), df["subj"] == F.col("_nid"), "left_semi"
-        )
-        return df.join(
-            F.broadcast(node_ids), df["obj"] == F.col("_nid"), "left_semi"
-        )
-
-    edges = integrity(edges)
-    edge_keys = integrity(edge_keys)
+    node_ids = F.broadcast(nodes.select(F.col("cluster_id").alias("_nid")))
+    edges = edges.join(node_ids, edges["subj"] == F.col("_nid"), "left_semi")
+    edges = edges.join(node_ids, edges["obj"] == F.col("_nid"), "left_semi")
+    edge_keys = edges.select("subj", "pred", "obj")
     if cache_intermediate:
         edge_keys = edge_keys.cache()
 

@@ -59,7 +59,7 @@ def build_graph(
             f"unknown extraction_mode {config.extraction_mode!r}: "
             "'algorithmic' | 'semantic' | 'hybrid'"
         )
-    tune_object_agg(spark, config.object_agg_threshold)
+    tune_object_agg(spark)
     cfg_repr = repr(sorted(asdict(config).items()))
     ckpt = CheckpointManager(spark, checkpoint_dir) if checkpoint_dir else None
 

@@ -8,10 +8,16 @@ config_loader.py for the documented divergence).
 
 from __future__ import annotations
 
+import ast
+from dataclasses import fields
+from pathlib import Path
+
 import pytest
 
+import graphrag_rs_spark
 from graphrag_rs_spark.config import PipelineConfig
 from graphrag_rs_spark.config_loader import (
+    _KEY_MAP,
     ConfigError,
     config_from_dict,
     detect_format,
@@ -113,7 +119,16 @@ class TestApplication:
 
     def test_unknown_keys_ignored(self):
         cfg = config_from_dict(
-            {"monitoring": {"enabled": True}, "text_processing": {"bogus": 1}}
+            {
+                "monitoring": {"enabled": True},
+                "text_processing": {"bogus": 1},
+                # keys of since-removed fields: old files still load
+                "spark": {
+                    "salt_buckets": 32,
+                    "arrow_max_records_per_batch": 8192,
+                    "broadcast_pair_meta": False,
+                },
+            }
         )
         assert cfg == PipelineConfig()
 
@@ -160,3 +175,26 @@ class TestFiles:
         p.write_text("[text_processing\nchunk_size = 1")
         with pytest.raises(ConfigError, match="TOML parse error"):
             load_config(str(p))
+
+
+class TestNoDeadKnobs:
+    """Every config field is read by the package, and every config-file
+    key lands on a field."""
+
+    def test_every_field_is_read(self):
+        pkg = Path(graphrag_rs_spark.__file__).parent
+        read = set()
+        for path in pkg.rglob("*.py"):
+            if path.name == "config_loader.py":
+                continue
+            tree = ast.parse(path.read_text(), filename=str(path))
+            read |= {
+                node.attr for node in ast.walk(tree)
+                if isinstance(node, ast.Attribute)
+            }
+        unread = [f.name for f in fields(PipelineConfig) if f.name not in read]
+        assert unread == []
+
+    def test_every_mapped_key_is_a_field(self):
+        names = {f.name for f in fields(PipelineConfig)}
+        assert set(_KEY_MAP.values()) <= names
