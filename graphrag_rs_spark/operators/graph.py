@@ -47,14 +47,14 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr_edges.union(self_edges).where(F.col("u") != F.col("v")).distinct()
 
 
-def _local_cc(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Driver-side union-find for edge sets below the smallness threshold.
+def _min_roots(pairs) -> list[tuple[str, str]]:
+    """Union-find over a stream of ``(a, b)`` edges: ``(node, root)`` for
+    every node seen.
 
-    Same output contract as the distributed path (component = min string id).
-    The collect is BOUNDED by the caller's threshold check — this is the
-    small-side fast path, not the scale path.
+    A union hangs the larger root under the smaller one, so by induction
+    every root is the minimum string id of its set, the component label
+    the distributed path produces.
     """
-    spark = edges.sparkSession
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -65,19 +65,28 @@ def _local_cc(edges: DataFrame, src: str, dst: str) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in edges.select(src, dst).collect():
-        a, b = row[0], row[1]
+    for a, b in pairs:
         for v in (a, b):
             if v not in parent:
                 parent[v] = v
         ra, rb = find(a), find(b)
         if ra != rb:
-            # min-string root keeps the representative deterministic
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    rows = [(v, find(v)) for v in parent]
-    return spark.createDataFrame(rows, "id string, component string")
+    return [(v, find(v)) for v in parent]
+
+
+def _local_cc(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Driver-side union-find for edge sets below the smallness threshold.
+
+    Same output contract as the distributed path (component = min string id).
+    The collect is BOUNDED by the caller's threshold check — this is the
+    small-side fast path, not the scale path.
+    """
+    rows = _min_roots(edges.select(src, dst).collect())
+    return edges.sparkSession.createDataFrame(
+        rows, "id string, component string")
 
 
 def _two_level_cc(
@@ -108,63 +117,15 @@ def _two_level_cc(
     def _forest(batches: _It["pd.DataFrame"]) -> _It["pd.DataFrame"]:
         import pandas as pd
 
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in batches:
-            for a, b in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
-                for v in (a, b):
-                    if v not in parent:
-                        parent[v] = v
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-        yield pd.DataFrame(
-            [(v, find(v)) for v in parent], columns=["id", "root"]
-        )
+        pairs = (p for pdf in batches
+                 for p in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]))
+        yield pd.DataFrame(_min_roots(pairs), columns=["id", "root"])
 
     def _merge(batches: _It["pd.DataFrame"]) -> _It["pd.DataFrame"]:
         import pandas as pd
 
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in batches:
-            for a, b in zip(pdf["id"], pdf["root"]):
-                for v in (a, b):
-                    if v not in parent:
-                        parent[v] = v
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-        # min-string representative per root (roots are already the min of
-        # their union path, but re-derive to be explicit and safe)
-        rep: dict[str, str] = {}
-        for v in parent:
-            r = find(v)
-            if r not in rep or v < rep[r]:
-                rep[r] = v
-        yield pd.DataFrame(
-            [(v, rep[find(v)]) for v in parent], columns=["id", "component"]
-        )
+        pairs = (p for pdf in batches for p in zip(pdf["id"], pdf["root"]))
+        yield pd.DataFrame(_min_roots(pairs), columns=["id", "component"])
 
     forest = edges.select(F.col(src), F.col(dst)).mapInPandas(
         _forest, schema="id string, root string"

@@ -3,9 +3,9 @@
 Runs the full KG build over an EXTREME-skew fixture — every 2500th
 conversation is a 1,150-turn giant (100× the ~11.5-turn median) and one
 hub entity carries ~10% of all mentions (`ScaledVocab(hub_rate=0.1)`) —
-with the Spark UI enabled, then pulls REAL per-task executorRunTime
-distributions for every completed stage from the REST status API and
-pins the straggler ratio max/median.
+with Spark's event log on, then reads REAL per-task executor run times
+for every completed stage from the log and pins the straggler ratio
+max/median.
 
 A stage "fails" only when it is both skewed AND material:
 ratio >= RATIO_MAX and max task >= MATERIAL_MS (sub-material stages with
@@ -14,44 +14,67 @@ straggler costs nothing at any scale). The replay-bucket stage is
 expected to carry the giant component's bucket as its longest task —
 bounded by the O(E+V) frontier walk, not the component's square.
 
-    N_CONVS=2000 CPUS=8 python scripts/diag_skew_stress.py
+    N_CONVS=2000 python scripts/diag_skew_stress.py
 
 Prints a per-stage table and ONE JSON verdict line.
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
+from collections import defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
 N = int(os.environ.get("N_CONVS", "2000"))
-CPUS = int(os.environ.get("CPUS", "8"))
-RATIO_MAX = float(os.environ.get("SKEW_RATIO_MAX", "4"))
-MATERIAL_MS = float(os.environ.get("SKEW_MATERIAL_MS", "5000"))
-UI_PORT = int(os.environ.get("SKEW_UI_PORT", "4050"))
+CPUS = 8
+RATIO_MAX = 4.0
+MATERIAL_MS = 5000.0
 
 
-_UI_BASE = [f"http://localhost:{UI_PORT}"]
+def stage_run_times(event_log: str) -> dict[tuple[int, int], tuple[str, list]]:
+    """``{(stage, attempt): (name, sorted executor run times in ms)}`` over
+    the successful tasks of every stage attempt that completed."""
+    names: dict[tuple[int, int], str] = {}
+    runs: dict[tuple[int, int], list] = defaultdict(list)
+    with open(event_log) as fh:
+        for line in fh:
+            ev = json.loads(line)
+            if ev["Event"] == "SparkListenerStageCompleted":
+                info = ev["Stage Info"]
+                if "Failure Reason" not in info:
+                    names[info["Stage ID"], info["Stage Attempt ID"]] = (
+                        info["Stage Name"])
+            elif (ev["Event"] == "SparkListenerTaskEnd"
+                  and ev["Task End Reason"]["Reason"] == "Success"):
+                runs[ev["Stage ID"], ev["Stage Attempt ID"]].append(
+                    ev["Task Metrics"]["Executor Run Time"])
+    return {key: (name, sorted(runs[key])) for key, name in names.items()}
 
 
-def _get(path: str):
-    # _UI_BASE is rebound to THIS session's uiWebUrl after startup — a
-    # port collision makes Spark bind port+1 (spark.port.maxRetries), and
-    # querying the fixed port would read some OTHER app's stages
-    with urllib.request.urlopen(
-        f"{_UI_BASE[0]}/api/v1{path}", timeout=30
-    ) as r:
-        return json.loads(r.read().decode("utf-8"))
+def quantile(sorted_ms: list, q: float) -> float:
+    """The status API's task-summary index rule."""
+    n = len(sorted_ms)
+    return float(sorted_ms[min(int(q * n), n - 1)])
 
 
 def main() -> None:
+    # half the memory still free: a JVM grows toward its maximum heap
+    # before it collects, and may share the host with another JVM
+    with open("/proc/meminfo") as fh:
+        heap_mb = int(next(ln for ln in fh if ln.startswith("MemAvailable"))
+                      .split()[1]) // 2048
+    events = tempfile.mkdtemp(prefix="skew-stress-events-")
+    atexit.register(shutil.rmtree, events, True)
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("diag-skew-stress")
@@ -60,16 +83,17 @@ def main() -> None:
         .config("spark.default.parallelism", str(CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
+        .config("spark.driver.memory", f"{heap_mb}m")
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # uncompressed and in one file, so plain Python can read it
+        .config("spark.eventLog.enabled", "true")
+        .config("spark.eventLog.dir", events)
+        .config("spark.eventLog.compress", "false")
+        .config("spark.eventLog.rolling.enabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    if ui:
-        _UI_BASE[0] = ui
 
     from graphrag_rs_spark.config import PipelineConfig
     from graphrag_rs_spark.fixtures import ScaledVocab, transcripts_df
@@ -96,36 +120,29 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    app_id = _get("/applications")[0]["id"]
-    stages = _get(f"/applications/{app_id}/stages?status=COMPLETE")
+    spark.stop()
+    (log,) = glob.glob(os.path.join(events, "*"))
+    stages = stage_run_times(log)
     rows = []
     worst = (0.0, None)
     failures = []
-    for st in stages:
-        sid, att = st["stageId"], st["attemptId"]
-        n_tasks = st.get("numCompleteTasks", 0)
+    for (sid, _), (name, run_ms) in sorted(stages.items()):
+        n_tasks = len(run_ms)
         if n_tasks < 2:
             continue
-        try:
-            summ = _get(
-                f"/applications/{app_id}/stages/{sid}/{att}/taskSummary"
-                "?quantiles=0.0,0.5,1.0"
-            )
-        except Exception:  # noqa: BLE001 — stage evicted from the UI store
-            continue
-        lo, med, hi = summ["executorRunTime"]
+        med, hi = quantile(run_ms, 0.5), quantile(run_ms, 1.0)
         # med == 0 with a real max IS maximally skewed; use a large FINITE
         # sentinel so the verdict line stays strict JSON (inf -> Infinity
         # is not parseable by non-Python consumers)
         ratio = (hi / med) if med > 0 else (0.0 if hi == 0 else 1e9)
         material = hi >= MATERIAL_MS
-        rows.append((sid, st["name"].split(" ")[0], n_tasks, med, hi, ratio,
+        rows.append((sid, name.split(" ")[0], n_tasks, med, hi, ratio,
                      material))
         if material and ratio > worst[0]:
             worst = (ratio, sid)
         if material and ratio >= RATIO_MAX:
             failures.append(
-                {"stage": sid, "name": st["name"].split(" ")[0],
+                {"stage": sid, "name": name.split(" ")[0],
                  "tasks": n_tasks, "median_ms": med, "max_ms": hi,
                  "ratio": round(ratio, 2)}
             )
@@ -158,7 +175,6 @@ def main() -> None:
         "pass": not failures,
     }
     print(json.dumps(verdict))
-    spark.stop()
     sys.exit(0 if not failures else 1)
 
 

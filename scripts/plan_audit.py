@@ -16,7 +16,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from contextlib import redirect_stdout
 
@@ -401,7 +402,7 @@ def main() -> None:
         out.append(f"**Summary**: `{summary}`\n")
         out.append("```\n" + plan.strip()[:4000] + "\n```\n")
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     for title, why, summary, _ in sections:

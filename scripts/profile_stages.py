@@ -1,60 +1,64 @@
-"""Per-stage wall-time profile of the KG build (bench diagnosis)."""
+"""Per-layer profile of one knowledge-graph build at any corpus size:
+the benchmark's traced ``batch_build`` pass (``perfbench/``), one whole
+``build_graph`` then layers A-F, each forced and cached in its own span.
+Spark runs ``local[n]`` on the CPUs this process may use:
 
-from __future__ import annotations
+    N_CONVS=60 taskset -c 0-7 python scripts/profile_stages.py
 
+Prints one row per span on stderr and one JSON line on stdout. Exits 1
+when the outputs fail the benchmark's checks (at 400 conversations these
+include the digests recorded in ``perfbench/expected.json``).
+"""
+
+import json
 import os
+import shutil
 import sys
-import time
+import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
-from pyspark.sql import SparkSession
+import eventlog  # noqa: E402
+import run  # noqa: E402
+import workloads  # noqa: E402
 
-N = int(os.environ.get("N_CONVS", "60"))
-CPUS = int(os.environ.get("CPUS", "8"))
+N = int(os.environ.get("N_CONVS", "400"))
+SEED = 1
 
 
-def main():
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("profile")
-        .config("spark.local.dir", "/dev/shm/spark-graft-local")
-        .config("spark.sql.shuffle.partitions", str(CPUS * 4))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from graphrag_rs_spark.config import PipelineConfig
-    from graphrag_rs_spark.fixtures import ScaledVocab, transcripts_df
-    from graphrag_rs_spark.plans.pipeline import build_graph
-
-    t0 = time.perf_counter()
-    # same scaled vocabulary as bench.py so canonicalization/CC run at
-    # non-toy graph sizes during profiling
-    vocab = ScaledVocab(n_persons=max(50, N // 2), n_orgs=max(20, N // 5))
-    transcripts = transcripts_df(spark, N, seed=42, distributed=True,
-                                 partitions=CPUS * 2, vocab=vocab).cache()
-    n_turns = transcripts.count()
-    print(f"gen+cache: {time.perf_counter()-t0:.1f}s ({n_turns} turns)")
-
-    cfg = PipelineConfig(shuffle_partitions=CPUS, min_shared_blocks=2)
-    marks = [("build_graph() call (incl. eager CC)", None)]
-    t0 = time.perf_counter()
-    tables = build_graph(spark, transcripts, cfg)
-    t1 = time.perf_counter()
-    print(f"build_graph plan construction (eager CC inside): {t1-t0:.1f}s")
-
-    for name in ["documents", "chunks", "extraction", "entities_raw",
-                 "edges_raw", "clusters", "nodes", "edges", "node_stats"]:
-        t0 = time.perf_counter()
-        n = tables[name].count()
-        print(f"{name}: {time.perf_counter()-t0:.1f}s ({n} rows)")
-    spark.stop()
+def main() -> int:
+    cores = len(os.sched_getaffinity(0))
+    # half the memory still free: a JVM grows toward its maximum heap
+    # before it collects, and may share the host with another JVM
+    with open("/proc/meminfo") as fh:
+        heap = int(next(ln for ln in fh if ln.startswith("MemAvailable"))
+                   .split()[1]) // 2048
+    # a fresh directory: never perfbench/_work, which a running benchmark owns
+    run.WORK = tempfile.mkdtemp(prefix="profile-stages-")
+    try:
+        spark = run.start_session(cores, heap, True)
+        try:
+            wl = workloads.BatchBuild(spark, run.WORK, SEED, {"corpus": N},
+                                      run.expected_digests(SEED, N))
+            spans = eventlog.Spans(spark)
+            wl.setup(spans)
+            metrics, ok = run.traced_metrics(wl, spark, spans)
+        finally:
+            run.stop_jvm(spark)
+    finally:
+        shutil.rmtree(run.WORK, ignore_errors=True)
+    values = {name: m["value"] for name, m in metrics.items()}
+    print(f"{'span':24}" + "".join(f"{m:>18}" for m in eventlog.SPAN_UNITS),
+          file=sys.stderr)
+    for span in workloads.SPANS["batch_build"]:
+        print(f"{span:24}" + "".join(f"{values[span + '.' + m]:>18.6g}"
+                                     for m in eventlog.SPAN_UNITS),
+              file=sys.stderr)
+    print(json.dumps({"convs": N, "cores": cores, "ok": ok,
+                      "metrics": values}))
+    return 0 if ok else 1
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

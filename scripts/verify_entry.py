@@ -5,9 +5,11 @@ DuckDB (row count + column names + order-insensitive value comparison)."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 from pyspark.sql import SparkSession
