@@ -1,4 +1,4 @@
-"""Stage E — graph materialization: re-point edges, build nodes/edges tables.
+"""Stage F — graph materialization: re-point edges, build nodes/edges tables.
 
 * Edge re-pointing — every raw triple's subj/obj is replaced by its cluster's
   canonical id (the consumer side of the linker's links map,
@@ -220,53 +220,44 @@ def nodes_table(clusters: DataFrame, entities_raw: DataFrame) -> DataFrame:
     )
 
 
-def materialize_graph(
+def edges_table(
     edges_raw: DataFrame,
     clusters: DataFrame,
-    entities_raw: DataFrame,
+    nodes: DataFrame,
     config: PipelineConfig | None = None,
-    cache_intermediate: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Returns (nodes, edges, node_stats).
+) -> DataFrame:
+    """Re-pointed, deduped edges whose endpoints both exist in ``nodes``.
 
-    The stats key table feeding degrees and communities is the
-    (subj, pred, obj) projection of ``edges`` itself, so the two can
-    never disagree. Column pruning drops the ``max``/``collect_set``
-    buffers from that projection's aggregate, leaving a plain distinct
-    over the grouping keys.
-
-    ``cache_intermediate`` caches the SLIM tables that multiple consumers
-    scan (nodes; the key table). The context-carrying edge table itself
-    is deliberately NEVER memory-cached: Spark's in-memory columnar
-    encoder is pathological on array columns (measured 255 s to cache
-    4.2M context-carrying rows that took 31 s to COMPUTE), so persisting
-    it costs ~8× the recompute it saves. Callers who rescan `edges`
-    repeatedly should checkpoint it to parquet (plans/checkpoint.py),
-    which encodes arrays natively."""
+    The context-carrying edge table is deliberately NEVER memory-cached:
+    Spark's in-memory columnar encoder is pathological on array columns
+    (measured 255 s to cache 4.2M context-carrying rows that took 31 s to
+    COMPUTE), so persisting it costs ~8x the recompute it saves. Callers
+    who rescan ``edges`` repeatedly should checkpoint it to parquet
+    (plans/checkpoint.py), which encodes arrays natively."""
     config = config or PipelineConfig()
     tune_object_agg(edges_raw.sparkSession)
-    nodes = nodes_table(clusters, entities_raw)
-    if cache_intermediate:
-        # nodes feeds the integrity-filter broadcast AND the output
-        nodes = nodes.cache()
     edges = repoint_edges(
         edges_raw, clusters,
         relationship_confidence=config.relationship_confidence,
     )
-
     # referential integrity (core/mod.rs:291-306): drop edges with unknown
     # endpoints — left-semi joins prune without widening rows
     node_ids = F.broadcast(nodes.select(F.col("cluster_id").alias("_nid")))
     edges = edges.join(node_ids, edges["subj"] == F.col("_nid"), "left_semi")
-    edges = edges.join(node_ids, edges["obj"] == F.col("_nid"), "left_semi")
-    edge_keys = edges.select("subj", "pred", "obj")
-    if cache_intermediate:
-        edge_keys = edge_keys.cache()
+    return edges.join(node_ids, edges["obj"] == F.col("_nid"), "left_semi")
 
+
+def node_stats_table(nodes: DataFrame, edge_keys: DataFrame) -> DataFrame:
+    """Degree and connected-component community per node.
+
+    ``edge_keys`` is the (subj, pred, obj) projection of ``edges_table``
+    itself, so stats and edges can never disagree. Over an unpersisted
+    ``edges`` plan, column pruning drops the ``max``/``collect_set``
+    buffers from that projection's aggregate, leaving a plain distinct
+    over the grouping keys."""
     deg = degrees(edge_keys, src="subj", dst="obj")
     comm = communities(edge_keys, src="subj", dst="obj")
-
-    node_stats = (
+    return (
         nodes.select("cluster_id")
         .join(deg, nodes["cluster_id"] == deg["id"], "left")
         .drop("id")
@@ -279,7 +270,31 @@ def materialize_graph(
             F.coalesce("community_size", F.lit(1)).alias("community_size"),
         )
     )
-    return nodes, edges, node_stats
+
+
+def materialize_graph(
+    edges_raw: DataFrame,
+    clusters: DataFrame,
+    entities_raw: DataFrame,
+    config: PipelineConfig | None = None,
+    cache_intermediate: bool = False,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Returns (nodes, edges, node_stats): ``nodes_table``, ``edges_table``
+    and ``node_stats_table`` composed.
+
+    ``cache_intermediate`` caches the SLIM tables that multiple consumers
+    scan (nodes; the edge key table). The key table is not returned:
+    callers that need to release it use ``spark.catalog.clearCache()``,
+    or compose the three steps themselves."""
+    nodes = nodes_table(clusters, entities_raw)
+    if cache_intermediate:
+        # nodes feeds the integrity-filter broadcast AND the output
+        nodes = nodes.cache()
+    edges = edges_table(edges_raw, clusters, nodes, config)
+    edge_keys = edges.select("subj", "pred", "obj")
+    if cache_intermediate:
+        edge_keys = edge_keys.cache()
+    return nodes, edges, node_stats_table(nodes, edge_keys)
 
 
 def graph_statistics(nodes: DataFrame, edges: DataFrame) -> DataFrame:

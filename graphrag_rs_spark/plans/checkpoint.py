@@ -5,9 +5,10 @@ graph/incremental.rs:196-341: GraphDelta, transactions, rollback; versioned
 auto-save config/mod.rs:107-123) re-expressed as table snapshots:
 
 * every stage writes its output table plus a ``_lineage`` table with one row
-  per output partition ``(stage, partition_id, row_count, checksum)`` and a
-  ``manifest.json`` carrying the stage fingerprint (content hash of the
-  stage name, its config, and its upstream fingerprints — the analogue of
+  per output partition ``(stage, partition_id, row_count, checksum,
+  hash_sum)`` and a ``manifest.json`` carrying the stage fingerprint
+  (content hash of the stage name, its config, its lineage format and its
+  upstream fingerprints — the analogue of
   incremental/mod.rs:47-51's content-hash change detection);
 * resume = if a manifest with a matching fingerprint exists, the stage is
   served from its checkpoint and NOT recomputed;
@@ -31,7 +32,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = "stage string, partition_id string, row_count long, checksum long"
+LINEAGE_SCHEMA = (
+    "stage string, partition_id string, row_count long, checksum long, "
+    "hash_sum long"
+)
+# Part of every stage fingerprint: a checkpoint whose lineage lacks a
+# column the current code records is recomputed, not failed by validate.
+LINEAGE_FORMAT = "lineage-v2:xor+sum"
 
 
 def _fingerprint(*parts: str) -> str:
@@ -78,7 +85,7 @@ class CheckpointManager:
         ``compute`` is a zero-arg callable returning the stage DataFrame.
         """
         upstream_fps = tuple(self._fingerprints.get(u, "?") for u in upstreams)
-        fp = _fingerprint(name, config_repr, *upstream_fps)
+        fp = _fingerprint(name, config_repr, LINEAGE_FORMAT, *upstream_fps)
         self._fingerprints[name] = fp
 
         data_dir = os.path.join(self._stage_dir(name), "data")
@@ -106,6 +113,7 @@ class CheckpointManager:
         totals = self.spark.read.parquet(lineage_dir).agg(
             F.sum("row_count").alias("rows"),
             F.expr("bit_xor(checksum)").alias("checksum"),
+            F.sum("hash_sum").alias("hash_sum"),
         ).collect()[0]
 
         self._write_manifest(
@@ -116,6 +124,7 @@ class CheckpointManager:
                 "upstreams": list(upstreams),
                 "row_count": int(totals["rows"] or 0),
                 "checksum": int(totals["checksum"] or 0),
+                "hash_sum": int(totals["hash_sum"] or 0),
                 "wall_ms": wall_ms,
                 "committed": True,
             },
@@ -135,7 +144,7 @@ class CheckpointManager:
         return self.spark.read.parquet(os.path.join(self._stage_dir(stage), "lineage"))
 
     def validate(self, stage: str) -> DataFrame:
-        """Re-derive per-partition (row_count, checksum) from the stage's
+        """Re-derive per-partition (row_count, checksum, hash_sum) from the stage's
         CURRENT data files and anti-join against the recorded lineage —
         returns the mismatched/missing partition rows (empty = intact).
         The partition-granular integrity check behind exact resume: a
@@ -149,7 +158,7 @@ class CheckpointManager:
             # snapshot unreadable (all data files gone): every recorded
             # partition is missing
             return recorded.withColumn("problem", F.lit("missing_or_changed"))
-        key = ["stage", "partition_id", "row_count", "checksum"]
+        key = ["stage", "partition_id", "row_count", "checksum", "hash_sum"]
         missing = recorded.join(current, key, "left_anti").withColumn(
             "problem", F.lit("missing_or_changed")
         )
@@ -171,6 +180,11 @@ class CheckpointManager:
         validating session configured differently from the writer would see
         different partition ids for an intact snapshot. The data file is
         the session-independent unit — it IS the write partition.
+
+        ``checksum`` is the xor of the row hashes, under which two equal
+        rows cancel; ``hash_sum`` adds their bounded sum (each hash taken
+        mod 2^31, so the long sum cannot overflow under ANSI mode), which
+        changes when a duplicated pair of rows is replaced by another.
         """
         cols = [F.col(c).cast("string") for c in df.columns]
         file_id = F.element_at(F.split(F.input_file_name(), "/"), -1)
@@ -183,8 +197,12 @@ class CheckpointManager:
             .agg(
                 F.count(F.lit(1)).alias("row_count"),
                 F.expr("bit_xor(row_hash)").alias("checksum"),
+                F.sum(F.pmod("row_hash", F.lit(2**31))).alias("hash_sum"),
             )
-            .select(F.lit(stage).alias("stage"), "partition_id", "row_count", "checksum")
+            .select(
+                F.lit(stage).alias("stage"),
+                "partition_id", "row_count", "checksum", "hash_sum",
+            )
         )
 
     @staticmethod

@@ -5,10 +5,10 @@ The canonical stage IR chain (SURVEY.md §3):
     transcripts → documents → chunks → extraction → {mentions,
     entities_raw, edges_raw} → clusters → {nodes, edges, node_stats}
 
-Each named stage optionally checkpoints through a
-:class:`~graphrag_rs_spark.plans.checkpoint.CheckpointManager`; without one
-the DAG is a single lazy Catalyst plan (extraction is cached since three
-tables branch from it).
+One rule decides what is materialized. With a
+:class:`~graphrag_rs_spark.plans.checkpoint.CheckpointManager`, every named
+stage is written and re-read; in memory, tables read by more than one later
+step are cached and counted, and the rest of the DAG stays one lazy plan.
 """
 
 from __future__ import annotations
@@ -29,7 +29,11 @@ from graphrag_rs_spark.operators.extraction import (
     extract_gleaning,
     mentions_table,
 )
-from graphrag_rs_spark.operators.materialize import materialize_graph
+from graphrag_rs_spark.operators.materialize import (
+    edges_table,
+    node_stats_table,
+    nodes_table,
+)
 from graphrag_rs_spark.plans.checkpoint import CheckpointManager
 
 
@@ -52,6 +56,9 @@ def build_graph(
     path — the same gate as the reference's ``use_gleaning &&
     ollama.enabled`` branch, which silently degrades to pattern extraction
     when no endpoint is configured.
+
+    Checkpointed, every stage is written and re-read; in memory, tables
+    read by more than one later step are cached and counted (``shared``).
     """
     config = config or PipelineConfig()
     if config.extraction_mode not in ("algorithmic", "semantic", "hybrid"):
@@ -67,6 +74,16 @@ def build_graph(
         if ckpt is None:
             return fn()
         return ckpt.stage(name, fn, config_repr=cfg_repr, upstreams=upstreams)
+
+    def shared(df: DataFrame) -> DataFrame:
+        # read by more than one later step. In memory, cache and count it
+        # where a checkpointed build writes it: one job's concurrent
+        # broadcast exchanges would each compute a cold cache (measured ~2x
+        # the whole build on entities_raw). Never `edges`: see edges_table.
+        if ckpt is None:
+            df = df.cache()
+            df.count()
+        return df
 
     documents = stage(
         "documents",
@@ -146,71 +163,36 @@ def build_graph(
         # hybrid: pattern is the `existing` side of the gleaning merge
         return merge_extractions(extract_chunks(chunks, config), llm)
 
-    extraction = stage("extraction", _extract, ("chunks",))
-    if ckpt is None:
-        extraction = extraction.cache()  # three tables branch from it
-
+    extraction = shared(stage("extraction", _extract, ("chunks",)))
     mentions = mentions_table(extraction)
-    entities_raw = stage(
+    entities_raw = shared(stage(
         "entities_raw", lambda: entities_raw_table(extraction), ("extraction",)
-    )
-    if ckpt is None:
-        # both canonicalization and the node roll-up consume entities_raw;
-        # without a checkpoint, cache it (one row per distinct entity —
-        # small) so the mention roll-up over the exploded extraction runs
-        # once, not twice. POPULATE it eagerly: canonicalization's first
-        # job scans this table from three stages (blocking keys + both
-        # scorer meta joins); against a cold cache those stages race to
-        # compute the same partitions and re-run extraction concurrently —
-        # measured ~2× the whole build. One count() here pays the
-        # extraction pass exactly once, warm for every later scan.
-        entities_raw = entities_raw.cache()
-        entities_raw.count()
+    ))
+    # occurrence rows: JVM hash-agg over them measured FASTER than the
+    # Python combiner (edges_partial_table), which wins only on state size
     edges_raw = stage(
         "edges_raw",
         lambda: edges_raw_table(extraction, config.relationship_confidence),
         ("extraction",),
     )
-    clusters = stage(
+    clusters = shared(stage(
         "clusters", lambda: canonicalize_entities(entities_raw, config), ("entities_raw",)
+    ))
+    nodes = shared(stage(
+        "nodes", lambda: nodes_table(clusters, entities_raw), ("clusters", "entities_raw")
+    ))
+    edges = stage(
+        "edges",
+        lambda: edges_table(edges_raw, clusters, nodes, config),
+        ("edges_raw", "clusters", "nodes"),
     )
-    if ckpt is None:
-        # clusters feeds nodes, edges AND node_stats — without a checkpoint,
-        # cache it so the greedy-replay UDF chain runs once, not three times
-        clusters = clusters.cache()
-
-    def _materialize():
-        # without a checkpoint, cache edges inside: they feed degrees,
-        # communities AND the final output
-        # NOTE: the occurrence-level JVM path measured FASTER than the
-        # Python-side combiner (edges_partial_table) here — codegen
-        # hash-agg over 40M narrow rows beats per-row Python dict ops;
-        # the combiner still wins where state SIZE matters (streaming
-        # workspace keeps 269k partial rows instead of 40M occurrences)
-        return materialize_graph(
-            edges_raw, clusters, entities_raw, config,
-            cache_intermediate=(ckpt is None),
-        )
+    node_stats = stage(
+        "node_stats",
+        lambda: node_stats_table(nodes, shared(edges.select("subj", "pred", "obj"))),
+        ("edges", "nodes"),
+    )
 
     semantic = None
-    if ckpt is None:
-        nodes, edges, node_stats = _materialize()
-    else:
-        # materialize returns three tables; checkpoint each
-        nodes_, edges_, stats_ = _materialize()
-        nodes = ckpt.stage(
-            "nodes", lambda: nodes_, config_repr=cfg_repr,
-            upstreams=("clusters", "entities_raw"),
-        )
-        edges = ckpt.stage(
-            "edges", lambda: edges_, config_repr=cfg_repr,
-            upstreams=("edges_raw", "clusters"),
-        )
-        node_stats = ckpt.stage(
-            "node_stats", lambda: stats_, config_repr=cfg_repr,
-            upstreams=("edges", "nodes"),
-        )
-
     if config.semantic_edges:
         # optional stage: SEMANTICALLY_SIMILAR edges between canonical
         # entities (graph/mod.rs:235-292); entity embedding text is

@@ -187,7 +187,11 @@ class IncrementalGraphSink:
             entities_raw_table,
             extract_chunks,
         )
-        from graphrag_rs_spark.operators.materialize import materialize_graph
+        from graphrag_rs_spark.operators.materialize import (
+            edges_table,
+            node_stats_table,
+            nodes_table,
+        )
 
         applied = self._current_batch_id()
         if applied is not None and batch_id == applied:
@@ -238,10 +242,12 @@ class IncrementalGraphSink:
 
         # global re-link + materialize over the merged roll-ups
         clusters = canonicalize_entities(entities_raw, self.config).cache()
-        nodes, edges, node_stats = materialize_graph(
-            edges_raw, clusters, entities_raw, self.config,
-            cache_intermediate=True,
-        )
+        # nodes feeds the integrity filter AND the output; the key table
+        # feeds degrees AND communities
+        nodes = nodes_table(clusters, entities_raw).cache()
+        edges = edges_table(edges_raw, clusters, nodes, self.config)
+        edge_keys = edges.select("subj", "pred", "obj").cache()
+        node_stats = node_stats_table(nodes, edge_keys)
 
         self._publish(
             batch_id,
@@ -253,13 +259,10 @@ class IncrementalGraphSink:
                 "edges_raw": edges_raw,
             },
         )
-        extraction.unpersist()
-        clusters.unpersist()
-        # materialize_graph cached nodes/edges internally
-        # (cache_intermediate=True); release them so cached plans don't
+        # release every table this batch cached, so cached plans don't
         # accumulate across micro-batches in a long-running stream
-        nodes.unpersist()
-        edges.unpersist()
+        for df in (extraction, clusters, nodes, edge_keys):
+            df.unpersist()
 
 
 def run_incremental_ingest(

@@ -23,11 +23,63 @@ def _triples(tables):
     }
 
 
+def _outputs(tables):
+    """Full rows of every output table, array columns sorted (edge
+    contexts, node aliases), rows in a fixed order."""
+    return {
+        name: sorted(
+            (
+                tuple(tuple(sorted(v)) if isinstance(v, list) else v for v in r)
+                for r in tables[name].collect()
+            ),
+            key=repr,
+        )
+        for name in ("nodes", "edges", "node_stats")
+    }
+
+
 def test_checkpointed_build_matches_direct(spark, transcripts, tmp_path):
+    """In-memory, cold checkpointed and resumed builds agree on every row
+    of nodes, edges and node_stats (the checkpointed node_stats reads the
+    edges parquet, the in-memory one the cached key table)."""
     cfg = PipelineConfig()
-    direct = build_graph(spark, transcripts, cfg)
-    ckpt = build_graph(spark, transcripts, cfg, checkpoint_dir=str(tmp_path / "ck"))
-    assert _triples(direct) == _triples(ckpt)
+    d = str(tmp_path / "ck")
+    direct = _outputs(build_graph(spark, transcripts, cfg))
+    assert all(direct.values())
+    cold = build_graph(spark, transcripts, cfg, checkpoint_dir=d)
+    assert "node_stats" in cold["_checkpoint"].stages_computed
+    assert _outputs(cold) == direct
+    resumed = build_graph(spark, transcripts, cfg, checkpoint_dir=d)
+    assert not resumed["_checkpoint"].stages_computed
+    assert _outputs(resumed) == direct
+
+
+def test_full_resume_calls_no_build_operator(spark, transcripts, tmp_path, monkeypatch):
+    """A full resume reads every stage from its checkpoint: no operator
+    that builds a stage runs, not even stage F's eager community pass."""
+    from graphrag_rs_spark.operators import materialize
+    from graphrag_rs_spark.plans import pipeline
+
+    cfg = PipelineConfig()
+    d = str(tmp_path / "ck_ops")
+    first = _outputs(build_graph(spark, transcripts, cfg, checkpoint_dir=d))
+
+    def _called(*args, **kwargs):
+        raise AssertionError("a full resume called a build operator")
+
+    for name in (
+        "assemble_documents", "chunk_documents", "extract_chunks",
+        "extract_gleaning", "entities_raw_table", "edges_raw_table",
+        "canonicalize_entities", "nodes_table", "edges_table",
+        "node_stats_table",
+    ):
+        monkeypatch.setattr(pipeline, name, _called)
+    monkeypatch.setattr(materialize, "communities", _called)
+    monkeypatch.setattr(materialize, "degrees", _called)
+
+    resumed = build_graph(spark, transcripts, cfg, checkpoint_dir=d)
+    assert not resumed["_checkpoint"].stages_computed
+    assert _outputs(resumed) == first
 
 
 def test_resume_skips_completed_stages(spark, transcripts, tmp_path):
@@ -104,3 +156,38 @@ def test_validate_detects_partition_damage(spark, transcripts, tmp_path):
     assert {r["problem"] for r in report.collect()} <= {
         "missing_or_changed", "unexpected"
     }
+
+
+def test_validate_detects_duplicate_row_swap(spark, tmp_path):
+    """Rows [a, a, c] rewritten as [b, b, c] keep the file name, the row
+    count and the xor checksum (equal rows cancel); the hash sum recorded
+    next to it still flags the file."""
+    import glob
+    import os
+    import shutil
+
+    def rows(*vs):
+        return spark.createDataFrame([(v,) for v in vs], "v string")
+
+    def crc(f):
+        return os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+
+    mgr = CheckpointManager(spark, str(tmp_path / "ck"))
+    mgr.stage("one_file", lambda: rows("a", "a", "c").coalesce(1))
+    assert mgr.validate("one_file").count() == 0
+
+    data = tmp_path / "ck" / "one_file" / "data"
+    [part] = glob.glob(str(data / "part-*.parquet"))
+    swap = str(tmp_path / "swap")
+    rows("b", "b", "c").coalesce(1).write.parquet(swap)
+    [new] = glob.glob(os.path.join(swap, "part-*.parquet"))
+    shutil.copyfile(new, part)
+    shutil.copyfile(crc(new), crc(part))
+
+    recorded = mgr.lineage("one_file").collect()
+    current = mgr._lineage_for("one_file", spark.read.parquet(str(data))).collect()
+    assert [(r["partition_id"], r["row_count"], r["checksum"]) for r in recorded] == [
+        (r["partition_id"], r["row_count"], r["checksum"]) for r in current
+    ], "the swap must be invisible to count + xor alone"
+    report = mgr.validate("one_file").collect()
+    assert {r["problem"] for r in report} == {"missing_or_changed", "unexpected"}

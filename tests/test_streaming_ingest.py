@@ -121,3 +121,22 @@ def test_stable_symlinks_survive_relative_workspace_dir(spark, tmp_path):
         assert spark.read.parquet(str(link)).count() > 0
     finally:
         os.chdir(cwd)
+
+
+def test_sink_releases_every_cached_table(spark, tmp_path):
+    """Each micro-batch unpersists every table it cached, so a long-running
+    stream does not accumulate one cached plan per batch."""
+    from graphrag_rs_spark.streaming.ingest import IncrementalGraphSink
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    sink = IncrementalGraphSink(str(tmp_path / "ws"), PipelineConfig())
+    sink.process_batch(transcripts_df(spark, 4, seed=5), batch_id=0)
+    sink.process_batch(
+        transcripts_df(spark, 4, seed=9).withColumn(
+            "conv_id", F.concat(F.lit("y"), F.col("conv_id"))
+        ),
+        batch_id=1,
+    )
+    assert sink._current_batch_id() == 1
+    assert cache.cachedData().size() == before
