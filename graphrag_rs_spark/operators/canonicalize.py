@@ -39,14 +39,16 @@ while making every step distributed:
    the exactness argument).
 7. **Canonical selection** — highest confidence wins, ties break on the
    greater entity_id (deterministic stand-in for Rust ``max_by`` last-wins,
-   string_similarity_linker.rs:106-124).
+   string_similarity_linker.rs:106-124). The cluster roll-up (canonical
+   name, cluster confidence, member count) is a window over
+   ``cluster_id``, so the replay's output is scanned once.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphrag_rs_spark.config import PipelineConfig
@@ -676,9 +678,9 @@ def canonicalize_entities(
     config = config or PipelineConfig()
     pairs = candidate_pairs(entities, config)
     # matches is TINY (pairs above threshold) but expensive to produce
-    # (blocking UDF + scoring UDF + joins); checkpoint it eagerly — the CC
-    # strategy probe, the CC itself, and the member join each trigger an
-    # action and would otherwise re-run the whole candidate chain
+    # (blocking UDF + scoring UDF + joins); checkpoint it eagerly — the
+    # CC's bounded collect and the replay's edge side each scan it and
+    # would otherwise re-run the whole candidate chain
     matches = score_pairs(pairs, config).localCheckpoint(eager=True)
 
     cc = connected_components(matches, src="id1", dst="id2").localCheckpoint(
@@ -736,21 +738,16 @@ def canonicalize_entities(
         F.coalesce("cluster_id", F.col("entity_id")).alias("cluster_id"),
     )
 
-    canonical = with_cluster.groupBy("cluster_id").agg(
-        F.max_by("name", F.struct("confidence", "entity_id")).alias("_canonical_name"),
-        F.max("confidence").alias("cluster_confidence"),
-        F.count(F.lit(1)).alias("member_count"),
-    )
-
-    return (
-        with_cluster.join(canonical, "cluster_id")
-        .select(
-            "entity_id",
-            "cluster_id",
-            F.col("_canonical_name").alias("canonical_name"),
-            "entity_type",
-            "confidence",
-            "cluster_confidence",
-            "member_count",
-        )
+    # roll-up by window, not groupBy + self-join: a join back onto
+    # with_cluster would scan it twice and run the replay UDF twice
+    cluster = Window.partitionBy("cluster_id")
+    return with_cluster.select(
+        "entity_id",
+        "cluster_id",
+        F.max_by("name", F.struct("confidence", "entity_id"))
+        .over(cluster).alias("canonical_name"),
+        "entity_type",
+        "confidence",
+        F.max("confidence").over(cluster).alias("cluster_confidence"),
+        F.count(F.lit(1)).over(cluster).alias("member_count"),
     )

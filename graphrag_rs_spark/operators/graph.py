@@ -12,6 +12,12 @@ which are single-process loops that cannot scale. Convergence is
 O(log² n) rounds; each round is two shuffles (groupBy min + join). Labels
 are numeric (xxhash64 of the string id) during iteration to keep shuffle
 rows narrow; string ids are restored by one final join.
+
+Small edge lists never reach the iterations: one bounded collect both
+decides the strategy and fetches the edges, and the driver-side
+union-find result goes back to Spark as an Arrow table, a JVM-only frame
+that no Python worker re-runs when it is scanned. A row with a NULL
+endpoint is not an edge, on every strategy.
 """
 
 from __future__ import annotations
@@ -77,16 +83,23 @@ def _min_roots(pairs) -> list[tuple[str, str]]:
     return [(v, find(v)) for v in parent]
 
 
-def _local_cc(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Driver-side union-find for edge sets below the smallness threshold.
+def _local_cc(spark, pairs) -> DataFrame:
+    """Driver-side union-find over already-collected ``(a, b)`` edges.
 
-    Same output contract as the distributed path (component = min string id).
-    The collect is BOUNDED by the caller's threshold check — this is the
-    small-side fast path, not the scale path.
+    Same output contract as the distributed path (component = min string
+    id). The result is built as a ``pyarrow.Table``, so Spark holds it as
+    JVM-side Arrow batches: no Python RDD, no Python worker on any later
+    scan. Callers bound the collect — this is the small-side fast path,
+    not the scale path.
     """
-    rows = _min_roots(edges.select(src, dst).collect())
-    return edges.sparkSession.createDataFrame(
-        rows, "id string, component string")
+    import pyarrow as pa
+
+    roots = _min_roots(pairs)
+    table = pa.table({
+        "id": pa.array([v for v, _ in roots], pa.string()),
+        "component": pa.array([r for _, r in roots], pa.string()),
+    })
+    return spark.createDataFrame(table, "id string, component string")
 
 
 def _two_level_cc(
@@ -161,12 +174,16 @@ def connected_components(
     """Edge list → (id string, component string) where component is the
     minimum string member id of each connected component.
 
-    ``strategy='auto'`` counts the (deduped) edge list once and picks:
+    Rows with a NULL endpoint are dropped where the edge list is first
+    projected: they are not edges, on any strategy.
 
-    * ``local`` — driver union-find, one collect bounded by
-      ``local_threshold`` (50k edges ≈ a few MB, sub-second): iterative
-      algorithms cost ~2 shuffles × rounds of fixed job overhead that
-      dwarfs tiny inputs.
+    ``strategy='auto'``: one bounded collect of at most
+    ``local_threshold + 1`` deduped edges decides and fetches, then picks:
+
+    * ``local`` — driver union-find over that collect (50k edges ≈ a few
+      MB, sub-second): iterative algorithms cost ~2 shuffles × rounds of
+      fixed job overhead that dwarfs tiny inputs. The result is an
+      Arrow-built, JVM-only frame (:func:`_local_cc`).
     * ``two_level`` — up to ``two_level_threshold`` edges AND an estimated
       ``two_level_max_nodes`` distinct nodes: per-partition union-find
       contraction + one single-task merge, all executor-side (see
@@ -184,14 +201,22 @@ def connected_components(
       bound; the only shape that survives billions of edges (or a sparse
       graph whose V alone would swamp one merge task).
 
+    Above ``local_threshold`` the edges are counted once more to choose
+    between the last two.
+
     Deterministic: all paths map components to the MINIMUM STRING id so
     callers see identical, stable representatives.
     """
+    spark = edges.sparkSession
+    edges = edges.select(F.col(src), F.col(dst)).dropna()
     if strategy == "auto":
-        e_dedup = edges.select(F.col(src), F.col(dst)).distinct()
+        e_dedup = edges.distinct()
+        # limit AFTER the distinct: duplicated edges must not push a small
+        # graph off the local path
+        head = e_dedup.limit(local_threshold + 1).collect()
+        if len(head) <= local_threshold:
+            return _local_cc(spark, head)
         n = e_dedup.count()
-        if n <= local_threshold:
-            return _local_cc(e_dedup, src, dst)
         if n <= two_level_threshold:
             v_est = (
                 e_dedup.select(F.col(src).alias("id"))
@@ -203,11 +228,9 @@ def connected_components(
                 return _two_level_cc(e_dedup, src, dst, n_edges=n)
         edges = e_dedup
     elif strategy == "local":
-        return _local_cc(edges, src, dst)
+        return _local_cc(spark, edges.collect())
     elif strategy == "two_level":
-        return _two_level_cc(
-            edges.select(F.col(src), F.col(dst)).distinct(), src, dst
-        )
+        return _two_level_cc(edges.distinct(), src, dst)
     elif strategy != "distributed":
         # a typo like "two-level" must not silently run the heaviest
         # path (O(log² n) star-contraction shuffle rounds) instead of
@@ -216,7 +239,6 @@ def connected_components(
             f"unknown strategy {strategy!r}: expected "
             "'auto' | 'local' | 'two_level' | 'distributed'"
         )
-    spark = edges.sparkSession
     ids = (
         edges.select(F.col(src).alias("id"))
         .union(edges.select(F.col(dst).alias("id")))

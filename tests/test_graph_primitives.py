@@ -44,6 +44,90 @@ def test_connected_components_strategies_match_truth(spark, strategy):
     assert got == truth
 
 
+@pytest.mark.parametrize(
+    "strategy", ["auto", "local", "two_level", "distributed"])
+def test_connected_components_null_endpoint_is_not_an_edge(spark, strategy):
+    """A row with a NULL endpoint is dropped on every strategy: no error,
+    no (None, None) row, and the other endpoint joins no component."""
+    df = spark.createDataFrame(
+        [("a", None), ("a", "b"), (None, None)], "src string, dst string")
+    got = {
+        (r["id"], r["component"])
+        for r in connected_components(df, strategy=strategy).collect()
+    }
+    assert got == {("a", "a"), ("b", "a")}
+
+
+def test_auto_cc_decides_in_one_action_without_count(spark, monkeypatch):
+    """The local path decides and fetches with one bounded collect; a
+    separate count() would be a second Spark job per call."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    edges, truth = _random_component_graph(seed=5)
+    df = spark.createDataFrame(edges, "src string, dst string")
+
+    def banned(self):  # pragma: no cover - failure path
+        raise AssertionError("connected_components counted its edges")
+
+    monkeypatch.setattr(ClassicDataFrame, "count", banned)
+    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+    assert got == truth
+
+
+@pytest.mark.parametrize("strategy", ["auto", "local"])
+def test_local_cc_result_is_jvm_only(spark, strategy):
+    """The driver-side union-find comes back as Arrow batches held by the
+    JVM: scanning it runs no Python worker."""
+    edges, truth = _random_component_graph(seed=13)
+    df = spark.createDataFrame(edges, "src string, dst string")
+    cc = connected_components(df, strategy=strategy)
+    assert "PythonRDD" not in cc._jdf.rdd().toDebugString()
+    assert {r["id"]: r["component"] for r in cc.collect()} == truth
+
+
+def test_local_cc_empty_result_keeps_schema(spark):
+    df = spark.createDataFrame([("a", None)], "src string, dst string")
+    cc = connected_components(df)
+    assert cc.schema.simpleString() == "struct<id:string,component:string>"
+    assert cc.collect() == []
+
+
+def test_auto_cc_local_bound_counts_distinct_edges(spark, monkeypatch):
+    """Exactly ``local_threshold`` distinct edges, each listed twice, stay
+    on the local path; one more distinct edge leaves it."""
+    import graphrag_rs_spark.operators.graph as graph_mod
+
+    threshold = 6
+    chain = [(f"x{i}", f"x{i+1}") for i in range(threshold)]
+    truth = {(f"x{i}", "x0") for i in range(threshold + 1)}
+    df = spark.createDataFrame(chain * 2, "src string, dst string")
+
+    def banned(*a, **kw):  # pragma: no cover - failure path
+        raise AssertionError("left the local path at the threshold")
+
+    monkeypatch.setattr(graph_mod, "_two_level_cc", banned)
+    got = {
+        (r["id"], r["component"])
+        for r in graph_mod.connected_components(
+            df, local_threshold=threshold).collect()
+    }
+    assert got == truth
+
+    def banned_local(*a, **kw):  # pragma: no cover - failure path
+        raise AssertionError("stayed local above the threshold")
+
+    monkeypatch.undo()
+    monkeypatch.setattr(graph_mod, "_local_cc", banned_local)
+    over = (chain + [("z1", "z2")]) * 2
+    df = spark.createDataFrame(over, "src string, dst string")
+    got = {
+        (r["id"], r["component"])
+        for r in graph_mod.connected_components(
+            df, local_threshold=threshold).collect()
+    }
+    assert got == truth | {("z1", "z1"), ("z2", "z1")}
+
+
 def test_connected_components_rejects_unknown_strategy(spark):
     # a typo like "two-level" must raise, not silently run the heaviest
     # distributed star-contraction path

@@ -1,0 +1,45 @@
+"""Spark-job ceiling for one small in-memory build.
+
+A small build is dominated by per-job cost (scheduling, broadcast and
+AQE stage submission), so the job count is the number that moves when a
+stage starts doing work twice: a count before a collect, a Python RDD
+rescanned, a UDF planned under both sides of a self-join. The ceiling is
+the count this code runs, measured on a 4-core host in the shared test
+session; it repeats exactly run to run for a fixed input.
+"""
+
+from __future__ import annotations
+
+import uuid
+
+# 12 convs, seed 42, shuffle_partitions=4, outputs forced by noop writes
+JOB_CEILING = 67
+
+
+def _build_jobs(spark) -> int:
+    from graphrag_rs_spark.config import PipelineConfig
+    from graphrag_rs_spark.fixtures import transcripts_df
+    from graphrag_rs_spark.plans.pipeline import build_graph
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        tables = build_graph(
+            spark, transcripts_df(spark, 12, seed=42),
+            PipelineConfig(shuffle_partitions=4),
+        )
+        for name in ("nodes", "edges", "node_stats"):
+            tables[name].write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.catalog.clearCache()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_small_build_job_ceiling(spark):
+    jobs = _build_jobs(spark)
+    assert jobs <= JOB_CEILING, (
+        f"{jobs} Spark jobs for one 12-conv build (ceiling {JOB_CEILING})")

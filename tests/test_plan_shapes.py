@@ -45,6 +45,7 @@ def summarize(plan: str) -> dict:
             o in ("BroadcastHashJoin", "BroadcastNestedLoopJoin") for o in ops
         ),
         "sortmerge_joins": sum(o == "SortMergeJoin" for o in ops),
+        "cogroups": sum(o == "FlatMapCoGroupsInPandas" for o in ops),
         "python_stages": sum(
             o
             in (
@@ -372,3 +373,17 @@ def test_candidate_pair_stage_broadcast_meta_no_sortmerge(extraction):
     # AQE-converted at runtime (PLANS.md note) — only the meta broadcast
     # and a loose stage budget are pinned
     assert s["exchanges"] <= 12, s
+
+
+def test_greedy_replay_runs_once_in_clusters_plan(extraction):
+    """The cluster roll-up is a window over the replay's output, not a
+    groupBy joined back onto it: a self-join there scans the cogroup
+    twice and runs the greedy-replay UDF twice."""
+    from graphrag_rs_spark.config import PipelineConfig
+    from graphrag_rs_spark.operators.canonicalize import canonicalize_entities
+    from graphrag_rs_spark.operators.extraction import entities_raw_table
+
+    cfg = PipelineConfig()
+    s = summarize(
+        plan_of(canonicalize_entities(entities_raw_table(extraction), cfg)))
+    assert s["cogroups"] == 1, s
