@@ -185,56 +185,24 @@ def edges_raw_table(extraction: DataFrame, relationship_confidence: float = 0.5)
     )
 
 
+def edges_partial_table(extraction: DataFrame) -> DataFrame:
+    """Pre-combined triples: one row per distinct (subj, pred, obj) with
+    its sorted distinct context chunk ids and its occurrence count.
+
+    ``edges_raw_table`` emits one row per triple OCCURRENCE; the streaming
+    workspace keeps this roll-up instead, so its state grows with distinct
+    keys, not occurrences. A JVM hash aggregate of ``edges_raw_table``;
+    ``edges_table`` accepts either shape, and merging partials
+    (streaming/ingest.py) is associative, so both give the same edges."""
+    return edges_raw_table(extraction).groupBy("subj", "pred", "obj").agg(
+        F.array_sort(F.collect_set("context_chunk")).alias("contexts"),
+        F.count(F.lit(1)).alias("n_occurrences"),
+    )
+
+
 # ---------------------------------------------------------------------------
 # Gleaning-style multi-pass driver loop
 # ---------------------------------------------------------------------------
-
-EDGES_PARTIAL_SCHEMA = (
-    "subj string, pred string, obj string, contexts array<string>, "
-    "n_occurrences long"
-)
-
-
-def edges_partial_table(extraction: DataFrame) -> DataFrame:
-    """Per-partition pre-combined triples — the combiner pushed INTO the
-    Arrow UDF.
-
-    ``edges_raw_table`` emits one row per triple OCCURRENCE (40M rows per
-    100k conversations); every downstream consumer immediately aggregates
-    them back to ~10k distinct (subj, pred, obj) keys. This variant
-    aggregates across ALL Arrow batches of each partition inside one
-    ``mapInPandas`` pass, so only ``n_partitions × n_distinct_keys`` rows
-    (~30× fewer) ever reach the JVM: occurrence counts summed, context
-    chunk ids collected. The final groupBy in the re-point stage merges
-    partials — sum/union are associative, so results are bit-identical to
-    the occurrence-level path (asserted by tests/test_pipeline_e2e.py).
-    """
-    t = extraction.select("chunk_id", "triples")
-
-    def combine(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        acc: dict[tuple[str, str, str], list] = {}
-        for pdf in batches:
-            for chunk_id, triples in zip(pdf["chunk_id"], pdf["triples"]):
-                for t3 in triples:
-                    # Arrow delivers structs as dicts
-                    key = (t3["subj"], t3["pred"], t3["obj"])
-                    slot = acc.get(key)
-                    if slot is None:
-                        acc[key] = [{chunk_id}, 1]
-                    else:
-                        slot[0].add(chunk_id)
-                        slot[1] += 1
-        rows = [
-            (s, p, o, sorted(ctx), n) for (s, p, o), (ctx, n) in acc.items()
-        ]
-        yield pd.DataFrame(
-            rows, columns=["subj", "pred", "obj", "contexts", "n_occurrences"]
-        )
-
-    return t.mapInPandas(combine, schema=EDGES_PARTIAL_SCHEMA)
-
 
 def extract_gleaning(
     chunks: DataFrame,

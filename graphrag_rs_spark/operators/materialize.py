@@ -5,11 +5,13 @@
   graphrag-rs string_similarity_linker.rs:66-71). Hub entities make the
   re-point join the pipeline's skew hot spot: the linkmap side is small
   relative to edges, so we BROADCAST it and no reducer owns a hub.
+* Referential integrity — both endpoints must exist in nodes
+  (core/mod.rs:291-306: add_relationship requires both endpoints). The
+  linkmap only holds endpoints that re-point to a node, so the same
+  inner join that re-points an endpoint drops an edge to a non-node.
 * Self-loops created by merging near-duplicate endpoints are dropped.
 * Edge dedupe — key (subj, obj, pred), keep max confidence, union contexts
   (gleaning_extractor.rs:418-435).
-* Referential integrity — both endpoints must exist in nodes
-  (core/mod.rs:291-306: add_relationship requires both endpoints).
 * Node stats — degree (graph/analytics.rs:69-89) and connected-component
   communities with sizes (analytics.rs:97-176, leiden.rs:106-120).
 """
@@ -22,187 +24,6 @@ from pyspark.sql import functions as F
 from graphrag_rs_spark.config import PipelineConfig
 from graphrag_rs_spark.functions import tune_object_agg
 from graphrag_rs_spark.operators.graph import communities, degrees
-
-
-def repoint_edges(
-    edges_raw: DataFrame,
-    clusters: DataFrame,
-    relationship_confidence: float = 0.5,
-) -> DataFrame:
-    """Map subj/obj to canonical cluster ids and dedupe.
-
-    Accepts EITHER shape of raw triples:
-
-    * occurrence-level rows (subj, pred, obj, confidence, context_chunk)
-      from ``edges_raw_table``, or
-    * per-partition pre-combined rows (subj, pred, obj, contexts,
-      n_occurrences) from ``edges_partial_table`` — ~30× fewer rows reach
-      the joins and the final aggregation merges partial context sets
-      (associative, bit-identical result).
-
-    Returns edges(subj, pred, obj, confidence, context array<string>).
-
-    Occurrence-level rows are aggregated on integer codes. The dedupe
-    exchange is the build's largest shuffle: tens of millions of
-    occurrence rows, which would be keyed by two ~22-byte canonical-id
-    strings. The same broadcast join that re-points an endpoint also
-    attaches a per-cluster LONG code (built once from the distinct
-    cluster ids, materialized so the encode and decode sides read one
-    snapshot), the aggregation groups on the code pair (~45% fewer
-    shuffle bytes, long comparisons instead of string), and a broadcast
-    decode restores the canonical-id strings afterwards — the output is
-    IDENTICAL row-for-row to grouping on the strings. Endpoints absent
-    from the linkmap (impossible in the pipeline, where every entity
-    maps to a cluster — singletons to themselves — but legal for foreign
-    inputs) keep their raw string in the group key, so correctness does
-    not depend on coverage.
-    """
-    if "contexts" in edges_raw.columns:
-        repointed = repointed_occurrences(edges_raw, clusters)
-        # occurrence rows all carry the constant config confidence
-        # (edges_raw_table semantics, config/mod.rs:887-889), so max == lit
-        return (
-            repointed.groupBy("subj", "pred", "obj")
-            .agg(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("contexts")))
-                ).alias("context"),
-            )
-            .select(
-                "subj",
-                "pred",
-                "obj",
-                F.lit(relationship_confidence).cast("float").alias("confidence"),
-                "context",
-            )
-        )
-
-    codes = (
-        clusters.select("cluster_id")
-        .distinct()
-        .withColumn("_code", F.monotonically_increasing_id())
-        # encode and decode MUST see the same code assignment;
-        # monotonically_increasing_id is partition-dependent, so pin one
-        # materialized snapshot for both scans
-        .localCheckpoint(eager=False)
-    )
-    # Identity rows for cluster_ids that are NOT themselves mapped
-    # entity_ids: a raw endpoint string equal to such a cluster_id must
-    # land in the SAME group as rows coded to that cluster (as it would
-    # when grouping on decoded strings). Pipeline-
-    # produced clusters always contain their representative, so this
-    # anti-join is empty there; it only fires on foreign inputs.
-    identity = (
-        codes.select(
-            F.col("cluster_id").alias("entity_id"), "cluster_id", "_code"
-        )
-        .join(clusters.select("entity_id"), "entity_id", "left_anti")
-    )
-    linkmap = F.broadcast(
-        clusters.select("entity_id", "cluster_id")
-        .join(codes, "cluster_id")
-        .unionByName(identity)
-    )
-
-    coded = (
-        edges_raw.join(
-            linkmap.select(
-                F.col("entity_id").alias("subj"),
-                F.col("_code").alias("_scode"),
-            ),
-            "subj",
-            "left",
-        )
-        .join(
-            linkmap.select(
-                F.col("entity_id").alias("obj"),
-                F.col("_code").alias("_ocode"),
-            ),
-            "obj",
-            "left",
-        )
-        .select(
-            "_scode",
-            # raw string rides in the key ONLY when no code exists
-            F.when(F.col("_scode").isNull(), F.col("subj")).alias("_sraw"),
-            "pred",
-            "_ocode",
-            F.when(F.col("_ocode").isNull(), F.col("obj")).alias("_oraw"),
-            "confidence",
-            "context_chunk",
-        )
-        # merged endpoints → self-loop → drop (null-safe on both parts)
-        .where(
-            ~(
-                F.col("_scode").eqNullSafe(F.col("_ocode"))
-                & F.col("_sraw").eqNullSafe(F.col("_oraw"))
-            )
-        )
-    )
-    agg = coded.groupBy("_scode", "_sraw", "pred", "_ocode", "_oraw").agg(
-        F.max("confidence").alias("confidence"),
-        F.array_sort(F.collect_set("context_chunk")).alias("context"),
-    )
-    sdec = F.broadcast(
-        codes.select(
-            F.col("_code").alias("_scode"), F.col("cluster_id").alias("_sdec")
-        )
-    )
-    odec = F.broadcast(
-        codes.select(
-            F.col("_code").alias("_ocode"), F.col("cluster_id").alias("_odec")
-        )
-    )
-    return (
-        agg.join(sdec, "_scode", "left")
-        .join(odec, "_ocode", "left")
-        .select(
-            F.coalesce("_sdec", "_sraw").alias("subj"),
-            "pred",
-            F.coalesce("_odec", "_oraw").alias("obj"),
-            "confidence",
-            "context",
-        )
-        # The pre-agg coded filter is conservative: it cannot see a
-        # MAPPED endpoint whose cluster_id string equals the other
-        # side's UNMAPPED raw string (code vs raw compare), and it keeps
-        # rows with NULL endpoints that `subj != obj` null semantics
-        # drop. Finish both on the decoded (post-agg, small) rows, so the
-        # output equals a string-grouped aggregation on any input.
-        .where(F.col("subj") != F.col("obj"))
-    )
-
-
-def repointed_occurrences(edges_raw: DataFrame, clusters: DataFrame) -> DataFrame:
-    """Raw triples (either shape ``repoint_edges`` accepts) with endpoints
-    re-pointed to cluster ids, self-loops dropped, not yet deduped."""
-    linkmap = F.broadcast(clusters.select("entity_id", "cluster_id"))
-    carry = ["contexts", "n_occurrences"] if "contexts" in edges_raw.columns else [
-        "confidence", "context_chunk"
-    ]
-    return (
-        edges_raw.join(
-            linkmap.select(
-                F.col("entity_id").alias("subj"), F.col("cluster_id").alias("subj_c")
-            ),
-            "subj",
-            "left",
-        )
-        .join(
-            linkmap.select(
-                F.col("entity_id").alias("obj"), F.col("cluster_id").alias("obj_c")
-            ),
-            "obj",
-            "left",
-        )
-        .select(
-            F.coalesce("subj_c", "subj").alias("subj"),
-            F.col("pred"),
-            F.coalesce("obj_c", "obj").alias("obj"),
-            *carry,
-        )
-        .where(F.col("subj") != F.col("obj"))  # merged endpoints → self-loop → drop
-    )
 
 
 def nodes_table(clusters: DataFrame, entities_raw: DataFrame) -> DataFrame:
@@ -226,7 +47,26 @@ def edges_table(
     nodes: DataFrame,
     config: PipelineConfig | None = None,
 ) -> DataFrame:
-    """Re-pointed, deduped edges whose endpoints both exist in ``nodes``.
+    """Re-pointed, deduped edges whose endpoints both exist in ``nodes``:
+    edges(subj, pred, obj, confidence, context array<string>).
+
+    Accepts either shape of raw triples; only the aggregate differs:
+
+    * occurrence rows (subj, pred, obj, confidence, context_chunk) from
+      ``edges_raw_table``: max confidence, sorted distinct chunk ids;
+    * pre-combined rows (subj, pred, obj, contexts, n_occurrences) from
+      ``edges_partial_table``: the configured confidence (every occurrence
+      carries it, config/mod.rs:887-889), union of the context sets.
+
+    Every node id gets a LONG code. The linkmap maps each entity to the
+    code of its cluster, and each node id that is not a clustered entity
+    to its own code; an entity whose cluster is not a node maps nowhere,
+    and a NULL cluster_id maps nothing. One broadcast inner join per
+    endpoint therefore re-points, int-codes and integrity-filters at
+    once. The dedupe exchange is the build's largest shuffle, and it
+    groups on the code pair instead of two ~22-byte strings; a broadcast
+    decode restores the ids afterwards. Two codes are equal exactly when
+    their ids are, so the output equals grouping on the id strings.
 
     The context-carrying edge table is deliberately NEVER memory-cached:
     Spark's in-memory columnar encoder is pathological on array columns
@@ -236,15 +76,58 @@ def edges_table(
     (plans/checkpoint.py), which encodes arrays natively."""
     config = config or PipelineConfig()
     tune_object_agg(edges_raw.sparkSession)
-    edges = repoint_edges(
-        edges_raw, clusters,
-        relationship_confidence=config.relationship_confidence,
+    codes = (
+        nodes.select("cluster_id")
+        .distinct()
+        .withColumn("_code", F.monotonically_increasing_id())
+        # encode and decode MUST see the same code assignment;
+        # monotonically_increasing_id is partition-dependent, so pin one
+        # materialized snapshot for both scans
+        .localCheckpoint(eager=False)
     )
-    # referential integrity (core/mod.rs:291-306): drop edges with unknown
-    # endpoints — left-semi joins prune without widening rows
-    node_ids = F.broadcast(nodes.select(F.col("cluster_id").alias("_nid")))
-    edges = edges.join(node_ids, edges["subj"] == F.col("_nid"), "left_semi")
-    return edges.join(node_ids, edges["obj"] == F.col("_nid"), "left_semi")
+    links = clusters.select("entity_id", "cluster_id").where(
+        F.col("cluster_id").isNotNull()
+    )
+    identity = codes.select(
+        F.col("cluster_id").alias("entity_id"), "_code"
+    ).join(links.select("entity_id"), "entity_id", "left_anti")
+    linkmap = F.broadcast(
+        links.join(codes, "cluster_id").select("entity_id", "_code")
+        .unionByName(identity)
+    )
+
+    def encode(side: str, code: str) -> DataFrame:
+        return linkmap.select(F.col("entity_id").alias(side), F.col("_code").alias(code))
+
+    coded = (
+        edges_raw.join(encode("subj", "_scode"), "subj")
+        .join(encode("obj", "_ocode"), "obj")
+        .where(F.col("_scode") != F.col("_ocode"))  # merged endpoints
+    )
+    if "contexts" in edges_raw.columns:
+        aggs = (
+            F.lit(config.relationship_confidence).cast("float").alias("confidence"),
+            F.array_sort(
+                F.array_distinct(F.flatten(F.collect_list("contexts")))
+            ).alias("context"),
+        )
+    else:
+        aggs = (
+            F.max("confidence").alias("confidence"),
+            F.array_sort(F.collect_set("context_chunk")).alias("context"),
+        )
+
+    def decode(code: str, side: str) -> DataFrame:
+        return F.broadcast(
+            codes.select(F.col("_code").alias(code), F.col("cluster_id").alias(side))
+        )
+
+    return (
+        coded.groupBy("_scode", "pred", "_ocode").agg(*aggs)
+        .join(decode("_scode", "subj"), "_scode")
+        .join(decode("_ocode", "obj"), "_ocode")
+        .select("subj", "pred", "obj", "confidence", "context")
+    )
 
 
 def node_stats_table(nodes: DataFrame, edge_keys: DataFrame) -> DataFrame:
@@ -288,7 +171,7 @@ def materialize_graph(
     or compose the three steps themselves."""
     nodes = nodes_table(clusters, entities_raw)
     if cache_intermediate:
-        # nodes feeds the integrity-filter broadcast AND the output
+        # nodes feeds edges_table's code table AND the output
         nodes = nodes.cache()
     edges = edges_table(edges_raw, clusters, nodes, config)
     edge_keys = edges.select("subj", "pred", "obj")

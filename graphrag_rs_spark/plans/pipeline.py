@@ -139,14 +139,9 @@ def build_graph(
         and client_factory is not None
     )
 
-    def _extract_pattern():
-        if config.max_gleaning_rounds > 1:
-            return extract_gleaning(chunks, config)
-        return extract_chunks(chunks, config)
-
     def _extract():
         if not llm_mode:
-            return _extract_pattern()
+            return extract_gleaning(chunks, config)
         from graphrag_rs_spark.operators.llm_extraction import (
             extract_chunks_llm,
             merge_extractions,
@@ -168,8 +163,9 @@ def build_graph(
     entities_raw = shared(stage(
         "entities_raw", lambda: entities_raw_table(extraction), ("extraction",)
     ))
-    # occurrence rows: JVM hash-agg over them measured FASTER than the
-    # Python combiner (edges_partial_table), which wins only on state size
+    # occurrence rows: stage F aggregates them once; the pre-combined
+    # edges_partial_table pays an extra exchange and serves only the
+    # streaming workspace, where state size matters
     edges_raw = stage(
         "edges_raw",
         lambda: edges_raw_table(extraction, config.relationship_confidence),

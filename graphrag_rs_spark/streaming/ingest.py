@@ -9,18 +9,21 @@ ingest-what-exists-then-stop behavior of the reference's
 StreamingImporter (pipeline/data_import.rs:604-612).
 
 **Exact incremental = rebuild.** Each batch runs only the EXPENSIVE narrow
-stages (assembly → chunking → extraction) on the new conversations, then
-merges the extraction-level tables (``entities_raw``, pre-combined
-triple partials) into
-the workspace with associative aggregations (max confidence, sum mentions,
-min first-appearance order key, alias union) and re-runs canonicalization
-+ materialization over the merged raw tables. Because the raw-table merge
-is associative and the greedy replay orders by the global first-appearance
-key, the workspace after N batches is IDENTICAL to a single batch build
-over the unioned transcripts — verified by tests/test_streaming_ingest.py.
-This mirrors the reference's incremental claim ("10× faster than rebuild")
-honestly: extraction is incremental; linking re-runs on the (much smaller)
-entity roll-up.
+stages (assembly → chunking → extraction, with the build's gleaning
+rounds) on the new conversations, then merges the extraction-level tables
+(``entities_raw`` and the pre-combined triples of ``edges_partial_table``,
+one row per distinct triple) into the workspace with associative
+aggregations (max confidence, sum mentions, min first-appearance order
+key, alias and context union) and re-runs canonicalization +
+materialization over the merged raw tables; ``edges_table`` takes the
+pre-combined rows through the same re-point join as a batch build's
+occurrence rows. Because the raw-table merge is associative and the
+greedy replay orders by the global first-appearance key, the workspace
+after N batches is IDENTICAL to a single batch build over the unioned
+transcripts — verified by tests/test_streaming_ingest.py. This mirrors the
+reference's incremental claim ("10× faster than rebuild") honestly:
+extraction is incremental; linking re-runs on the (much smaller) entity
+roll-up.
 
 At cluster scale the sink tables are Iceberg (``MERGE INTO`` + snapshot
 commit); here the state store is a parquet workspace swapped atomically
@@ -185,7 +188,7 @@ class IncrementalGraphSink:
         from graphrag_rs_spark.operators.extraction import (
             edges_partial_table,
             entities_raw_table,
-            extract_chunks,
+            extract_gleaning,
         )
         from graphrag_rs_spark.operators.materialize import (
             edges_table,
@@ -220,7 +223,7 @@ class IncrementalGraphSink:
             batch_df, separator=self.config.turn_separator
         )
         chunks = chunk_documents(documents, self.config)
-        extraction = extract_chunks(chunks, self.config).cache()
+        extraction = extract_gleaning(chunks, self.config).cache()
         new_entities = entities_raw_table(extraction)
         new_edges_raw = edges_partial_table(extraction)
 
@@ -242,7 +245,7 @@ class IncrementalGraphSink:
 
         # global re-link + materialize over the merged roll-ups
         clusters = canonicalize_entities(entities_raw, self.config).cache()
-        # nodes feeds the integrity filter AND the output; the key table
+        # nodes feeds edges_table's code table AND the output; the key table
         # feeds degrees AND communities
         nodes = nodes_table(clusters, entities_raw).cache()
         edges = edges_table(edges_raw, clusters, nodes, self.config)

@@ -71,7 +71,7 @@ def main() -> None:
     from graphrag_rs_spark.operators.chunking import chunk_documents
     from graphrag_rs_spark.operators.dedup import exact_dedup
     from graphrag_rs_spark.operators.extraction import edges_raw_table, extract_chunks
-    from graphrag_rs_spark.operators.materialize import repoint_edges
+    from graphrag_rs_spark.operators.materialize import edges_table
     from graphrag_rs_spark.operators.similarity_search import brute_force_knn
 
     cfg = PipelineConfig()
@@ -98,11 +98,12 @@ def main() -> None:
     clusters = spark.createDataFrame(
         [("e1", "c1")], "entity_id string, cluster_id string"
     )
-    p = plan_of(repoint_edges(edges_raw, clusters))
+    p = plan_of(edges_table(edges_raw, clusters, clusters.select("cluster_id")))
     sections.append((
         "edge re-pointing (hub-entity hot spot)",
         "Linkmap joins must be BroadcastHashJoin (small side broadcast; no "
-        "shuffle of the big edge table); final dedupe groupBy does map-side "
+        "shuffle of the big edge table) and also drop edges to non-nodes, so "
+        "no LeftSemi integrity join; final dedupe groupBy does map-side "
         "partial aggregation.",
         summarize(p), p,
     ))

@@ -13,7 +13,7 @@ from __future__ import annotations
 import uuid
 
 # 12 convs, seed 42, shuffle_partitions=4, outputs forced by noop writes
-JOB_CEILING = 67
+JOB_CEILING = 63
 
 
 def _build_jobs(spark) -> int:

@@ -91,17 +91,20 @@ def test_extraction_chain_is_one_exchange_two_arrow_stages(extraction):
 
 def test_edge_repoint_broadcasts_linkmap(spark, extraction):
     """Re-pointing 10^10 raw edges through the entity->cluster linkmap must
-    broadcast the (small) linkmap, never shuffle the edge table for it."""
+    broadcast the (small) linkmap, never shuffle the edge table for it; the
+    same join drops edges to non-nodes, so no integrity semi-join remains."""
     from graphrag_rs_spark.operators.extraction import edges_raw_table
-    from graphrag_rs_spark.operators.materialize import repoint_edges
+    from graphrag_rs_spark.operators.materialize import edges_table
 
     clusters = spark.createDataFrame(
         [("e1", "c1")], "entity_id string, cluster_id string"
     )
-    plan = plan_of(repoint_edges(edges_raw_table(extraction), clusters))
+    nodes = clusters.select("cluster_id")
+    plan = plan_of(edges_table(edges_raw_table(extraction), clusters, nodes))
     s = summarize(plan)
     assert s["broadcast_joins"] >= 2, s
     assert "BroadcastHashJoin" in plan
+    assert "LeftSemi" not in plan
     # loose regression budget only: the static plan's SMJ-vs-hash choices on
     # the node-side aggregates swing with input size estimates (audited run
     # shows 6 exchanges, tiny-fixture test sessions up to 10); the property

@@ -16,10 +16,19 @@ from graphrag_rs_spark.streaming.ingest import run_incremental_ingest
 
 
 @pytest.mark.slow
-def test_incremental_ingest_matches_union(spark, tmp_path):
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        PipelineConfig(),
+        # the sink must extract with the build's gleaning rounds: later
+        # rounds widen the entity types of under-dense chunks
+        PipelineConfig(max_gleaning_rounds=3, gleaning_entity_target=50),
+    ],
+    ids=["default", "gleaning"],
+)
+def test_incremental_ingest_matches_union(spark, tmp_path, cfg):
     in_dir = tmp_path / "in"
     os.makedirs(in_dir)
-    cfg = PipelineConfig()
 
     batch1 = transcripts_df(spark, 10, seed=1)
     batch2 = transcripts_df(spark, 10, seed=99)
