@@ -4,27 +4,32 @@ Mirrors the reference's incremental/rollback semantics (graphrag-rs
 graph/incremental.rs:196-341: GraphDelta, transactions, rollback; versioned
 auto-save config/mod.rs:107-123) re-expressed as table snapshots:
 
-* every stage writes its output table plus a ``_lineage`` table with one row
-  per output partition ``(stage, partition_id, row_count, checksum,
-  hash_sum)`` and a ``manifest.json`` carrying the stage fingerprint
-  (content hash of the stage name, its config, its lineage format and its
-  upstream fingerprints — the analogue of
-  incremental/mod.rs:47-51's content-hash change detection);
-* resume = if a manifest with a matching fingerprint exists, the stage is
-  served from its checkpoint and NOT recomputed;
+* every stage writes its output table and one commit record, a
+  ``manifest.json``: the stage fingerprint (content hash of the stage
+  name, its config, its lineage format and its upstream fingerprints —
+  the analogue of incremental/mod.rs:47-51's content-hash change
+  detection), one lineage row per data file ``(stage, partition_id,
+  row_count, checksum, hash_sum)`` with their totals, and the data files'
+  byte sizes;
+* resume = if a manifest with a matching fingerprint lists the data files
+  on disk at their sizes, the stage is served from its checkpoint and NOT
+  recomputed (a deleted or truncated data file makes it recompute);
 * a fingerprint mismatch (changed config or upstream) invalidates the stage
   and everything downstream — exactly the delta/rollback contract.
 
 Storage here is parquet + JSON manifests (this sandbox has no Iceberg
 runtime jar); the interface is 1:1 with an Iceberg deployment where
-``write`` → ``df.writeTo(...).using("iceberg")``, the manifest → table
-properties on the snapshot, and rollback → ``CALL rollback_to_snapshot``.
+``write`` → ``df.writeTo(...).using("iceberg")``, the ``files`` rows →
+manifest entries (data file, record count), and rollback →
+``CALL rollback_to_snapshot``.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
+import operator
 import os
 import shutil
 import time
@@ -36,9 +41,9 @@ LINEAGE_SCHEMA = (
     "stage string, partition_id string, row_count long, checksum long, "
     "hash_sum long"
 )
-# Part of every stage fingerprint: a checkpoint whose lineage lacks a
-# column the current code records is recomputed, not failed by validate.
-LINEAGE_FORMAT = "lineage-v2:xor+sum"
+# Part of every stage fingerprint: a checkpoint in an older layout (v2 kept
+# its lineage in a ``lineage/`` table) is recomputed once, not failed.
+LINEAGE_FORMAT = "lineage-v3:manifest"
 
 
 def _fingerprint(*parts: str) -> str:
@@ -52,9 +57,8 @@ def _fingerprint(*parts: str) -> str:
 class CheckpointManager:
     """Directory layout::
 
-        <base>/<stage>/data/        parquet output
-        <base>/<stage>/lineage/     parquet per-partition lineage
-        <base>/<stage>/manifest.json
+        <base>/<stage>/data/          parquet output
+        <base>/<stage>/manifest.json  fingerprint, per-file lineage, totals
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -92,7 +96,11 @@ class CheckpointManager:
         manifest_path = self._manifest_path(name)
 
         manifest = self._read_manifest(manifest_path)
-        if manifest and manifest.get("fingerprint") == fp and manifest.get("committed"):
+        if (
+            manifest and manifest.get("fingerprint") == fp
+            and manifest.get("committed")
+            and manifest.get("data_files") == self._data_files(data_dir)
+        ):
             self.stages_resumed.append(name)
             return self.spark.read.parquet(data_dir)
 
@@ -106,27 +114,22 @@ class CheckpointManager:
         wall_ms = int((time.monotonic() - t0) * 1000)
 
         out = self.spark.read.parquet(data_dir)
-        lineage = self._lineage_for(name, out)
-        lineage_dir = os.path.join(self._stage_dir(name), "lineage")
-        lineage.write.mode("overwrite").parquet(lineage_dir)
-
-        totals = self.spark.read.parquet(lineage_dir).agg(
-            F.sum("row_count").alias("rows"),
-            F.expr("bit_xor(checksum)").alias("checksum"),
-            F.sum("hash_sum").alias("hash_sum"),
-        ).collect()[0]
-
+        files = [r.asDict() for r in self._lineage_for(name, out).collect()]
         self._write_manifest(
             manifest_path,
             {
                 "stage": name,
                 "fingerprint": fp,
                 "upstreams": list(upstreams),
-                "row_count": int(totals["rows"] or 0),
-                "checksum": int(totals["checksum"] or 0),
-                "hash_sum": int(totals["hash_sum"] or 0),
+                "row_count": sum(f["row_count"] for f in files),
+                # python's xor of signed 64-bit ints equals Spark's bit_xor
+                "checksum": functools.reduce(
+                    operator.xor, (f["checksum"] for f in files), 0),
+                "hash_sum": sum(f["hash_sum"] for f in files),
                 "wall_ms": wall_ms,
                 "committed": True,
+                "files": files,
+                "data_files": self._data_files(data_dir),
             },
         )
         self.stages_computed.append(name)
@@ -141,31 +144,28 @@ class CheckpointManager:
             shutil.rmtree(d)
 
     def lineage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._stage_dir(stage), "lineage"))
+        """The per-file lineage rows recorded in the stage's manifest."""
+        return self.spark.createDataFrame(self.manifest(stage)["files"], LINEAGE_SCHEMA)
 
     def validate(self, stage: str) -> DataFrame:
-        """Re-derive per-partition (row_count, checksum, hash_sum) from the stage's
-        CURRENT data files and anti-join against the recorded lineage —
-        returns the mismatched/missing partition rows (empty = intact).
-        The partition-granular integrity check behind exact resume: a
+        """Re-derive per-file (row_count, checksum, hash_sum) from the stage's
+        CURRENT data files and compare them, as sets, with the manifest's
+        lineage rows — returns the mismatched/missing file rows (empty =
+        intact). The content-level integrity check behind exact resume: a
         damaged snapshot is detected before anything downstream trusts it.
         """
         data_dir = os.path.join(self._stage_dir(stage), "data")
-        recorded = self.lineage(stage)
+        recorded = {tuple(f.values()) for f in self.manifest(stage)["files"]}
         try:
-            current = self._lineage_for(stage, self.spark.read.parquet(data_dir))
+            current = set(map(tuple, self._lineage_for(
+                stage, self.spark.read.parquet(data_dir)).collect()))
         except Exception:
-            # snapshot unreadable (all data files gone): every recorded
-            # partition is missing
-            return recorded.withColumn("problem", F.lit("missing_or_changed"))
-        key = ["stage", "partition_id", "row_count", "checksum", "hash_sum"]
-        missing = recorded.join(current, key, "left_anti").withColumn(
-            "problem", F.lit("missing_or_changed")
-        )
-        extra = current.join(recorded, key, "left_anti").withColumn(
-            "problem", F.lit("unexpected")
-        )
-        return missing.unionByName(extra)
+            # snapshot unreadable (all data files gone, or one cut short):
+            # every recorded file is missing
+            current = set()
+        report = [(*r, "missing_or_changed") for r in sorted(recorded - current)]
+        report += [(*r, "unexpected") for r in sorted(current - recorded)]
+        return self.spark.createDataFrame(report, LINEAGE_SCHEMA + ", problem string")
 
     def manifest(self, stage: str) -> dict | None:
         return self._read_manifest(self._manifest_path(stage))
@@ -204,6 +204,18 @@ class CheckpointManager:
                 "partition_id", "row_count", "checksum", "hash_sum",
             )
         )
+
+    @staticmethod
+    def _data_files(data_dir: str) -> dict[str, int] | None:
+        """Name → byte size of every data file (not Spark's ``_SUCCESS`` or
+        ``.crc`` side files), listed on the driver; ``None`` without a dir."""
+        if not os.path.isdir(data_dir):
+            return None
+        return {
+            n: os.path.getsize(os.path.join(data_dir, n))
+            for n in sorted(os.listdir(data_dir))
+            if not n.startswith(("_", "."))
+        }
 
     @staticmethod
     def _read_manifest(path: str) -> dict | None:

@@ -108,6 +108,13 @@ def test_config_change_invalidates_downstream(spark, transcripts, tmp_path):
 
 
 def test_lineage_rows_and_manifest(spark, transcripts, tmp_path):
+    """The manifest is the stage's only commit record: its ``files`` rows
+    are the lineage, its totals are their sum / xor / sum, and no stage
+    keeps a second lineage table."""
+    import functools
+    import operator
+    import os
+
     d = str(tmp_path / "ck4")
     tables = build_graph(spark, transcripts, PipelineConfig(), checkpoint_dir=d)
     mgr: CheckpointManager = tables["_checkpoint"]
@@ -118,6 +125,13 @@ def test_lineage_rows_and_manifest(spark, transcripts, tmp_path):
     man = mgr.manifest("chunks")
     assert man["committed"] and man["row_count"] == total
     assert man["wall_ms"] >= 0
+    assert [r.asDict() for r in lin] == man["files"]
+    assert man["checksum"] == functools.reduce(
+        operator.xor, (f["checksum"] for f in man["files"]), 0)
+    assert man["hash_sum"] == sum(f["hash_sum"] for f in man["files"])
+    stages = os.listdir(d)
+    assert "chunks" in stages
+    assert not [s for s in stages if os.path.exists(os.path.join(d, s, "lineage"))]
 
 
 def test_rollback_forces_recompute(spark, transcripts, tmp_path):
@@ -129,6 +143,42 @@ def test_rollback_forces_recompute(spark, transcripts, tmp_path):
     mgr2: CheckpointManager = again["_checkpoint"]
     assert "extraction" in mgr2.stages_computed
     assert "documents" in mgr2.stages_resumed and "chunks" in mgr2.stages_resumed
+
+
+@pytest.mark.parametrize("damage", ["delete", "truncate"])
+def test_resume_recomputes_damaged_stage(spark, tmp_path, damage):
+    """A data file deleted or cut short after the commit makes the stage
+    uncommitted: the next run recomputes it in full instead of serving
+    the remaining rows or failing on the short file, and the stage
+    downstream of it keeps its fingerprint and resumes."""
+    import glob
+    import os
+
+    d = str(tmp_path / "ck")
+
+    def t():
+        return spark.range(1000).repartition(4)
+
+    def u():
+        return spark.range(10)
+
+    first = CheckpointManager(spark, d)
+    first.stage("t", t)
+    first.stage("u", u, upstreams=("t",))
+    part = sorted(glob.glob(os.path.join(d, "t", "data", "part-*.parquet")))[0]
+    if damage == "delete":
+        os.remove(part)
+    else:
+        with open(part, "r+b") as fh:
+            fh.truncate(100)
+
+    mgr = CheckpointManager(spark, d)
+    out = mgr.stage("t", t)
+    mgr.stage("u", u, upstreams=("t",))
+    assert mgr.stages_computed == ["t"]
+    assert mgr.stages_resumed == ["u"]
+    assert out.count() == 1000
+    assert mgr.validate("t").count() == 0
 
 
 def test_validate_detects_partition_damage(spark, transcripts, tmp_path):

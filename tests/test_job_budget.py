@@ -1,11 +1,12 @@
-"""Spark-job ceiling for one small in-memory build.
+"""Spark-job ceilings for one small build, in memory and checkpointed.
 
 A small build is dominated by per-job cost (scheduling, broadcast and
 AQE stage submission), so the job count is the number that moves when a
 stage starts doing work twice: a count before a collect, a Python RDD
-rescanned, a UDF planned under both sides of a self-join. The ceiling is
-the count this code runs, measured on a 4-core host in the shared test
-session; it repeats exactly run to run for a fixed input.
+rescanned, a UDF planned under both sides of a self-join, a checkpoint
+record written and read back. The ceiling is the count this code runs,
+measured on a 4-core host in the shared test session; it repeats exactly
+run to run for a fixed input.
 """
 
 from __future__ import annotations
@@ -14,9 +15,11 @@ import uuid
 
 # 12 convs, seed 42, shuffle_partitions=4, outputs forced by noop writes
 JOB_CEILING = 63
+# the same build, cold, into a fresh checkpoint directory
+CHECKPOINTED_JOB_CEILING = 78
 
 
-def _build_jobs(spark) -> int:
+def _build_jobs(spark, checkpoint_dir: str | None = None) -> int:
     from graphrag_rs_spark.config import PipelineConfig
     from graphrag_rs_spark.fixtures import transcripts_df
     from graphrag_rs_spark.plans.pipeline import build_graph
@@ -29,6 +32,7 @@ def _build_jobs(spark) -> int:
         tables = build_graph(
             spark, transcripts_df(spark, 12, seed=42),
             PipelineConfig(shuffle_partitions=4),
+            checkpoint_dir=checkpoint_dir,
         )
         for name in ("nodes", "edges", "node_stats"):
             tables[name].write.format("noop").mode("overwrite").save()
@@ -43,3 +47,10 @@ def test_small_build_job_ceiling(spark):
     jobs = _build_jobs(spark)
     assert jobs <= JOB_CEILING, (
         f"{jobs} Spark jobs for one 12-conv build (ceiling {JOB_CEILING})")
+
+
+def test_checkpointed_build_job_ceiling(spark, tmp_path):
+    jobs = _build_jobs(spark, str(tmp_path / "ck"))
+    assert jobs <= CHECKPOINTED_JOB_CEILING, (
+        f"{jobs} Spark jobs for one cold checkpointed 12-conv build "
+        f"(ceiling {CHECKPOINTED_JOB_CEILING})")
