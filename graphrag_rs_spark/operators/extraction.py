@@ -18,16 +18,17 @@ Downstream tables (mentions, entities_raw, edges_raw) are cheap JVM-side
 explodes of this table — extraction runs exactly once and the nested table
 is the natural per-stage checkpoint.
 
-Gleaning-style multi-pass (entity/gleaning_extractor.rs:112-223): rounds > 1
-re-run extraction over chunks whose entity count is still below target with
-additional entity types enabled, then merge — see ``extract_gleaning`` (the
-deterministic analogue of the LLM completeness loop; the LLM extractor plugs
-in behind the same row contract).
+Gleaning-style multi-pass (entity/gleaning_extractor.rs:112-223) runs per
+chunk inside the same UDF: while a chunk's entity count is below target, it
+is re-extracted with a wider entity-type set, and the new extraction
+replaces the old — see ``extract_gleaning`` (the deterministic analogue of
+the LLM completeness loop; the LLM extractor, llm_extraction.py, emits the
+same row contract).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,60 +42,50 @@ EXTRACTION_SCHEMA = (
     "triples array<struct<subj:string, obj:string, pred:string>>"
 )
 
-# Row contract any extractor implementation must fulfil:
-#   (text: str) -> (entities: list[dict], triples: list[tuple])
-ExtractorFn = Callable[[str], tuple[list, list]]
+# wider type sets the gleaning rounds add, one more per round
+# (gleaning_extractor.rs:112-223 re-asks with a wider net)
+_GLEANING_WIDEN = ("CONCEPT", "EVENT", "OBJECT")
 
 
-def _pattern_extractor(entity_types: tuple, min_confidence: float) -> ExtractorFn:
-    from graphrag_rs_spark.rules.extraction import (
-        extract_entities,
-        extract_relationships,
-    )
-
-    def run(text: str):
-        ents = extract_entities(text, entity_types, min_confidence)
-        triples = extract_relationships(ents, text)
-        ent_rows = [
-            (e.entity_id, e.name, e.entity_type, e.confidence, rank,
-             [(s, t) for s, t in e.mentions])
-            for rank, e in enumerate(ents)
-        ]
-        return ent_rows, triples
-
-    return run
-
-
-def extract_chunks(
-    chunks: DataFrame,
-    config: PipelineConfig | None = None,
-    extractor_factory: Callable[[], ExtractorFn] | None = None,
+def _extract(
+    chunks: DataFrame, config: PipelineConfig, rounds: int
 ) -> DataFrame:
-    """chunks → extraction table (one nested row per chunk).
-
-    ``extractor_factory`` lets callers swap the pattern extractor for an
-    LLM-backed one (same row contract, mirroring the reference's pluggable
-    extractor traits, core/traits.rs).
-    """
-    config = config or PipelineConfig()
-    entity_types = tuple(config.all_entity_types)
+    """The one extraction UDF: each chunk runs up to ``rounds`` pattern
+    extractions, round r with the configured types plus the first r-1
+    gleaning types, and stops at the first round that yields at least
+    ``gleaning_entity_target`` entities. A round REPLACES the chunk's
+    entities; triples pair the final round's entities."""
+    base = tuple(config.all_entity_types)
+    types_per_round = [base + _GLEANING_WIDEN[:r] for r in range(rounds)]
+    target = max(1, config.gleaning_entity_target)
     min_confidence = config.min_confidence
     do_rel = config.extract_relationships
 
     def extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        extractor = (
-            extractor_factory() if extractor_factory is not None
-            else _pattern_extractor(entity_types, min_confidence)
+        from graphrag_rs_spark.rules.extraction import (
+            extract_entities,
+            extract_relationships,
         )
+
         for pdf in batches:
             out_entities = []
             out_triples = []
             for text in pdf["text"]:
-                ents, triples = extractor(text or "")
-                out_entities.append(ents)
-                out_triples.append(triples if do_rel else [])
+                text = text or ""
+                for types in types_per_round:
+                    ents = extract_entities(text, types, min_confidence)
+                    if len(ents) >= target:
+                        break
+                out_entities.append([
+                    (e.entity_id, e.name, e.entity_type, e.confidence, rank,
+                     [(s, t) for s, t in e.mentions])
+                    for rank, e in enumerate(ents)
+                ])
+                out_triples.append(
+                    extract_relationships(ents, text) if do_rel else []
+                )
             yield pd.DataFrame(
                 {
                     "chunk_id": pdf["chunk_id"],
@@ -109,6 +100,29 @@ def extract_chunks(
     return chunks.select("chunk_id", "conv_id", "doc_id", "chunk_idx", "text").mapInPandas(
         extract_batches, schema=EXTRACTION_SCHEMA
     )
+
+
+def extract_chunks(
+    chunks: DataFrame, config: PipelineConfig | None = None
+) -> DataFrame:
+    """chunks → extraction table (one nested row per chunk), one round
+    with the configured entity types."""
+    return _extract(chunks, config or PipelineConfig(), 1)
+
+
+def extract_gleaning(chunks: DataFrame, config: PipelineConfig) -> DataFrame:
+    """Multi-round extraction (gleaning_extractor.rs:112-223 dataflow), per
+    chunk inside the one extraction UDF.
+
+    Round 1 extracts with the configured types. While a chunk has fewer
+    entities than ``config.gleaning_entity_target`` — the deterministic
+    density analogue of the reference's per-chunk LLM YES/NO completeness
+    check (gleaning_extractor.rs:154-194) — it is re-extracted with the
+    next, wider type set, up to ``config.max_gleaning_rounds`` rounds. Each
+    re-extraction REPLACES the chunk's entities and triples; a complete
+    chunk is never re-extracted. At one round this is ``extract_chunks``.
+    """
+    return _extract(chunks, config, max(1, config.max_gleaning_rounds))
 
 
 # ---------------------------------------------------------------------------
@@ -198,57 +212,3 @@ def edges_partial_table(extraction: DataFrame) -> DataFrame:
         F.array_sort(F.collect_set("context_chunk")).alias("contexts"),
         F.count(F.lit(1)).alias("n_occurrences"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Gleaning-style multi-pass driver loop
-# ---------------------------------------------------------------------------
-
-def extract_gleaning(
-    chunks: DataFrame,
-    config: PipelineConfig,
-    round_types: list[tuple[str, ...]] | None = None,
-) -> DataFrame:
-    """Multi-round extraction (gleaning_extractor.rs:112-223 dataflow).
-
-    Round 1 extracts with the configured types. Later rounds run ONLY over
-    chunks that still look incomplete — entity count below
-    ``config.gleaning_entity_target``, the deterministic density analogue
-    of the reference's per-chunk LLM YES/NO completeness check
-    (gleaning_extractor.rs:154-194) — with progressively wider type sets,
-    then results merge by (chunk, name-lowercase) keeping the longer name /
-    higher confidence (gleaning merge rule, gleaning_extractor.rs:229-272).
-
-    The driver-side loop shrinks the frontier each round via an anti-join —
-    completed chunks are never re-extracted.
-    """
-    rounds = max(1, config.max_gleaning_rounds)
-    target = max(1, config.gleaning_entity_target)
-    if round_types is None:
-        widen = ("CONCEPT", "EVENT", "OBJECT")
-        round_types = [tuple(config.all_entity_types)]
-        for r in range(1, rounds):
-            round_types.append(tuple(config.all_entity_types) + widen[: r])
-
-    result = extract_chunks(
-        chunks, _with_types(config, round_types[0])
-    )
-    for r in range(1, rounds):
-        # frontier: chunks below the entity-density target
-        incomplete_ids = result.where(
-            F.size("entities") < target
-        ).select("chunk_id")
-        frontier = chunks.join(F.broadcast(incomplete_ids), "chunk_id", "left_semi")
-        if frontier.isEmpty():
-            break
-        re_extracted = extract_chunks(frontier, _with_types(config, round_types[r]))
-        result = result.where(F.size("entities") >= target).unionByName(
-            re_extracted
-        )
-    return result
-
-
-def _with_types(config: PipelineConfig, types: tuple[str, ...]) -> PipelineConfig:
-    from dataclasses import replace
-
-    return replace(config, entity_types=types, extra_entity_types=())

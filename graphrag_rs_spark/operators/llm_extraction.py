@@ -1,4 +1,4 @@
-"""Batched-async LLM extraction behind the ``ExtractorFn`` slot.
+"""Batched-async LLM extraction behind the extraction table's row contract.
 
 The reference's semantic mode calls a live model per chunk with
 Microsoft-GraphRAG-style prompts, a gleaning continuation loop, and a
@@ -328,10 +328,11 @@ async def _glean_chunk(
 
 
 def _to_rows(out: dict, text: str) -> tuple[list, list]:
-    """ExtractionOutput → the ExtractorFn row contract. Entity ids follow
-    the reference's ``{TYPE}_{normalize}`` rule and mentions are every
-    literal occurrence in the chunk (llm_extractor.rs:278-335); confidence
-    is the reference's fixed 0.9 for LLM-extracted entities."""
+    """ExtractionOutput → the extraction table's entity and triple rows.
+    Entity ids follow the reference's ``{TYPE}_{normalize}`` rule and
+    mentions are every literal occurrence in the chunk (llm_extractor.rs:
+    278-335); confidence is the reference's fixed 0.9 for LLM-extracted
+    entities."""
     ent_rows = []
     name_to_id = {}
     for rank, e in enumerate(out["entities"]):

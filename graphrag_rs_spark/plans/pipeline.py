@@ -46,34 +46,28 @@ def build_graph(
 ) -> dict[str, DataFrame]:
     """Run the full build; returns every stage table by name.
 
-    ``config.extraction_mode`` selects the extraction stage the way the
-    reference's ``config.approach`` does (lib.rs:383, setconfig.rs:
-    1750-1794): ``algorithmic`` runs the deterministic pattern extractor;
-    ``semantic`` runs the batched-async LLM gleaning extractor
-    (``client_factory`` builds the endpoint client on each executor);
-    ``hybrid`` runs both and fuses per chunk with the gleaning merge rule.
-    With no ``client_factory``, semantic/hybrid FALL BACK to the pattern
-    path — the same gate as the reference's ``use_gleaning &&
-    ollama.enabled`` branch, which silently degrades to pattern extraction
-    when no endpoint is configured.
+    ``config.extraction_mode`` selects the extraction stage, see
+    :func:`extract_configured` (``client_factory`` builds the LLM endpoint
+    client on each executor).
 
     Checkpointed, every stage is written and re-read; in memory, tables
     read by more than one later step are cached and counted (``shared``).
     """
     config = config or PipelineConfig()
-    if config.extraction_mode not in ("algorithmic", "semantic", "hybrid"):
-        raise ValueError(
-            f"unknown extraction_mode {config.extraction_mode!r}: "
-            "'algorithmic' | 'semantic' | 'hybrid'"
-        )
+    # the extractor that runs is part of the extraction fingerprint: a
+    # semantic build that fell back to the pattern path must not be resumed
+    # by one with a client (this also rejects an unknown extraction_mode)
+    extractor = _extractor_name(extraction_client_factory(config, client_factory))
     tune_object_agg(spark)
     cfg_repr = repr(sorted(asdict(config).items()))
     ckpt = CheckpointManager(spark, checkpoint_dir) if checkpoint_dir else None
 
-    def stage(name: str, fn, upstreams: tuple[str, ...] = ()) -> DataFrame:
+    def stage(
+        name: str, fn, upstreams: tuple[str, ...] = (), config_repr: str = cfg_repr
+    ) -> DataFrame:
         if ckpt is None:
             return fn()
-        return ckpt.stage(name, fn, config_repr=cfg_repr, upstreams=upstreams)
+        return ckpt.stage(name, fn, config_repr=config_repr, upstreams=upstreams)
 
     def shared(df: DataFrame) -> DataFrame:
         # read by more than one later step. In memory, cache and count it
@@ -113,52 +107,12 @@ def build_graph(
         )
         chunks = chunks.repartition(n_extract)
 
-    if (
-        client_factory is None
-        and config.extraction_mode in ("semantic", "hybrid")
-        and config.ollama_enabled
-    ):
-        # config-file-only route to the live path (the reference's
-        # `use_gleaning && ollama.enabled` gate builds an OllamaClient
-        # from config the same way, lib.rs:383-399)
-        from graphrag_rs_spark.operators.llm_client import OllamaHttpClient
-
-        base_url, model = config.ollama_base_url, config.ollama_model
-        timeout, retries = (
-            config.ollama_timeout_seconds, config.ollama_max_retries,
-        )
-
-        def client_factory():  # noqa: F811 — deliberate rebind
-            return OllamaHttpClient(
-                base_url=base_url, model=model,
-                timeout_seconds=timeout, max_retries=retries,
-            )
-
-    llm_mode = (
-        config.extraction_mode in ("semantic", "hybrid")
-        and client_factory is not None
-    )
-
-    def _extract():
-        if not llm_mode:
-            return extract_gleaning(chunks, config)
-        from graphrag_rs_spark.operators.llm_extraction import (
-            extract_chunks_llm,
-            merge_extractions,
-        )
-
-        llm = extract_chunks_llm(
-            chunks,
-            client_factory,
-            config,
-            max_rounds=max(1, config.max_gleaning_rounds),
-        )
-        if config.extraction_mode == "semantic":
-            return llm
-        # hybrid: pattern is the `existing` side of the gleaning merge
-        return merge_extractions(extract_chunks(chunks, config), llm)
-
-    extraction = shared(stage("extraction", _extract, ("chunks",)))
+    extraction = shared(stage(
+        "extraction",
+        lambda: extract_configured(chunks, config, client_factory),
+        ("chunks",),
+        f"{cfg_repr} extractor={extractor}",
+    ))
     mentions = mentions_table(extraction)
     entities_raw = shared(stage(
         "entities_raw", lambda: entities_raw_table(extraction), ("extraction",)
@@ -242,3 +196,78 @@ def build_graph(
         "semantic_edges": semantic,
         "_checkpoint": ckpt,
     }
+
+
+def extraction_client_factory(config: PipelineConfig, client_factory=None):
+    """The LLM client factory the extraction stage runs with, or None when
+    it runs the pattern extractor.
+
+    semantic/hybrid use ``client_factory``; with none given and
+    ``config.ollama_enabled`` they build an ``OllamaHttpClient`` from
+    config (the reference's ``use_gleaning && ollama.enabled`` gate builds
+    an OllamaClient the same way, lib.rs:383-399); otherwise they FALL BACK
+    to the pattern path, as the reference silently degrades to pattern
+    extraction when no endpoint is configured.
+    """
+    if config.extraction_mode not in ("algorithmic", "semantic", "hybrid"):
+        raise ValueError(
+            f"unknown extraction_mode {config.extraction_mode!r}: "
+            "'algorithmic' | 'semantic' | 'hybrid'"
+        )
+    if config.extraction_mode == "algorithmic":
+        return None
+    if client_factory is not None or not config.ollama_enabled:
+        return client_factory
+    from graphrag_rs_spark.operators.llm_client import OllamaHttpClient
+
+    base_url, model = config.ollama_base_url, config.ollama_model
+    timeout, retries = config.ollama_timeout_seconds, config.ollama_max_retries
+
+    def ollama_client():
+        return OllamaHttpClient(
+            base_url=base_url, model=model,
+            timeout_seconds=timeout, max_retries=retries,
+        )
+
+    return ollama_client
+
+
+def _extractor_name(client_factory) -> str:
+    # a factory by its import path; any other callable by repr, which at
+    # worst recomputes the stage
+    if client_factory is None:
+        return "pattern"
+    module = getattr(client_factory, "__module__", None)
+    name = getattr(client_factory, "__qualname__", None)
+    return f"{module}.{name}" if module and name else repr(client_factory)
+
+
+def extract_configured(
+    chunks: DataFrame, config: PipelineConfig, client_factory=None
+) -> DataFrame:
+    """The extraction stage ``config.extraction_mode`` selects, the way the
+    reference's ``config.approach`` does (lib.rs:383, setconfig.rs:
+    1750-1794), for the batch build and the streaming sink alike:
+    ``algorithmic`` runs the deterministic pattern gleaning extractor;
+    ``semantic`` runs the batched-async LLM gleaning extractor; ``hybrid``
+    runs both and fuses per chunk with the gleaning merge rule. The LLM
+    client comes from :func:`extraction_client_factory`.
+    """
+    client_factory = extraction_client_factory(config, client_factory)
+    if client_factory is None:
+        return extract_gleaning(chunks, config)
+    from graphrag_rs_spark.operators.llm_extraction import (
+        extract_chunks_llm,
+        merge_extractions,
+    )
+
+    llm = extract_chunks_llm(
+        chunks,
+        client_factory,
+        config,
+        max_rounds=max(1, config.max_gleaning_rounds),
+    )
+    if config.extraction_mode == "semantic":
+        return llm
+    # hybrid: pattern is the `existing` side of the gleaning merge
+    return merge_extractions(extract_chunks(chunks, config), llm)

@@ -9,8 +9,9 @@ ingest-what-exists-then-stop behavior of the reference's
 StreamingImporter (pipeline/data_import.rs:604-612).
 
 **Exact incremental = rebuild.** Each batch runs only the EXPENSIVE narrow
-stages (assembly → chunking → extraction, with the build's gleaning
-rounds) on the new conversations, then merges the extraction-level tables
+stages (assembly → chunking → extraction, with the build's extractor
+and gleaning rounds, ``plans.pipeline.extract_configured``) on the new
+conversations, then merges the extraction-level tables
 (``entities_raw`` and the pre-combined triples of ``edges_partial_table``,
 one row per distinct triple) into the workspace with associative
 aggregations (max confidence, sum mentions, min first-appearance order
@@ -188,13 +189,13 @@ class IncrementalGraphSink:
         from graphrag_rs_spark.operators.extraction import (
             edges_partial_table,
             entities_raw_table,
-            extract_gleaning,
         )
         from graphrag_rs_spark.operators.materialize import (
             edges_table,
             node_stats_table,
             nodes_table,
         )
+        from graphrag_rs_spark.plans.pipeline import extract_configured
 
         applied = self._current_batch_id()
         if applied is not None and batch_id == applied:
@@ -223,7 +224,7 @@ class IncrementalGraphSink:
             batch_df, separator=self.config.turn_separator
         )
         chunks = chunk_documents(documents, self.config)
-        extraction = extract_gleaning(chunks, self.config).cache()
+        extraction = extract_configured(chunks, self.config).cache()
         new_entities = entities_raw_table(extraction)
         new_edges_raw = edges_partial_table(extraction)
 

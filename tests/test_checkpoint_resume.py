@@ -68,8 +68,9 @@ def test_full_resume_calls_no_build_operator(spark, transcripts, tmp_path, monke
         raise AssertionError("a full resume called a build operator")
 
     for name in (
-        "assemble_documents", "chunk_documents", "extract_chunks",
-        "extract_gleaning", "entities_raw_table", "edges_raw_table",
+        "assemble_documents", "chunk_documents", "extract_configured",
+        "extract_chunks", "extract_gleaning", "entities_raw_table",
+        "edges_raw_table",
         "canonicalize_entities", "nodes_table", "edges_table",
         "node_stats_table",
     ):
@@ -105,6 +106,31 @@ def test_config_change_invalidates_downstream(spark, transcripts, tmp_path):
     mgr: CheckpointManager = changed["_checkpoint"]
     assert "chunks" in mgr.stages_computed, "changed chunk_size must recompute chunks"
     assert "extraction" in mgr.stages_computed, "and everything downstream"
+
+
+def test_client_factory_invalidates_pattern_fallback(spark, transcripts, tmp_path):
+    """A semantic build with no client falls back to the pattern extractor;
+    the same build with a client must not resume that extraction."""
+    from graphrag_rs_spark.operators.llm_extraction import DeterministicStubClient
+
+    d = str(tmp_path / "ck_llm")
+    cfg = PipelineConfig(extraction_mode="semantic")
+    fallback = _outputs(build_graph(spark, transcripts, cfg, checkpoint_dir=d))
+    stub = build_graph(
+        spark, transcripts, cfg, checkpoint_dir=d,
+        client_factory=DeterministicStubClient,
+    )
+    mgr: CheckpointManager = stub["_checkpoint"]
+    assert {"documents", "chunks"} <= set(mgr.stages_resumed)
+    assert {
+        "extraction", "entities_raw", "edges_raw", "clusters", "nodes",
+        "edges", "node_stats",
+    } <= set(mgr.stages_computed)
+    direct = build_graph(
+        spark, transcripts, cfg, client_factory=DeterministicStubClient
+    )
+    assert _outputs(stub)["nodes"] == _outputs(direct)["nodes"]
+    assert _outputs(stub)["nodes"] != fallback["nodes"]
 
 
 def test_lineage_rows_and_manifest(spark, transcripts, tmp_path):

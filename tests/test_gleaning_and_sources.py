@@ -80,6 +80,65 @@ def test_gleaning_round_one_equivalent_when_complete(spark):
     assert key(single) == key(multi)
 
 
+@pytest.fixture(scope="module")
+def fixture_chunks(spark):
+    from graphrag_rs_spark.fixtures import transcripts_df
+    from graphrag_rs_spark.operators.assembly import assemble_documents
+    from graphrag_rs_spark.operators.chunking import chunk_documents
+
+    chunks = chunk_documents(
+        assemble_documents(transcripts_df(spark, 12, seed=42)), PipelineConfig()
+    ).cache()
+    chunks.count()
+    yield chunks
+    chunks.unpersist()
+
+
+def _reference_gleaning(text: str, cfg: PipelineConfig):
+    """Per-chunk reference loop (oracle_twins.gleaning_extraction at any
+    round count): round r widens the configured types by the first r-1 of
+    CONCEPT, EVENT, OBJECT; a round below the entity target is replaced by
+    the next one; triples pair the final round's entities."""
+    import numpy as np
+
+    from graphrag_rs_spark.rules.extraction import (
+        extract_entities,
+        extract_relationships,
+    )
+
+    widen = ("CONCEPT", "EVENT", "OBJECT")
+    for r in range(max(1, cfg.max_gleaning_rounds)):
+        types = tuple(cfg.all_entity_types) + widen[:r]
+        ents = extract_entities(text, types, cfg.min_confidence)
+        if len(ents) >= max(1, cfg.gleaning_entity_target):
+            break
+    return (
+        [(e.entity_id, e.name, e.entity_type, float(np.float32(e.confidence)),
+          rank, [tuple(m) for m in e.mentions])
+         for rank, e in enumerate(ents)],
+        [tuple(t) for t in extract_relationships(ents, text)],
+    )
+
+
+@pytest.mark.parametrize("target", [2, 50])
+@pytest.mark.parametrize("rounds", [1, 2, 3, 8])
+def test_gleaning_matches_per_chunk_reference_loop(fixture_chunks, rounds, target):
+    cfg = PipelineConfig(max_gleaning_rounds=rounds, gleaning_entity_target=target)
+    texts = {r["chunk_id"]: r["text"] for r in fixture_chunks.collect()}
+    got = {
+        r["chunk_id"]: (
+            [(e["entity_id"], e["name"], e["entity_type"], e["confidence"],
+              e["rank"], [(m["start"], m["end"]) for m in e["mentions"]])
+             for e in r["entities"]],
+            [(t["subj"], t["obj"], t["pred"]) for t in r["triples"]],
+        )
+        for r in extract_gleaning(fixture_chunks, cfg).collect()
+    }
+    assert got.keys() == texts.keys()
+    for chunk_id, text in texts.items():
+        assert got[chunk_id] == _reference_gleaning(text or "", cfg), chunk_id
+
+
 # ---------------------------------------------------------------------------
 # sources / sinks
 # ---------------------------------------------------------------------------

@@ -19,7 +19,7 @@ JOB_CEILING = 63
 CHECKPOINTED_JOB_CEILING = 78
 
 
-def _build_jobs(spark, checkpoint_dir: str | None = None) -> int:
+def _build_jobs(spark, checkpoint_dir: str | None = None, **config) -> int:
     from graphrag_rs_spark.config import PipelineConfig
     from graphrag_rs_spark.fixtures import transcripts_df
     from graphrag_rs_spark.plans.pipeline import build_graph
@@ -31,7 +31,7 @@ def _build_jobs(spark, checkpoint_dir: str | None = None) -> int:
     try:
         tables = build_graph(
             spark, transcripts_df(spark, 12, seed=42),
-            PipelineConfig(shuffle_partitions=4),
+            PipelineConfig(shuffle_partitions=4, **config),
             checkpoint_dir=checkpoint_dir,
         )
         for name in ("nodes", "edges", "node_stats"):
@@ -47,6 +47,15 @@ def test_small_build_job_ceiling(spark):
     jobs = _build_jobs(spark)
     assert jobs <= JOB_CEILING, (
         f"{jobs} Spark jobs for one 12-conv build (ceiling {JOB_CEILING})")
+
+
+def test_gleaning_build_job_ceiling(spark):
+    # gleaning rounds run per chunk inside the one extraction UDF, so they
+    # add no Spark job
+    jobs = _build_jobs(spark, max_gleaning_rounds=3)
+    assert jobs <= JOB_CEILING, (
+        f"{jobs} Spark jobs for one 12-conv build with three gleaning "
+        f"rounds (ceiling {JOB_CEILING})")
 
 
 def test_checkpointed_build_job_ceiling(spark, tmp_path):

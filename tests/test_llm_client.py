@@ -127,13 +127,9 @@ def test_connection_refused_maps_to_connection_error():
         asyncio.run(c.acomplete("x"))
 
 
-def test_config_file_alone_enables_live_path(spark, server, tmp_path):
-    """[mode] approach=semantic + [ollama] enabled → build_graph builds
-    the HTTP client from config with no client_factory argument — the
-    reference's `use_gleaning && ollama.enabled` gate, end-to-end from a
-    TOML file through the wire to the nodes table."""
+def _live_config(server, tmp_path):
+    """[mode] approach=semantic + [ollama] enabled, pointing at ``server``."""
     from graphrag_rs_spark.config_loader import load_config
-    from graphrag_rs_spark.plans.pipeline import build_graph
 
     host, port = server.rsplit(":", 1)
     cfg_file = tmp_path / "live.toml"
@@ -147,11 +143,11 @@ def test_config_file_alone_enables_live_path(spark, server, tmp_path):
         'chat_model = "test-model"\n'
         "max_retries = 2\n"
     )
-    cfg = load_config(str(cfg_file))
-    assert cfg.ollama_base_url == server
-    assert cfg.ollama_enabled and cfg.ollama_model == "test-model"
+    return load_config(str(cfg_file))
 
-    transcripts = spark.createDataFrame(
+
+def _live_transcripts(spark):
+    return spark.createDataFrame(
         [
             ("v1", 0, "user",
              "Maria Santos attended the summit and asked about the agenda.",
@@ -163,9 +159,48 @@ def test_config_file_alone_enables_live_path(spark, server, tmp_path):
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp",
     )
-    tables = build_graph(spark, transcripts, cfg)
+
+
+def test_config_file_alone_enables_live_path(spark, server, tmp_path):
+    """[mode] approach=semantic + [ollama] enabled → build_graph builds
+    the HTTP client from config with no client_factory argument — the
+    reference's `use_gleaning && ollama.enabled` gate, end-to-end from a
+    TOML file through the wire to the nodes table."""
+    from graphrag_rs_spark.plans.pipeline import build_graph
+
+    cfg = _live_config(server, tmp_path)
+    assert cfg.ollama_base_url == server
+    assert cfg.ollama_enabled and cfg.ollama_model == "test-model"
+
+    tables = build_graph(spark, _live_transcripts(spark), cfg)
     names = {r["name"] for r in tables["nodes"].collect()}
     assert names == {"Maria Santos"}
+
+
+def test_streaming_sink_uses_configured_extractor(spark, server, tmp_path):
+    """The config-file route reaches the streaming sink too: ingest sends
+    its extraction prompts to the endpoint, and the workspace holds the
+    batch build's nodes (ingest equals rebuild)."""
+    from graphrag_rs_spark.plans.pipeline import build_graph
+    from graphrag_rs_spark.streaming.ingest import IncrementalGraphSink
+
+    cfg = _live_config(server, tmp_path)
+    transcripts = _live_transcripts(spark)
+    _FakeOllama.requests.clear()
+    IncrementalGraphSink(str(tmp_path / "ws"), cfg).process_batch(transcripts, 0)
+    assert any(
+        r["prompt"].startswith("-Goal-\nGiven") for r in _FakeOllama.requests
+    )
+
+    ingested = {
+        r["cluster_id"]
+        for r in spark.read.parquet(str(tmp_path / "ws" / "entities")).collect()
+    }
+    built = {
+        r["cluster_id"]
+        for r in build_graph(spark, transcripts, cfg)["nodes"].collect()
+    }
+    assert ingested == built
 
 
 def test_spark_extraction_stage_over_real_http(spark, server):

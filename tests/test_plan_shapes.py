@@ -89,6 +89,43 @@ def test_extraction_chain_is_one_exchange_two_arrow_stages(extraction):
     assert s["sortmerge_joins"] == 0, s
 
 
+def test_gleaning_is_one_extraction_pass(spark):
+    """Gleaning rounds run per chunk inside the one extraction UDF: three
+    rounds plan as many Python stages as one and run no more Spark jobs
+    (a driver-side round loop re-plans the UDF per round and adds a
+    frontier job each round)."""
+    import uuid
+
+    from graphrag_rs_spark.config import PipelineConfig
+    from graphrag_rs_spark.fixtures import transcripts_df
+    from graphrag_rs_spark.operators.assembly import assemble_documents
+    from graphrag_rs_spark.operators.chunking import chunk_documents
+    from graphrag_rs_spark.operators.extraction import extract_gleaning
+
+    transcripts = transcripts_df(spark, 12, seed=42)
+    sc = spark.sparkContext
+
+    def shape(rounds: int) -> tuple[int, int]:
+        cfg = PipelineConfig(max_gleaning_rounds=rounds, gleaning_entity_target=50)
+        group = f"gleaning-{rounds}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            df = extract_gleaning(
+                chunk_documents(assemble_documents(transcripts), cfg), cfg
+            )
+            df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return summarize(plan_of(df))["python_stages"], jobs
+
+    one_stages, one_jobs = shape(1)
+    three_stages, three_jobs = shape(3)
+    assert three_stages == one_stages, (three_stages, one_stages)
+    assert three_jobs <= one_jobs, (three_jobs, one_jobs)
+
+
 def test_edge_repoint_broadcasts_linkmap(spark, extraction):
     """Re-pointing 10^10 raw edges through the entity->cluster linkmap must
     broadcast the (small) linkmap, never shuffle the edge table for it; the
