@@ -179,14 +179,3 @@ def materialize_graph(
         edge_keys = edge_keys.cache()
     return nodes, edges, node_stats_table(nodes, edge_keys)
 
-
-def graph_statistics(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Per-type entity counts + global counts (graph/mod.rs:316-373)."""
-    by_type = nodes.groupBy("entity_type").agg(F.count(F.lit(1)).alias("n"))
-    totals = nodes.agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("__total_nodes").alias("entity_type"), "n"
-    )
-    edge_total = edges.agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("__total_edges").alias("entity_type"), "n"
-    )
-    return by_type.unionByName(totals).unionByName(edge_total)

@@ -104,22 +104,6 @@ def sign_buckets_udf(planes_tables: list[list[list[float]]]):
     return buckets
 
 
-def _bucket_expr(vec_col: str, planes: list[list[float]]):
-    bits = []
-    for p in planes:
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in p]),
-                lambda a, b: a * b,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def lsh_knn(
     vectors: DataFrame,
     queries: DataFrame,

@@ -15,7 +15,9 @@ auto-save config/mod.rs:107-123) re-expressed as table snapshots:
   on disk at their sizes, the stage is served from its checkpoint and NOT
   recomputed (a deleted or truncated data file makes it recompute);
 * a fingerprint mismatch (changed config or upstream) invalidates the stage
-  and everything downstream — exactly the delta/rollback contract.
+  and everything downstream — exactly the delta/rollback contract. A
+  first stage names its input by :func:`content_digest` in its config
+  (``build_graph``'s ``documents``), so other input invalidates it too.
 
 Storage here is parquet + JSON manifests (this sandbox has no Iceberg
 runtime jar); the interface is 1:1 with an Iceberg deployment where
@@ -34,7 +36,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
@@ -44,6 +46,36 @@ LINEAGE_SCHEMA = (
 # Part of every stage fingerprint: a checkpoint in an older layout (v2 kept
 # its lineage in a ``lineage/`` table) is recomputed once, not failed.
 LINEAGE_FORMAT = "lineage-v3:manifest"
+
+
+def _row_hashes(df: DataFrame, *keep) -> DataFrame:
+    # xxhash64 over every column, cast to string
+    return df.select(*keep, F.xxhash64(
+        *[F.col(c).cast("string") for c in df.columns]).alias("row_hash"))
+
+
+def _hash_totals() -> tuple:
+    # row count, checksum and hash_sum, see CheckpointManager._lineage_for
+    return (
+        F.count(F.lit(1)).alias("row_count"),
+        F.expr("bit_xor(row_hash)").alias("checksum"),
+        F.sum(F.pmod("row_hash", F.lit(2**31))).alias("hash_sum"),
+    )
+
+
+def content_digest(df: DataFrame) -> str:
+    """Order-independent digest of ``df``'s schema and rows, in one Spark
+    job: the row count, xor and bounded sum of the row hashes, as the
+    lineage rows record per data file. Neither the files a frame reads
+    (a filtered read lists the same ones) nor its plan (two equal frames
+    may hash differently) identify its content."""
+    # observed on a noop write: one scan, no exchange, no second job
+    totals = Observation("content_digest")
+    (_row_hashes(df).observe(totals, *_hash_totals())
+     .write.format("noop").mode("overwrite").save())
+    row = totals.get
+    return (f"{df.schema.simpleString()}:{row['row_count']}:"
+            f"{row['checksum']}:{row['hash_sum']}")
 
 
 def _fingerprint(*parts: str) -> str:
@@ -186,19 +218,11 @@ class CheckpointManager:
         mod 2^31, so the long sum cannot overflow under ANSI mode), which
         changes when a duplicated pair of rows is replaced by another.
         """
-        cols = [F.col(c).cast("string") for c in df.columns]
         file_id = F.element_at(F.split(F.input_file_name(), "/"), -1)
         return (
-            df.select(
-                file_id.alias("partition_id"),
-                F.xxhash64(*cols).alias("row_hash"),
-            )
+            _row_hashes(df, file_id.alias("partition_id"))
             .groupBy("partition_id")
-            .agg(
-                F.count(F.lit(1)).alias("row_count"),
-                F.expr("bit_xor(row_hash)").alias("checksum"),
-                F.sum(F.pmod("row_hash", F.lit(2**31))).alias("hash_sum"),
-            )
+            .agg(*_hash_totals())
             .select(
                 F.lit(stage).alias("stage"),
                 "partition_id", "row_count", "checksum", "hash_sum",

@@ -5,10 +5,13 @@ The canonical stage IR chain (SURVEY.md §3):
     transcripts → documents → chunks → extraction → {mentions,
     entities_raw, edges_raw} → clusters → {nodes, edges, node_stats}
 
-One rule decides what is materialized. With a
+One rule (:class:`SharingRule`) decides what is materialized. With a
 :class:`~graphrag_rs_spark.plans.checkpoint.CheckpointManager`, every named
 stage is written and re-read; in memory, tables read by more than one later
 step are cached and counted, and the rest of the DAG stays one lazy plan.
+Stages D–F (clusters → {nodes, edges, node_stats}) are one function,
+:func:`link_graph`, which the batch build runs after extraction and the
+streaming sink after its raw-table merge.
 """
 
 from __future__ import annotations
@@ -34,7 +37,65 @@ from graphrag_rs_spark.operators.materialize import (
     node_stats_table,
     nodes_table,
 )
-from graphrag_rs_spark.plans.checkpoint import CheckpointManager
+from graphrag_rs_spark.plans.checkpoint import CheckpointManager, content_digest
+
+
+class SharingRule:
+    """The build's one rule for what is materialized.
+
+    With a ``checkpoint_dir``, :meth:`stage` writes and re-reads every named
+    stage through a :class:`CheckpointManager`; in memory it runs the stage
+    lazily and :meth:`shared` caches and counts the tables that more than
+    one later step reads. The rule records what it cached, so a caller that
+    publishes the tables and goes on (the streaming sink) can
+    :meth:`release` them.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        config: PipelineConfig,
+        checkpoint_dir: str | None = None,
+    ) -> None:
+        self.config_repr = repr(sorted(asdict(config).items()))
+        self.checkpoint = (
+            CheckpointManager(spark, checkpoint_dir) if checkpoint_dir else None
+        )
+        self.cached: list[DataFrame] = []
+
+    def stage(
+        self,
+        name: str,
+        fn,
+        upstreams: tuple[str, ...] = (),
+        config_repr: str | None = None,
+    ) -> DataFrame:
+        """Stage ``name``, computed by the zero-arg ``fn``: checkpointed
+        under a fingerprint of ``config_repr`` (default: the whole config)
+        and the ``upstreams``' fingerprints, or in memory ``fn()``."""
+        if self.checkpoint is None:
+            return fn()
+        return self.checkpoint.stage(
+            name, fn, config_repr=config_repr or self.config_repr,
+            upstreams=upstreams,
+        )
+
+    def shared(self, df: DataFrame) -> DataFrame:
+        # read by more than one later step. In memory, cache and count it
+        # where a checkpointed build writes it: one job's concurrent
+        # broadcast exchanges would each compute a cold cache (measured ~2x
+        # the whole build on entities_raw). Never `edges`: see edges_table.
+        if self.checkpoint is None:
+            df = df.cache()
+            df.count()
+            self.cached.append(df)
+        return df
+
+    def release(self) -> None:
+        """Unpersist every table this rule cached."""
+        for df in self.cached:
+            df.unpersist()
+        self.cached.clear()
 
 
 def build_graph(
@@ -48,10 +109,12 @@ def build_graph(
 
     ``config.extraction_mode`` selects the extraction stage, see
     :func:`extract_configured` (``client_factory`` builds the LLM endpoint
-    client on each executor).
+    client on each executor). Stages D–F run in :func:`link_graph`.
 
-    Checkpointed, every stage is written and re-read; in memory, tables
-    read by more than one later step are cached and counted (``shared``).
+    Checkpointed, every stage is written and re-read, and the ``documents``
+    fingerprint carries a content digest of ``transcripts``; in memory,
+    tables read by more than one later step are cached and counted
+    (:class:`SharingRule`).
     """
     config = config or PipelineConfig()
     # the extractor that runs is part of the extraction fingerprint: a
@@ -59,29 +122,18 @@ def build_graph(
     # by one with a client (this also rejects an unknown extraction_mode)
     extractor = _extractor_name(extraction_client_factory(config, client_factory))
     tune_object_agg(spark)
-    cfg_repr = repr(sorted(asdict(config).items()))
-    ckpt = CheckpointManager(spark, checkpoint_dir) if checkpoint_dir else None
+    rule = SharingRule(spark, config, checkpoint_dir)
+    stage, shared, cfg_repr = rule.stage, rule.shared, rule.config_repr
 
-    def stage(
-        name: str, fn, upstreams: tuple[str, ...] = (), config_repr: str = cfg_repr
-    ) -> DataFrame:
-        if ckpt is None:
-            return fn()
-        return ckpt.stage(name, fn, config_repr=config_repr, upstreams=upstreams)
-
-    def shared(df: DataFrame) -> DataFrame:
-        # read by more than one later step. In memory, cache and count it
-        # where a checkpointed build writes it: one job's concurrent
-        # broadcast exchanges would each compute a cold cache (measured ~2x
-        # the whole build on entities_raw). Never `edges`: see edges_table.
-        if ckpt is None:
-            df = df.cache()
-            df.count()
-        return df
-
+    # the input is part of the documents fingerprint: a build over other
+    # transcripts must not resume this directory's stages
     documents = stage(
         "documents",
         lambda: assemble_documents(transcripts, separator=config.turn_separator),
+        config_repr=(
+            f"{cfg_repr} input={content_digest(transcripts)}"
+            if rule.checkpoint else None
+        ),
     )
     chunks = stage("chunks", lambda: chunk_documents(documents, config), ("documents",))
 
@@ -125,6 +177,36 @@ def build_graph(
         lambda: edges_raw_table(extraction, config.relationship_confidence),
         ("extraction",),
     )
+    graph = link_graph(entities_raw, edges_raw, config, rule)
+
+    return {
+        "documents": documents,
+        "chunks": chunks,
+        "extraction": extraction,
+        "mentions": mentions,
+        "entities_raw": entities_raw,
+        "edges_raw": edges_raw,
+        **graph,
+        "_checkpoint": rule.checkpoint,
+    }
+
+
+def link_graph(
+    entities_raw: DataFrame,
+    edges_raw: DataFrame,
+    config: PipelineConfig,
+    rule: SharingRule,
+) -> dict[str, DataFrame]:
+    """Stages D–F over the raw tables: ``clusters``, ``nodes``, ``edges``,
+    ``node_stats`` and, with ``config.semantic_edges``, ``semantic_edges``
+    (else None), each staged and shared under ``rule``.
+
+    ``edges_raw`` is either shape ``edges_table`` takes: a build's
+    occurrence rows or the streaming workspace's pre-combined triples.
+    ``edges`` includes the semantic edges; ``node_stats`` counts only the
+    extracted ones.
+    """
+    stage, shared = rule.stage, rule.shared
     clusters = shared(stage(
         "clusters", lambda: canonicalize_entities(entities_raw, config), ("entities_raw",)
     ))
@@ -183,18 +265,11 @@ def build_graph(
         edges = edges.unionByName(semantic)
 
     return {
-        "documents": documents,
-        "chunks": chunks,
-        "extraction": extraction,
-        "mentions": mentions,
-        "entities_raw": entities_raw,
-        "edges_raw": edges_raw,
         "clusters": clusters,
         "nodes": nodes,
         "edges": edges,
         "node_stats": node_stats,
         "semantic_edges": semantic,
-        "_checkpoint": ckpt,
     }
 
 

@@ -15,16 +15,17 @@ conversations, then merges the extraction-level tables
 (``entities_raw`` and the pre-combined triples of ``edges_partial_table``,
 one row per distinct triple) into the workspace with associative
 aggregations (max confidence, sum mentions, min first-appearance order
-key, alias and context union) and re-runs canonicalization +
-materialization over the merged raw tables; ``edges_table`` takes the
-pre-combined rows through the same re-point join as a batch build's
-occurrence rows. Because the raw-table merge is associative and the
-greedy replay orders by the global first-appearance key, the workspace
-after N batches is IDENTICAL to a single batch build over the unioned
-transcripts — verified by tests/test_streaming_ingest.py. This mirrors the
-reference's incremental claim ("10× faster than rebuild") honestly:
-extraction is incremental; linking re-runs on the (much smaller) entity
-roll-up.
+key, alias and context union). Stages D–F over the merged raw tables are
+``build_graph``'s own, ``plans.pipeline.link_graph``: canonicalization,
+nodes, edges (the pre-combined rows go through the same re-point join as
+a batch build's occurrence rows), node stats and, when configured, the
+semantic-similarity edges. Because the raw-table merge is associative,
+the greedy replay orders by the global first-appearance key and the
+linking code is the build's, the workspace after N batches is IDENTICAL
+to a single batch build over the unioned transcripts — verified by
+tests/test_streaming_ingest.py. This mirrors the reference's incremental
+claim ("10× faster than rebuild") honestly: extraction is incremental;
+linking re-runs on the (much smaller) entity roll-up.
 
 At cluster scale the sink tables are Iceberg (``MERGE INTO`` + snapshot
 commit); here the state store is a parquet workspace swapped atomically
@@ -86,8 +87,10 @@ def merge_entities_raw(old: DataFrame, new: DataFrame) -> DataFrame:
 
 
 class IncrementalGraphSink:
-    """foreachBatch sink: extraction on the delta only; canonicalization +
-    materialization re-run over the merged raw tables.
+    """foreachBatch sink: extraction on the delta only; ``build_graph``'s
+    stages D–F (``plans.pipeline.link_graph``) re-run over the merged raw
+    tables, under the build's in-memory sharing rule, whose cached tables
+    are released once the batch is published.
 
     **Exactly-once under at-least-once delivery.** foreachBatch replays a
     batch if the stream crashes between the sink's writes and the streaming
@@ -183,19 +186,7 @@ class IncrementalGraphSink:
             shutil.rmtree(self._version_dir(prev_bid), ignore_errors=True)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from graphrag_rs_spark.operators.assembly import assemble_documents
-        from graphrag_rs_spark.operators.canonicalize import canonicalize_entities
-        from graphrag_rs_spark.operators.chunking import chunk_documents
-        from graphrag_rs_spark.operators.extraction import (
-            edges_partial_table,
-            entities_raw_table,
-        )
-        from graphrag_rs_spark.operators.materialize import (
-            edges_table,
-            node_stats_table,
-            nodes_table,
-        )
-        from graphrag_rs_spark.plans.pipeline import extract_configured
+        from graphrag_rs_spark.plans.pipeline import SharingRule
 
         applied = self._current_batch_id()
         if applied is not None and batch_id == applied:
@@ -217,14 +208,32 @@ class IncrementalGraphSink:
             )
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
+        # the build's in-memory sharing rule, for extraction and D–F alike
+        rule = SharingRule(batch_df.sparkSession, self.config)
+        try:
+            self._publish(batch_id, self._merged_tables(batch_df, rule))
+        finally:
+            # cached plans must not accumulate across micro-batches in a
+            # long-running stream, a failed batch's included
+            rule.release()
 
+    def _merged_tables(self, batch_df: DataFrame, rule) -> dict[str, DataFrame]:
+        """The workspace tables with ``batch_df`` merged in."""
+        from graphrag_rs_spark.operators.assembly import assemble_documents
+        from graphrag_rs_spark.operators.chunking import chunk_documents
+        from graphrag_rs_spark.operators.extraction import (
+            edges_partial_table,
+            entities_raw_table,
+        )
+        from graphrag_rs_spark.plans.pipeline import extract_configured, link_graph
+
+        spark = batch_df.sparkSession
         # delta-only narrow stages (the expensive part)
         documents = assemble_documents(
             batch_df, separator=self.config.turn_separator
         )
         chunks = chunk_documents(documents, self.config)
-        extraction = extract_configured(chunks, self.config).cache()
+        extraction = rule.shared(extract_configured(chunks, self.config))
         new_entities = entities_raw_table(extraction)
         new_edges_raw = edges_partial_table(extraction)
 
@@ -244,29 +253,16 @@ class IncrementalGraphSink:
             else new_edges_raw
         ).localCheckpoint(eager=True)
 
-        # global re-link + materialize over the merged roll-ups
-        clusters = canonicalize_entities(entities_raw, self.config).cache()
-        # nodes feeds edges_table's code table AND the output; the key table
-        # feeds degrees AND communities
-        nodes = nodes_table(clusters, entities_raw).cache()
-        edges = edges_table(edges_raw, clusters, nodes, self.config)
-        edge_keys = edges.select("subj", "pred", "obj").cache()
-        node_stats = node_stats_table(nodes, edge_keys)
-
-        self._publish(
-            batch_id,
-            {
-                "entities": nodes,
-                "relationships": edges,
-                "node_stats": node_stats,
-                "entities_raw": entities_raw,
-                "edges_raw": edges_raw,
-            },
-        )
-        # release every table this batch cached, so cached plans don't
-        # accumulate across micro-batches in a long-running stream
-        for df in (extraction, clusters, nodes, edge_keys):
-            df.unpersist()
+        # global re-link + materialize over the merged roll-ups: the
+        # build's own stages D–F
+        graph = link_graph(entities_raw, edges_raw, self.config, rule)
+        return {
+            "entities": graph["nodes"],
+            "relationships": graph["edges"],
+            "node_stats": graph["node_stats"],
+            "entities_raw": entities_raw,
+            "edges_raw": edges_raw,
+        }
 
 
 def run_incremental_ingest(

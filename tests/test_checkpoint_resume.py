@@ -133,6 +133,43 @@ def test_client_factory_invalidates_pattern_fallback(spark, transcripts, tmp_pat
     assert _outputs(stub)["nodes"] != fallback["nodes"]
 
 
+def test_other_input_recomputes_from_documents(spark, transcripts, tmp_path):
+    """The transcripts' content is part of the documents fingerprint: a
+    build over other transcripts into the same directory recomputes every
+    stage and returns its own graph, not the directory's."""
+    d = str(tmp_path / "ck_input")
+    build_graph(spark, transcripts, PipelineConfig(), checkpoint_dir=d)
+    other = transcripts_df(spark, 8, seed=7, mega_every=0)
+    again = build_graph(spark, other, PipelineConfig(), checkpoint_dir=d)
+    mgr: CheckpointManager = again["_checkpoint"]
+    assert not mgr.stages_resumed
+    assert {"documents", "nodes", "edges"} <= set(mgr.stages_computed)
+    direct = build_graph(spark, other, PipelineConfig())
+    assert _outputs(again)["nodes"] == _outputs(direct)["nodes"]
+
+
+def test_same_parquet_read_twice_resumes(spark, transcripts, tmp_path):
+    """Two reads of the same files are the same input and resume every
+    stage; a filtered read of them lists the same files but is another
+    input."""
+    from pyspark.sql import functions as F
+
+    src = str(tmp_path / "transcripts")
+    transcripts.write.parquet(src)
+    d = str(tmp_path / "ck_read")
+    cfg = PipelineConfig()
+    first = build_graph(spark, spark.read.parquet(src), cfg, checkpoint_dir=d)
+    again = build_graph(spark, spark.read.parquet(src), cfg, checkpoint_dir=d)
+    assert not again["_checkpoint"].stages_computed
+    assert _outputs(again) == _outputs(first)
+    conv = transcripts.select(F.min("conv_id")).first()[0]
+    filtered = build_graph(
+        spark, spark.read.parquet(src).where(F.col("conv_id") != conv), cfg,
+        checkpoint_dir=d,
+    )
+    assert "documents" in filtered["_checkpoint"].stages_computed
+
+
 def test_lineage_rows_and_manifest(spark, transcripts, tmp_path):
     """The manifest is the stage's only commit record: its ``files`` rows
     are the lineage, its totals are their sum / xor / sum, and no stage

@@ -7,6 +7,7 @@ from graphrag_rs_spark.config import PipelineConfig
 from graphrag_rs_spark.operators.extraction import extract_chunks, extract_gleaning
 from graphrag_rs_spark.sources.registry import (
     read_entities_csv,
+    read_relationships_csv,
     read_table,
     save_graph_workspace,
     write_table,
@@ -159,6 +160,15 @@ def test_csv_entities_with_column_mappings(spark, tmp_path):
     assert {(r["entity_id"], r["name"], r["entity_type"]) for r in got} == {
         ("1", "John Smith", "PERSON"),
         ("2", "Acme Corp", "ORGANIZATION"),
+    }
+    r = tmp_path / "rels.csv"
+    r.write_text("from,to,kind\n1,2,WORKS_FOR\n2,1,EMPLOYS\n")
+    rels = read_relationships_csv(
+        spark, str(r), source="from", target="to", rel_type="kind"
+    ).collect()
+    assert {(x["subj"], x["pred"], x["obj"]) for x in rels} == {
+        ("1", "WORKS_FOR", "2"),
+        ("2", "EMPLOYS", "1"),
     }
 
 

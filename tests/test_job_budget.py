@@ -15,8 +15,9 @@ import uuid
 
 # 12 convs, seed 42, shuffle_partitions=4, outputs forced by noop writes
 JOB_CEILING = 63
-# the same build, cold, into a fresh checkpoint directory
-CHECKPOINTED_JOB_CEILING = 78
+# the same build, cold, into a fresh checkpoint directory; one of its jobs
+# digests the transcripts for the documents fingerprint
+CHECKPOINTED_JOB_CEILING = 79
 
 
 def _build_jobs(spark, checkpoint_dir: str | None = None, **config) -> int:

@@ -1,12 +1,11 @@
 """Physical-plan shape regression tests.
 
-PLANS.md records `.explain("formatted")` audits of the hot operator plans
-with the properties each one must keep at 100 TB scale (one exchange here,
-broadcast there, zero Python stages in a pure-Catalyst path). Until now
-those properties held only by manual re-audit; this module pins the
-load-bearing ones in pytest so a refactor that silently adds a shuffle, a
-row-at-a-time Python stage, or un-broadcasts a dimension join fails CI
-instead of surfacing as a 10x regression on a real cluster.
+The hot operator plans have properties each one must keep at 100 TB scale
+(one exchange here, broadcast there, zero Python stages in a pure-Catalyst
+path). This module pins the load-bearing ones on the operators' own plans,
+so a refactor that silently adds a shuffle, a row-at-a-time Python stage,
+or un-broadcasts a dimension join fails CI instead of surfacing as a 10x
+regression on a real cluster.
 
 Assertions are written with deliberate headroom: exact counts only where
 the count IS the property (1 exchange between assembly and extraction,
@@ -343,9 +342,9 @@ def test_semantic_merge_candidates_blocked_no_cross_join(spark):
 
 
 def test_repetition_scores_is_narrow_plan(spark):
-    """PLANS.md §repetition (r3): the Gopher metrics must stay a narrow
-    projection — zero exchanges, zero Python stages (repetition filtering
-    costs one scan at 100 TB, not two gram-keyed shuffles)."""
+    """The Gopher metrics must stay a narrow projection — zero exchanges,
+    zero Python stages (repetition filtering costs one scan at 100 TB, not
+    two gram-keyed shuffles)."""
     from graphrag_rs_spark.operators.text_analysis import repetition_scores
 
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
@@ -355,9 +354,9 @@ def test_repetition_scores_is_narrow_plan(spark):
 
 
 def test_benchmark_contamination_broadcasts(spark):
-    """PLANS.md §contamination (r3): the benchmark gram set reaches the
-    corpus grams as a broadcast join (eval suites are small, the corpus
-    is not) and the only wide stage is the per-doc hit re-aggregation."""
+    """The benchmark gram set reaches the corpus grams as a broadcast join
+    (eval suites are small, the corpus is not) and the only wide stage is
+    the per-doc hit re-aggregation."""
     from graphrag_rs_spark.operators.dedup import benchmark_contamination
 
     docs = spark.createDataFrame(
@@ -376,9 +375,8 @@ def test_benchmark_contamination_broadcasts(spark):
 
 
 def test_clustering_coefficient_joins_only_no_python(spark):
-    """PLANS.md §clustering coefficient: triangle counting is hash joins
-    on edge keys + aggregation — no per-node adjacency collection, no
-    Python stage anywhere in the plan."""
+    """Triangle counting is hash joins on edge keys + aggregation — no
+    per-node adjacency collection, no Python stage anywhere in the plan."""
     from graphrag_rs_spark.operators.analytics import local_clustering
 
     edges = (
@@ -393,10 +391,10 @@ def test_clustering_coefficient_joins_only_no_python(spark):
 
 
 def test_candidate_pair_stage_broadcast_meta_no_sortmerge(extraction):
-    """PLANS.md §candidate pair generation: the scorer meta attaches to
-    the pair table via BroadcastHashJoins (shuffle-joining it would
-    re-exchange the stage's largest table twice); the stranded-probe
-    side may plan static SMJs that AQE converts at runtime."""
+    """The scorer meta attaches to the pair table via BroadcastHashJoins
+    (shuffle-joining it would re-exchange the stage's largest table twice);
+    the stranded-probe side may plan static SMJs that AQE converts at
+    runtime."""
     from graphrag_rs_spark.config import PipelineConfig
     from graphrag_rs_spark.operators.canonicalize import (
         candidate_pairs,
@@ -410,7 +408,7 @@ def test_candidate_pair_stage_broadcast_meta_no_sortmerge(extraction):
     s = summarize(plan)
     assert s["broadcast_joins"] >= 2, s
     # the stranded-probe joins may plan as static SortMergeJoin and get
-    # AQE-converted at runtime (PLANS.md note) — only the meta broadcast
+    # AQE-converted at runtime — only the meta broadcast
     # and a loose stage budget are pinned
     assert s["exchanges"] <= 12, s
 

@@ -23,8 +23,14 @@ from graphrag_rs_spark.streaming.ingest import run_incremental_ingest
         # the sink must extract with the build's gleaning rounds: later
         # rounds widen the entity types of under-dense chunks
         PipelineConfig(max_gleaning_rounds=3, gleaning_entity_target=50),
+        # and the build's optional stages after linking
+        PipelineConfig(
+            semantic_edges=True,
+            semantic_edge_method="exact",
+            semantic_edge_threshold=0.5,
+        ),
     ],
-    ids=["default", "gleaning"],
+    ids=["default", "gleaning", "semantic"],
 )
 def test_incremental_ingest_matches_union(spark, tmp_path, cfg):
     in_dir = tmp_path / "in"
@@ -149,3 +155,23 @@ def test_sink_releases_every_cached_table(spark, tmp_path):
     )
     assert sink._current_batch_id() == 1
     assert cache.cachedData().size() == before
+
+
+def test_sink_runs_the_build_link_stages_once(spark, tmp_path, monkeypatch):
+    """One micro-batch links and materializes through ``build_graph``'s own
+    stages D–F, exactly once: the sink keeps no copy of them."""
+    from graphrag_rs_spark.plans import pipeline
+    from graphrag_rs_spark.streaming.ingest import IncrementalGraphSink
+
+    calls = []
+    link_graph = pipeline.link_graph
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return link_graph(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "link_graph", spy)
+    sink = IncrementalGraphSink(str(tmp_path / "ws"), PipelineConfig())
+    sink.process_batch(transcripts_df(spark, 4, seed=5), batch_id=0)
+    assert len(calls) == 1
+    assert sink._current_batch_id() == 0
