@@ -55,8 +55,11 @@ def assemble_documents(
         df = df.withColumn("doc_id", F.col("conv_id"))
 
     sep_len = len(separator)
+    # a NULL text is an empty turn: array_join would skip it while the
+    # running offset went NULL for every later turn
+    text = F.coalesce(F.col("text"), F.lit("")).alias("text")
     turns = df.groupBy("conv_id", "doc_id").agg(
-        F.array_sort(F.collect_list(F.struct("turn_idx", "text"))).alias("turns")
+        F.array_sort(F.collect_list(F.struct("turn_idx", text))).alias("turns")
     )
 
     # full_text = join of texts; offsets accumulated JVM-side with aggregate

@@ -8,35 +8,40 @@ greedy clusters in entity-insertion order
 while making every step distributed:
 
 1. **Blocking-key generation** — every entity emits, per normalized-name
-   token: the token itself, its Soundex code, and its 4-char prefix, all
-   namespaced by entity type. Pairs that can pass the 0.85 max-of-metrics
-   threshold virtually always share one of these (typos → Soundex;
-   token add/drop like "New York (City)" → shared token; suffix stems like
-   "Corp"/"Corporation" → shared 4-prefix). Interior character q-grams are
-   deliberately NOT keys — see :func:`blocking_keys`. A cluster-parity test
-   vs the oracle's all-pairs clustering guards recall (SURVEY.md §7.4
-   hard part 2).
+   token: the token itself, its Soundex code, and its 4-char prefix and
+   suffix grams, all namespaced by entity type. Pairs that can pass the
+   0.85 max-of-metrics threshold virtually always share one of these
+   (typos → Soundex; token add/drop like "New York (City)" → shared
+   token; suffix stems like "Corp"/"Corporation" → shared 4-prefix).
+   Interior character q-grams are deliberately NOT keys — see
+   :func:`blocking_keys`. A cluster-parity test vs the oracle's all-pairs
+   clustering guards recall (SURVEY.md §7.4 hard part 2).
 2. **Block-size cap** — Zipf-hot tokens would create quadratic blocks;
-   blocks over ``max_block_size`` are dropped (their pairs are
-   overwhelmingly sub-threshold). This is the explicit skew guard.
-3. **Candidate pairs** — per-block self-join with ``id1 < id2``,
-   deduplicated across blocks.
+   blocks over their tiered cap are not expanded (their pairs are
+   overwhelmingly sub-threshold) except for rescue window pairs around
+   stranded members. This is the explicit skew guard.
+3. **Candidate pairs** — each surviving block is gathered once and
+   expanded to its ``id1 < id2`` pairs in an Arrow-batched
+   ``mapInPandas``, then deduplicated across blocks under the
+   ``min_shared_blocks`` gate.
 4. **Pair scoring** — Arrow-batched ``mapInPandas`` running the exact
    reference metric suite (rules/similarity.py), same-type gate + threshold
    (string_similarity_linker.rs:130-168).
-5. **Connected components** — large-star/small-star over surviving pairs.
+5. **Connected components** — ``connected_components`` auto over the
+   surviving pairs: a driver union-find up to 50k edges, then the
+   two-level union-find contraction, then distributed large-star/small-star.
    CC components are a SUPERSET partition of the reference's greedy
    clusters (greedy only ever links pairs above threshold, i.e. along CC
    edges), so:
 6. **Greedy replay per component over the match edges** — members and
-   their scored match edges are cogrouped per component into a pandas UDF
-   that replays the reference's greedy scan in deterministic
-   first-appearance order (``order_key = (conv_id, chunk_idx, rank)``) as
-   a pure adjacency walk: the scoring stage already answered "sim ≥
-   threshold?" for every blocked pair, so no pair_similarity call happens
-   here and cost is O(E_c), not O(V_c²) — a giant junk component is a
-   linear walk, not a straggler (see :func:`_greedy_replay_cogroup` for
-   the exactness argument).
+   their scored match edges are cogrouped by a hash bucket of the
+   component into a pandas UDF that replays the reference's greedy scan
+   in deterministic first-appearance order (``order_key = (conv_id,
+   chunk_idx, rank)``) as a pure adjacency walk: the scoring stage
+   already answered "sim ≥ threshold?" for every blocked pair, so no
+   pair_similarity call happens here and cost is O(E_c), not O(V_c²) — a
+   giant junk component is a linear walk, not a straggler (see
+   :func:`_greedy_replay_cogroup` for the exactness argument).
 7. **Canonical selection** — highest confidence wins, ties break on the
    greater entity_id (deterministic stand-in for Rust ``max_by`` last-wins,
    string_similarity_linker.rs:106-124). The cluster roll-up (canonical
@@ -57,12 +62,6 @@ from graphrag_rs_spark.operators.graph import connected_components
 
 PAIR_SCORE_SCHEMA = "id1 string, id2 string, score float"
 CLUSTER_ASSIGN_SCHEMA = "entity_id string, cluster_id string"
-
-# frontier rounds before the greedy replay's sequential O(E) finish takes
-# over (pathological scan-ordered chains have dependency depth V; real
-# similarity components decide in tens of rounds). Module-level so tests
-# can pin it low and exercise the mixed frontier→fallback path.
-_MAX_FRONTIER_ROUNDS = 512
 
 def blocking_keys(entities: DataFrame) -> DataFrame:
     """entities(entity_id, name, entity_type, …) → (block_key, entity_id).
@@ -136,13 +135,13 @@ def candidate_pairs(
 
     Shape: ONE pass over the blocking keys — ``groupBy(block_key)``
     gathers each block's member ids, the size filter applies the tiered
-    caps, and a codegen higher-order expression expands each block to its
-    C(n, 2) ordered pairs. An earlier version materialized the keys and
-    ran a per-block self-join; that cost an extra shuffle per join side, a
-    separate key-count pass, and an eager checkpoint to stop the blocking
-    UDF from being scanned three times — all fixed overhead that dominated
-    the stage once the join volume itself was capped. Two shuffles total:
-    the block gather and the shared-key-count pair dedupe.
+    caps, and the ``expand_blocks`` ``mapInPandas`` expands each block to
+    its C(n, 2) ordered pairs (or, over its cap, to rescue window pairs
+    around stranded members). Without rescue (``hot_block_window=0``)
+    there are two shuffles: the block gather and the shared-key-count
+    pair dedupe. With rescue (the default) the stranded-entity probe adds
+    the token-block sizing, anchored-id and stranded-flag exchanges over
+    the locally checkpointed keys.
     """
     config = config or PipelineConfig()
     keys = blocking_keys(entities)
@@ -495,12 +494,13 @@ def _greedy_replay_cogroup(
     first and absorbed this entity), so the reference's "scan later
     entities only" rule needs no explicit position check.
 
-    Cost per component: O(E_c + V_c log V_c) — no pair_similarity calls
-    and no O(V²) rescan, so a pathological junk component (6,372 members
-    at 4k convs) costs its edge count, not its square; the previous
-    component-size cap + first-token re-blocking fallback (an
-    approximation AND a straggler risk) is gone entirely.
+    Cost per component: O(E_c log E_c + V_c log V_c) for the sorts plus
+    one O(E_c + V_c) walk — no pair_similarity calls and no O(V²) rescan,
+    so a pathological junk component (6,372 members at 4k convs) costs
+    its edge count, not its square.
     """
+    from array import array
+
     import numpy as np
     import pandas as pd
 
@@ -526,7 +526,7 @@ def _greedy_replay_cogroup(
     row_by_id = pd.Series(pos_of_row, index=ids)
 
     # The walk's outcome admits a closed characterization (the r4 serial
-    # scan and this computation are proven pointwise equal, see below):
+    # scan and this walk are proven pointwise equal, see below):
     #
     #   seed(q)   ⇔  q has NO seed neighbor earlier in scan order
     #   cluster(q) = q if seed(q), else the MIN-position earlier seed
@@ -541,112 +541,31 @@ def _greedy_replay_cogroup(
     # clustered before its own turn iff some earlier neighbor seeded —
     # the earliest such seed got there first. Hence the seed set is the
     # lexicographically-first maximal independent set under scan order,
-    # and the per-position scan can be replaced by FRONTIER-SYNCHRONOUS
-    # rounds over the dependency DAG (edges point earlier→later): a node
-    # decides once all its earlier neighbors have decided; min-seed and
-    # undecided-earlier-neighbor counts propagate along decided edges.
-    # Each edge is touched O(1) times across all rounds, so total work is
-    # O(E + V) in vectorized numpy instead of a V-iteration Python loop —
-    # the giant component's replay stops being the Amdahl floor of the
-    # whole build (the serial scan cost ~38 s at 100k convs; this is the
-    # same answer in ~1 s, pinned equal by
-    # tests/test_graph_primitives.py::test_greedy_replay_matches_serial_walk).
-    # Pathological orders (a scan-ordered path has dependency depth V)
-    # keep a per-round frontier of O(1) and would pay Python loop
-    # overhead per round, so after MAX_ROUNDS the remainder falls back to
-    # a sequential pass over the same CSR in scan order — still O(E),
-    # never worse than the r4 walk.
-    if len(edges_pdf):
-        u = edges_pdf["id1"].map(row_by_id).to_numpy(dtype=np.int64)
-        v = edges_pdf["id2"].map(row_by_id).to_numpy(dtype=np.int64)
-        dep_src = np.minimum(u, v)  # earlier endpoint
-        dep_dst = np.maximum(u, v)  # later endpoint (the dependent)
-        # CSR by source (for frontier propagation), targets sorted within
-        e_order = np.lexsort((dep_dst, dep_src))
-        dep_src = dep_src[e_order]
-        dep_dst = dep_dst[e_order]
-        src_off = np.searchsorted(dep_src, np.arange(n + 1))
-        # earlier-neighbor count per node (multi-edges count consistently
-        # on both the init and the decrement side)
-        cnt = np.bincount(dep_dst, minlength=n)
-        # CSR by TARGET for the sequential fallback: each node's earlier
-        # neighbors, ascending — the first seed hit while scanning is the
-        # min-position one
-        f_order = np.lexsort((dep_src, dep_dst))
-        tgt_srt = dep_dst[f_order]
-        nbr_srt = dep_src[f_order]
-        tgt_off = np.searchsorted(tgt_srt, np.arange(n + 1))
-    else:
-        dep_src = dep_dst = np.empty(0, dtype=np.int64)
-        src_off = np.zeros(n + 1, dtype=np.int64)
-        cnt = np.zeros(n, dtype=np.int64)
-        nbr_srt = np.empty(0, dtype=np.int64)
-        tgt_off = np.zeros(n + 1, dtype=np.int64)
-
-    SENTINEL = n
-    MAX_ROUNDS = _MAX_FRONTIER_ROUNDS
-    seed = np.zeros(n, dtype=bool)
-    decided = np.zeros(n, dtype=bool)
-    min_seed = np.full(n, SENTINEL, dtype=np.int64)
-    frontier = np.flatnonzero(cnt == 0)
-    rounds = 0
-    while frontier.size and rounds < MAX_ROUNDS:
-        rounds += 1
-        # decide the frontier: every earlier neighbor has decided, so
-        # min_seed is final — SENTINEL means "no earlier seed neighbor"
-        is_seed = min_seed[frontier] == SENTINEL
-        seed[frontier[is_seed]] = True
-        decided[frontier] = True
-        # propagate along the frontier's outgoing dependency edges
-        starts = src_off[frontier]
-        lens = src_off[frontier + 1] - starts
-        total = int(lens.sum())
-        if not total:
-            frontier = np.empty(0, dtype=np.int64)
-            continue
-        # vectorized multi-range gather of the frontier's edge slices
-        idx = np.repeat(starts, lens) + (
-            np.arange(total) - np.repeat(np.cumsum(lens) - lens, lens)
-        )
-        srcs = dep_src[idx]
-        tgts = dep_dst[idx]
-        contrib = seed[srcs]
-        if contrib.any():
-            np.minimum.at(min_seed, tgts[contrib], srcs[contrib])
-        np.subtract.at(cnt, tgts, 1)
-        newly = tgts[cnt[tgts] == 0]
-        frontier = np.unique(newly[~decided[newly]])
-
-    if not decided.all():
-        # sequential O(remaining E) finish in scan order: every earlier
-        # neighbor of q is decided by the time the loop reaches q
-        nbr_l = nbr_srt.tolist()
-        off_l = tgt_off.tolist()
-        seed_l = seed.tolist()
-        decided_l = decided.tolist()
-        min_l = min_seed.tolist()
-        for q in range(n):
-            if decided_l[q]:
-                continue
-            # min_l[q] only saw seeds decided during the FRONTIER phase
-            # (loop-decided seeds never ran minimum.at), so always scan
-            # the ascending earlier-neighbor list below the current best
-            best = min_l[q]
-            for p in nbr_l[off_l[q] : off_l[q + 1]]:
-                if p >= best:
-                    break  # ascending → nothing below best remains
-                if seed_l[p]:
-                    best = p  # first seed hit below best IS the min
-                    break
-            if best == SENTINEL:
-                seed_l[q] = True
-            else:
-                min_l[q] = best
-            decided_l[q] = True
-        seed = np.asarray(seed_l, dtype=bool)
-        min_seed = np.asarray(min_l, dtype=np.int64)
-
-    root = np.where(seed, np.arange(n), min_seed)
+    # and one pass in scan order decides it: every earlier neighbor of q
+    # is decided by the time the pass reaches q, so q joins its first
+    # (min-position) seed neighbor or seeds. Each edge is read at most
+    # once, O(E + V) total; pinned equal to the per-position scan by
+    # tests/test_graph_primitives.py::test_greedy_replay_matches_serial_walk.
+    u = edges_pdf["id1"].map(row_by_id).to_numpy(dtype=np.int64)
+    v = edges_pdf["id2"].map(row_by_id).to_numpy(dtype=np.int64)
+    # one int64 key per edge (exact while n < 3·10⁹), ordered by (later
+    # endpoint, earlier endpoint): sorted, it is a CSR of each member's
+    # earlier neighbors, ascending, stored as 8-byte machine ints (a list
+    # of Python ints costs ~3x the memory on a giant component)
+    key = np.maximum(u, v) * n + np.minimum(u, v)
+    key.sort()
+    nbr = array("q", (key % n).tobytes())
+    off = np.searchsorted(key, np.arange(n + 1) * n).tolist()
+    root = array("q", range(n))
+    seed = bytearray(n)
+    for q in range(n):
+        for p in nbr[off[q] : off[q + 1]]:
+            if seed[p]:
+                root[q] = p
+                break
+        else:
+            seed[q] = 1
+    root = np.frombuffer(root, dtype=np.int64)
     # canonical per cluster: max by (confidence, entity_id) — reference
     # max_by (string_similarity_linker.rs:106-124)
     assign = pd.DataFrame(
@@ -692,19 +611,17 @@ def canonicalize_entities(
     # scan-order fields + confidence — no name/type strings in the shuffle.
     #
     # Cogroup key is a HASH BUCKET of the component, not the component
-    # itself: the replay's frontier computation is purely edge-local and
-    # components are edge-disjoint, so running it over a UNION of
-    # components yields exactly the per-component answers (no edge ever
-    # crosses components, so no frontier/min-seed state can either) —
-    # formally, every array in _greedy_replay_cogroup decomposes blockwise
-    # by component. Grouping per-component instead paid the Arrow
-    # slice + pandas-construction + UDF-dispatch overhead once per
-    # component — tens of thousands of sub-millisecond groups at 100k
-    # convs, the real bulk of the old "serial replay" wall (the giant
-    # component's walk itself is ~1 s vectorized). Buckets cap the group
-    # count at ~4 per shuffle partition while keeping every component
-    # intact inside one group; the giant component's bucket is the
-    # longest task, bounded by the O(E+V) frontier walk.
+    # itself: a member's replay decision reads only its earlier neighbors
+    # and components are edge-disjoint, so walking a UNION of components
+    # in one scan order yields exactly the per-component answers (no edge
+    # ever crosses components, so no seed can either). Grouping
+    # per-component instead paid the Arrow slice + pandas-construction +
+    # UDF-dispatch overhead once per component — tens of thousands of
+    # sub-millisecond groups at 100k convs, the real bulk of the old
+    # "serial replay" wall. Buckets cap the group count at ~4 per shuffle
+    # partition while keeping every component intact inside one group;
+    # the giant component's bucket is the longest task, bounded by the
+    # O(E+V) scan-order walk.
     n_buckets = max(16, config.shuffle_partitions * 4)
     bucket = F.pmod(F.xxhash64("component"), F.lit(n_buckets))
     members = entities.join(cc, entities["entity_id"] == cc["id"]).select(

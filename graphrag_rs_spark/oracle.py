@@ -51,7 +51,7 @@ def assemble(rows: list[dict], separator: str = "\n") -> tuple[dict, dict]:
     """rows of transcripts → (conv_id → full_text, conv_id → turn offsets)."""
     by_conv: dict[str, list] = defaultdict(list)
     for r in rows:
-        by_conv[r["conv_id"]].append((r["turn_idx"], r["text"]))
+        by_conv[r["conv_id"]].append((r["turn_idx"], r["text"] or ""))
     docs, offsets = {}, {}
     for conv_id, turns in by_conv.items():
         turns.sort()

@@ -13,7 +13,7 @@ ratio >= RATIO_MAX and max task >= MATERIAL_MS (sub-material stages with
 2-3 tasks produce meaningless ratios; a 50 ms median vs 300 ms max
 straggler costs nothing at any scale). The replay-bucket stage is
 expected to carry the giant component's bucket as its longest task —
-bounded by the O(E+V) frontier walk, not the component's square.
+bounded by the O(E+V) scan-order walk, not the component's square.
 
     N_CONVS=2000 python scripts/diag_skew_stress.py
 

@@ -68,3 +68,36 @@ def test_mega_conversation_segmentation(spark, tiny_transcripts):
         "conv00000000#seg0", "conv00000000#seg1", "conv00000000#seg2"
     }
     assert sum(r["n_turns"] for r in mega) == 60
+
+
+@pytest.mark.parametrize("turns", [
+    [(0, "Alice met Bob."), (1, None), (2, "Carol works at Acme.")],
+    [(0, "Alice met Bob."), (1, ""), (2, "Carol works at Acme.")],
+    [(0, "Alice met Bob."), (1, "Dup turn one."), (1, "Another dup."),
+     (2, "Carol works at Acme.")],
+    [(0, "Alice met Bob."), (2, "Carol works at Acme."), (5, "Dave left.")],
+], ids=["null_turn", "empty_turn", "duplicate_turn", "turn_gap"])
+def test_odd_turns_match_oracle(spark, turns):
+    """Odd input has defined results: a NULL text reads as an empty turn,
+    a duplicated (conv_id, turn_idx) keeps both turns in text order, and
+    a turn gap keeps the recorded turn_idx. Offsets equal the oracle's and
+    recover every turn's text from full_text."""
+    from graphrag_rs_spark.fixtures import TRANSCRIPT_SCHEMA
+    from graphrag_rs_spark.oracle import assemble as oracle_assemble
+
+    rows = [
+        {"conv_id": "c0", "turn_idx": i, "role": "user", "text": t,
+         "tool": None, "ts": None}
+        for i, t in turns
+    ]
+    df = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+    (doc,) = assemble_documents(df).collect()
+    docs_expected, offsets_expected = oracle_assemble(rows)
+    assert doc["full_text"] == docs_expected["c0"]
+    got = [(o["turn_idx"], o["start"], o["end"]) for o in doc["turn_offsets"]]
+    assert got == offsets_expected["c0"]
+    recovered = sorted(
+        (o["turn_idx"], doc["full_text"][o["start"]:o["end"]])
+        for o in doc["turn_offsets"]
+    )
+    assert recovered == sorted((i, t or "") for i, t in turns)

@@ -208,9 +208,10 @@ def test_rollback_forces_recompute(spark, transcripts, tmp_path):
     assert "documents" in mgr2.stages_resumed and "chunks" in mgr2.stages_resumed
 
 
-@pytest.mark.parametrize("damage", ["delete", "truncate"])
+@pytest.mark.parametrize("damage", ["delete", "truncate", "manifest_missing"])
 def test_resume_recomputes_damaged_stage(spark, tmp_path, damage):
-    """A data file deleted or cut short after the commit makes the stage
+    """A data file deleted or cut short after the commit, or a crash
+    between the data write and the manifest commit, makes the stage
     uncommitted: the next run recomputes it in full instead of serving
     the remaining rows or failing on the short file, and the stage
     downstream of it keeps its fingerprint and resumes."""
@@ -231,6 +232,8 @@ def test_resume_recomputes_damaged_stage(spark, tmp_path, damage):
     part = sorted(glob.glob(os.path.join(d, "t", "data", "part-*.parquet")))[0]
     if damage == "delete":
         os.remove(part)
+    elif damage == "manifest_missing":
+        os.remove(os.path.join(d, "t", "manifest.json"))
     else:
         with open(part, "r+b") as fh:
             fh.truncate(100)

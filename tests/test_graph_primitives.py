@@ -282,7 +282,7 @@ def test_greedy_replay_is_seed_local_not_transitive():
 
 def _serial_greedy_walk_reference(members_pdf, edges_pdf):
     """The round-4 per-position serial scan, kept verbatim as the test
-    oracle for the frontier-synchronous rewrite: iterate scan positions;
+    oracle for the replay's earlier-neighbor walk: iterate scan positions;
     an unclustered position seeds and absorbs its unclustered neighbors;
     canonical is max by (confidence, entity_id)."""
     import numpy as np
@@ -367,12 +367,16 @@ def _random_replay_case(rng, n, n_edges, conv_buckets):
     (2, 60, 400, 10),     # dense hairball
     (3, 200, 300, 5),     # heavy scan-key collisions (ties broken by id)
     (4, 500, 2000, 50),   # mid-size multigraph with duplicate edges
+    (11, 300, 700, 20),   # sparse mid-size multigraphs, three seeds
+    (12, 300, 700, 20),
+    (13, 300, 700, 20),
+    (5, 50_000, 500_000, 1000),  # dense component, E = 10·V
 ])
 def test_greedy_replay_matches_serial_walk(seed, n, n_edges, conv_buckets):
-    """The frontier-synchronous replay must be POINTWISE equal to the
-    round-4 serial scan (which itself carries the reference-parity
-    argument, string_similarity_linker.rs:79-124) on adversarial random
-    multigraphs."""
+    """The replay's scan-order walk over earlier neighbors must be
+    POINTWISE equal to the round-4 serial scan (which itself carries the
+    reference-parity argument, string_similarity_linker.rs:79-124) on
+    adversarial random multigraphs."""
     import random as _random
 
     from graphrag_rs_spark.operators.canonicalize import _greedy_replay_cogroup
@@ -386,32 +390,11 @@ def test_greedy_replay_matches_serial_walk(seed, n, n_edges, conv_buckets):
     assert got == want
 
 
-@pytest.mark.parametrize("seed", [11, 12, 13])
-def test_greedy_replay_mixed_frontier_fallback_matches(monkeypatch, seed):
-    """With the frontier-round cap pinned to 2, most nodes decide in the
-    sequential fallback while some seeds come from the frontier phase —
-    the mix where a fallback node must NOT trust a partially-propagated
-    min_seed (loop-decided seeds never ran minimum.at). Pointwise equal to
-    the serial walk on random multigraphs."""
-    import random as _random
-
-    from graphrag_rs_spark.operators import canonicalize as cz
-
-    monkeypatch.setattr(cz, "_MAX_FRONTIER_ROUNDS", 2)
-    rng = _random.Random(seed)
-    members, edges = _random_replay_case(rng, 300, 700, 20)
-    got = cz._greedy_replay_cogroup(members, edges)
-    want = _serial_greedy_walk_reference(members, edges)
-    assert dict(zip(got["entity_id"], got["cluster_id"])) == dict(
-        zip(want["entity_id"], want["cluster_id"])
-    )
-
-
-def test_greedy_replay_deep_path_hits_fallback_and_matches():
-    """A scan-ordered path of length 2000 has dependency depth 2000 >
-    MAX_ROUNDS(512): the sequential finish must produce the same answer
-    as the serial walk — including seeds decided INSIDE the fallback
-    absorbing later fallback nodes (the min_seed-contribution gap)."""
+def test_greedy_replay_deep_path_matches_serial_walk():
+    """A scan-ordered path of length 2000 has dependency depth 2000: every
+    member's decision waits on the one before it, so seeds decided late in
+    the walk must still absorb their later neighbors exactly as in the
+    serial walk."""
     import pandas as pd
 
     from graphrag_rs_spark.operators.canonicalize import _greedy_replay_cogroup
