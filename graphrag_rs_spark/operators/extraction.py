@@ -186,9 +186,11 @@ def entities_raw_table(extraction: DataFrame) -> DataFrame:
 
 
 def edges_raw_table(extraction: DataFrame, relationship_confidence: float = 0.5) -> DataFrame:
-    """(subj, obj, pred, confidence, context) — confidence is the config
-    default (config/mod.rs:887-889); context is the source chunk id
-    (lib.rs:530-536)."""
+    """One row per triple occurrence: (subj, obj, pred, confidence,
+    context_chunk) — confidence is the config default
+    (config/mod.rs:887-889); context_chunk is the source chunk id
+    (lib.rs:530-536). The batch build, its checkpoint and the streaming
+    workspace all keep this one shape."""
     t = extraction.select("chunk_id", F.explode("triples").alias("t"))
     return t.select(
         F.col("t.subj").alias("subj"),
@@ -196,19 +198,4 @@ def edges_raw_table(extraction: DataFrame, relationship_confidence: float = 0.5)
         F.col("t.pred").alias("pred"),
         F.lit(relationship_confidence).cast("float").alias("confidence"),
         F.col("chunk_id").alias("context_chunk"),
-    )
-
-
-def edges_partial_table(extraction: DataFrame) -> DataFrame:
-    """Pre-combined triples: one row per distinct (subj, pred, obj) with
-    its sorted distinct context chunk ids and its occurrence count.
-
-    ``edges_raw_table`` emits one row per triple OCCURRENCE; the streaming
-    workspace keeps this roll-up instead, so its state grows with distinct
-    keys, not occurrences. A JVM hash aggregate of ``edges_raw_table``;
-    ``edges_table`` accepts either shape, and merging partials
-    (streaming/ingest.py) is associative, so both give the same edges."""
-    return edges_raw_table(extraction).groupBy("subj", "pred", "obj").agg(
-        F.array_sort(F.collect_set("context_chunk")).alias("contexts"),
-        F.count(F.lit(1)).alias("n_occurrences"),
     )

@@ -45,18 +45,11 @@ def edges_table(
     edges_raw: DataFrame,
     clusters: DataFrame,
     nodes: DataFrame,
-    config: PipelineConfig | None = None,
 ) -> DataFrame:
     """Re-pointed, deduped edges whose endpoints both exist in ``nodes``:
-    edges(subj, pred, obj, confidence, context array<string>).
-
-    Accepts either shape of raw triples; only the aggregate differs:
-
-    * occurrence rows (subj, pred, obj, confidence, context_chunk) from
-      ``edges_raw_table``: max confidence, sorted distinct chunk ids;
-    * pre-combined rows (subj, pred, obj, contexts, n_occurrences) from
-      ``edges_partial_table``: the configured confidence (every occurrence
-      carries it, config/mod.rs:887-889), union of the context sets.
+    edges(subj, pred, obj, confidence, context array<string>), from the
+    occurrence rows (subj, obj, pred, confidence, context_chunk) of
+    ``edges_raw_table``: max confidence, sorted distinct chunk ids.
 
     Every node id gets a LONG code. The linkmap maps each entity to the
     code of its cluster, and each node id that is not a clustered entity
@@ -74,7 +67,6 @@ def edges_table(
     COMPUTE), so persisting it costs ~8x the recompute it saves. Callers
     who rescan ``edges`` repeatedly should checkpoint it to parquet
     (plans/checkpoint.py), which encodes arrays natively."""
-    config = config or PipelineConfig()
     tune_object_agg(edges_raw.sparkSession)
     codes = (
         nodes.select("cluster_id")
@@ -104,18 +96,6 @@ def edges_table(
         .join(encode("obj", "_ocode"), "obj")
         .where(F.col("_scode") != F.col("_ocode"))  # merged endpoints
     )
-    if "contexts" in edges_raw.columns:
-        aggs = (
-            F.lit(config.relationship_confidence).cast("float").alias("confidence"),
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("contexts")))
-            ).alias("context"),
-        )
-    else:
-        aggs = (
-            F.max("confidence").alias("confidence"),
-            F.array_sort(F.collect_set("context_chunk")).alias("context"),
-        )
 
     def decode(code: str, side: str) -> DataFrame:
         return F.broadcast(
@@ -123,7 +103,10 @@ def edges_table(
         )
 
     return (
-        coded.groupBy("_scode", "pred", "_ocode").agg(*aggs)
+        coded.groupBy("_scode", "pred", "_ocode").agg(
+            F.max("confidence").alias("confidence"),
+            F.array_sort(F.collect_set("context_chunk")).alias("context"),
+        )
         .join(decode("_scode", "subj"), "_scode")
         .join(decode("_ocode", "obj"), "_ocode")
         .select("subj", "pred", "obj", "confidence", "context")
@@ -168,12 +151,13 @@ def materialize_graph(
     ``cache_intermediate`` caches the SLIM tables that multiple consumers
     scan (nodes; the edge key table). The key table is not returned:
     callers that need to release it use ``spark.catalog.clearCache()``,
-    or compose the three steps themselves."""
+    or compose the three steps themselves. Stage F reads no setting, so
+    ``config`` is unused."""
     nodes = nodes_table(clusters, entities_raw)
     if cache_intermediate:
         # nodes feeds edges_table's code table AND the output
         nodes = nodes.cache()
-    edges = edges_table(edges_raw, clusters, nodes, config)
+    edges = edges_table(edges_raw, clusters, nodes)
     edge_keys = edges.select("subj", "pred", "obj")
     if cache_intermediate:
         edge_keys = edge_keys.cache()

@@ -169,9 +169,8 @@ def build_graph(
     entities_raw = shared(stage(
         "entities_raw", lambda: entities_raw_table(extraction), ("extraction",)
     ))
-    # occurrence rows: stage F aggregates them once; the pre-combined
-    # edges_partial_table pays an extra exchange and serves only the
-    # streaming workspace, where state size matters
+    # occurrence rows, the one raw-edge shape: stage F aggregates them
+    # once, and the streaming workspace appends the same rows
     edges_raw = stage(
         "edges_raw",
         lambda: edges_raw_table(extraction, config.relationship_confidence),
@@ -201,10 +200,9 @@ def link_graph(
     ``node_stats`` and, with ``config.semantic_edges``, ``semantic_edges``
     (else None), each staged and shared under ``rule``.
 
-    ``edges_raw`` is either shape ``edges_table`` takes: a build's
-    occurrence rows or the streaming workspace's pre-combined triples.
-    ``edges`` includes the semantic edges; ``node_stats`` counts only the
-    extracted ones.
+    ``edges_raw`` holds the occurrence rows of ``edges_raw_table``, a
+    build's or the streaming workspace's. ``edges`` includes the semantic
+    edges; ``node_stats`` counts only the extracted ones.
     """
     stage, shared = rule.stage, rule.shared
     clusters = shared(stage(
@@ -215,7 +213,7 @@ def link_graph(
     ))
     edges = stage(
         "edges",
-        lambda: edges_table(edges_raw, clusters, nodes, config),
+        lambda: edges_table(edges_raw, clusters, nodes),
         ("edges_raw", "clusters", "nodes"),
     )
     node_stats = stage(

@@ -1,22 +1,24 @@
-"""The Iceberg call contract the parquet workspace stands in for.
+"""The Iceberg call contract of the streaming workspace.
 
 This sandbox has no Iceberg runtime jar, so the streaming workspace
 (streaming/ingest.py) emulates snapshot semantics with versioned dirs +
-an atomic pointer flip. On a real cluster those call sites become
-``MERGE INTO`` + snapshot commit — and nothing in-sandbox would catch the
-two implementations drifting apart. This module pins the contract from
-both ends:
+an atomic pointer flip. On a real cluster those call sites become table
+writes + snapshot commit. Each workspace table has exactly one merge
+rule, defined here:
 
-* each :class:`MergeSpec` **generates the exact Iceberg SQL** the cluster
-  path runs (``merge_sql``), kept syntactically honest by parsing it
-  through Spark's own SQL parser in the contract test, and
-* **executes the same WHEN MATCHED / WHEN NOT MATCHED semantics** as
-  plain DataFrame ops (``apply``), which the test asserts row-equal to
-  the workspace merge functions (``merge_entities_raw`` /
-  ``merge_edges_partial``) on matched + both-unmatched fixtures.
+* ``entities_raw`` is upserted by :data:`ENTITIES_RAW_MERGE`. The one
+  :class:`MergeSpec` **generates the exact Iceberg SQL** the cluster path
+  runs (``merge_sql``), kept syntactically honest by parsing it through
+  Spark's own SQL parser in the contract test, and **executes the same
+  WHEN MATCHED / WHEN NOT MATCHED semantics** as DataFrame ops
+  (``apply``), which is what the sink runs. There is no second
+  implementation to drift from.
+* ``edges_raw`` holds one row per triple occurrence, the batch build's
+  own shape, so it is append-only: ``INSERT INTO`` on the cluster,
+  ``unionByName`` in the sink.
 
-One spec object is the single source of truth for both sides, so a future
-edit to either merge must update the spec — and the test — with it.
+:func:`workspace_ddl` declares both tables with the schemas the sink
+publishes.
 """
 
 from __future__ import annotations
@@ -87,9 +89,9 @@ class MergeSpec:
         return j.select(*cols)
 
 
-# The workspace's two raw-table merges (streaming/ingest.py:56-82), as the
-# Iceberg MERGEs a cluster deployment runs. Sources are per-batch roll-ups
-# (one row per key by construction), so single-statement MERGE is legal.
+# The workspace's entity upsert: the sink runs ``apply``, a cluster
+# deployment ``merge_sql``. The source is a per-batch roll-up (one row per
+# key by construction), so single-statement MERGE is legal.
 ENTITIES_RAW_MERGE = MergeSpec(
     target="ws.entities_raw",
     keys=("entity_id",),
@@ -99,7 +101,7 @@ ENTITIES_RAW_MERGE = MergeSpec(
             "CASE WHEN struct(s.confidence, s.name) >"
             " struct(t.confidence, t.name) THEN s.name ELSE t.name END"
         ),
-        # first(entity_type) with the existing row first
+        # the id encodes the type (rules/extraction.py::entity_id_for)
         "entity_type": "t.entity_type",
         "confidence": "greatest(t.confidence, s.confidence)",
         "mention_count": "t.mention_count + s.mention_count",
@@ -107,17 +109,6 @@ ENTITIES_RAW_MERGE = MergeSpec(
             "array_sort(array_distinct(concat(t.aliases, s.aliases)))"
         ),
         "order_key": "least(t.order_key, s.order_key)",
-    },
-)
-
-EDGES_PARTIAL_MERGE = MergeSpec(
-    target="ws.edges_raw",
-    keys=("subj", "pred", "obj"),
-    update_exprs={
-        "contexts": (
-            "array_sort(array_distinct(concat(t.contexts, s.contexts)))"
-        ),
-        "n_occurrences": "t.n_occurrences + s.n_occurrences",
     },
 )
 
@@ -130,14 +121,14 @@ def workspace_ddl(catalog: str = "ws") -> dict[str, str]:
         "entities_raw": (
             f"CREATE TABLE IF NOT EXISTS {catalog}.entities_raw (\n"
             "  entity_id string, name string, entity_type string,\n"
-            "  confidence double, mention_count bigint,\n"
-            "  aliases array<string>, order_key string\n"
+            "  confidence float, mention_count bigint, aliases array<string>,\n"
+            "  order_key struct<conv_id: string, chunk_idx: int, rank: int>\n"
             ") USING iceberg PARTITIONED BY (bucket(64, entity_id))"
         ),
         "edges_raw": (
             f"CREATE TABLE IF NOT EXISTS {catalog}.edges_raw (\n"
-            "  subj string, pred string, obj string,\n"
-            "  contexts array<string>, n_occurrences bigint\n"
+            "  subj string, obj string, pred string,\n"
+            "  confidence float, context_chunk string\n"
             ") USING iceberg PARTITIONED BY (bucket(64, subj))"
         ),
     }

@@ -11,25 +11,28 @@ StreamingImporter (pipeline/data_import.rs:604-612).
 **Exact incremental = rebuild.** Each batch runs only the EXPENSIVE narrow
 stages (assembly → chunking → extraction, with the build's extractor
 and gleaning rounds, ``plans.pipeline.extract_configured``) on the new
-conversations, then merges the extraction-level tables
-(``entities_raw`` and the pre-combined triples of ``edges_partial_table``,
-one row per distinct triple) into the workspace with associative
-aggregations (max confidence, sum mentions, min first-appearance order
-key, alias and context union). Stages D–F over the merged raw tables are
-``build_graph``'s own, ``plans.pipeline.link_graph``: canonicalization,
-nodes, edges (the pre-combined rows go through the same re-point join as
-a batch build's occurrence rows), node stats and, when configured, the
-semantic-similarity edges. Because the raw-table merge is associative,
-the greedy replay orders by the global first-appearance key and the
-linking code is the build's, the workspace after N batches is IDENTICAL
-to a single batch build over the unioned transcripts — verified by
+conversations, then merges the extraction-level tables into the
+workspace, one rule per table: ``edges_raw`` appends the batch's
+occurrence rows (``edges_raw_table``, the build's own raw-edge shape),
+and ``entities_raw`` is upserted by
+``sources.iceberg_contract.ENTITIES_RAW_MERGE`` (max confidence, sum
+mentions, min first-appearance order key, alias union), the same spec
+the cluster renders as ``MERGE INTO``. Stages D–F over the merged raw
+tables are ``build_graph``'s own, ``plans.pipeline.link_graph``:
+canonicalization, nodes, edges, node stats and, when configured, the
+semantic-similarity edges. Because the entity upsert is associative,
+the appended edges are exactly the union's occurrence rows, the greedy
+replay orders by the global first-appearance key and the linking code
+is the build's, the workspace after N batches is IDENTICAL to a single
+batch build over the unioned transcripts — verified by
 tests/test_streaming_ingest.py. This mirrors the reference's incremental
 claim ("10× faster than rebuild") honestly: extraction is incremental;
 linking re-runs on the (much smaller) entity roll-up.
 
-At cluster scale the sink tables are Iceberg (``MERGE INTO`` + snapshot
-commit); here the state store is a parquet workspace swapped atomically
-per batch (same call sites, SURVEY.md §4.3).
+At cluster scale the sink tables are Iceberg (``MERGE INTO`` for the
+entities, ``INSERT INTO`` for the edges, + snapshot commit); here the
+state store is a parquet workspace swapped atomically per batch (same
+call sites, SURVEY.md §4.3).
 """
 
 from __future__ import annotations
@@ -37,7 +40,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from graphrag_rs_spark.config import PipelineConfig
 
@@ -58,34 +60,6 @@ def read_transcript_stream(
     return reader.parquet(input_dir)
 
 
-def merge_edges_partial(old: DataFrame, new: DataFrame) -> DataFrame:
-    """Associative merge of pre-combined triple partials (contexts union,
-    occurrence sum) — batch-merge ≡ global build."""
-    both = old.unionByName(new)
-    return both.groupBy("subj", "pred", "obj").agg(
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list("contexts")))
-        ).alias("contexts"),
-        F.sum("n_occurrences").alias("n_occurrences"),
-    )
-
-
-def merge_entities_raw(old: DataFrame, new: DataFrame) -> DataFrame:
-    """Associative re-aggregation of per-batch entity roll-ups — the same
-    functions ``entities_raw_table`` uses, so batch-merge ≡ global build."""
-    both = old.unionByName(new)
-    return both.groupBy("entity_id").agg(
-        F.max_by("name", F.struct("confidence", "name")).alias("name"),
-        F.first("entity_type").alias("entity_type"),
-        F.max("confidence").alias("confidence"),
-        F.sum("mention_count").alias("mention_count"),
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list("aliases")))
-        ).alias("aliases"),
-        F.min("order_key").alias("order_key"),
-    )
-
-
 class IncrementalGraphSink:
     """foreachBatch sink: extraction on the delta only; ``build_graph``'s
     stages D–F (``plans.pipeline.link_graph``) re-run over the merged raw
@@ -103,11 +77,11 @@ class IncrementalGraphSink:
       partially-swapped raw/derived mix);
     * ``process_batch`` consults ``CURRENT`` first and SKIPS any batch id
       it has already published, so a replayed batch cannot double-merge
-      mention counts / occurrence sums.
+      mention counts or append its edge occurrences twice.
 
     This is the parquet-workspace analogue of an Iceberg snapshot commit
     (single atomic metadata pointer flip); at cluster scale the same call
-    sites become ``MERGE INTO`` + snapshot commit.
+    sites become ``MERGE INTO`` / ``INSERT INTO`` + snapshot commit.
 
     For convenience (and test/backward compatibility) the published tables
     are also exposed at stable top-level paths via symlinks to the current
@@ -222,10 +196,11 @@ class IncrementalGraphSink:
         from graphrag_rs_spark.operators.assembly import assemble_documents
         from graphrag_rs_spark.operators.chunking import chunk_documents
         from graphrag_rs_spark.operators.extraction import (
-            edges_partial_table,
+            edges_raw_table,
             entities_raw_table,
         )
         from graphrag_rs_spark.plans.pipeline import extract_configured, link_graph
+        from graphrag_rs_spark.sources.iceberg_contract import ENTITIES_RAW_MERGE
 
         spark = batch_df.sparkSession
         # delta-only narrow stages (the expensive part)
@@ -234,24 +209,19 @@ class IncrementalGraphSink:
         )
         chunks = chunk_documents(documents, self.config)
         extraction = rule.shared(extract_configured(chunks, self.config))
-        new_entities = entities_raw_table(extraction)
-        new_edges_raw = edges_partial_table(extraction)
+        entities_raw = entities_raw_table(extraction)
+        edges_raw = edges_raw_table(extraction, self.config.relationship_confidence)
 
         old_entities = self._read_existing(spark, "entities_raw")
+        if old_entities is not None:
+            entities_raw = ENTITIES_RAW_MERGE.apply(old_entities, entities_raw)
         old_edges_raw = self._read_existing(spark, "edges_raw")
-        # eager localCheckpoint cuts lineage from the current version's
-        # files — publishing the next version must not invalidate any plan
-        # that still reads them
-        entities_raw = (
-            merge_entities_raw(old_entities, new_entities)
-            if old_entities is not None
-            else new_entities
-        ).localCheckpoint(eager=True)
-        edges_raw = (
-            merge_edges_partial(old_edges_raw, new_edges_raw)
-            if old_edges_raw is not None
-            else new_edges_raw
-        ).localCheckpoint(eager=True)
+        if old_edges_raw is not None:
+            edges_raw = old_edges_raw.unionByName(edges_raw)
+        # canonicalization and nodes_table both read the merged entities:
+        # materialize them once. The edges stay lazy: every read of the
+        # current version's edge files runs before _publish deletes it
+        entities_raw = entities_raw.localCheckpoint(eager=True)
 
         # global re-link + materialize over the merged roll-ups: the
         # build's own stages D–F

@@ -32,7 +32,7 @@ import time
 from pyspark.sql import SparkSession
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--input-format", default="parquet",
@@ -44,17 +44,44 @@ def main() -> None:
                          "schema + [spark] section); CLI flags override it")
     # None sentinels (not the real defaults) so an EXPLICIT flag is
     # distinguishable from an untouched one — `--chunk-size 1000` must
-    # override a config file even though 1000 is also the default
-    ap.add_argument("--chunk-size", type=int, default=None,
-                    help="default 1000")
-    ap.add_argument("--chunk-overlap", type=int, default=None,
-                    help="default 200")
-    ap.add_argument("--gleaning-rounds", type=int, default=None,
-                    help="default 1")
+    # override a config file even though 1000 is also the default; an
+    # untouched flag keeps the file's value, else PipelineConfig's
+    ap.add_argument("--chunk-size", type=int, default=None)
+    ap.add_argument("--chunk-overlap", type=int, default=None)
+    ap.add_argument("--gleaning-rounds", type=int, default=None)
     ap.add_argument("--semantic-edges", action="store_true")
     ap.add_argument("--shuffle-partitions", type=int, default=0,
                     help="0 = leave spark-submit / AQE defaults")
-    args = ap.parse_args()
+    return ap.parse_args(argv)
+
+
+def build_config(args: argparse.Namespace):
+    """The ``--config`` file's PipelineConfig (the defaults without one),
+    with every explicitly passed flag applied on top."""
+    from dataclasses import replace
+
+    from graphrag_rs_spark.config import PipelineConfig
+    from graphrag_rs_spark.config_loader import load_config
+
+    base = load_config(args.config) if args.config else PipelineConfig()
+    overrides = {
+        field: getattr(args, flag)
+        for flag, field in [
+            ("chunk_size", "chunk_size"),
+            ("chunk_overlap", "chunk_overlap"),
+            ("gleaning_rounds", "max_gleaning_rounds"),
+        ]
+        if getattr(args, flag) is not None
+    }
+    if args.semantic_edges:
+        overrides["semantic_edges"] = True
+    if args.shuffle_partitions:
+        overrides["shuffle_partitions"] = args.shuffle_partitions
+    return replace(base, **overrides)
+
+
+def main() -> None:
+    args = parse_args()
 
     builder = SparkSession.builder.appName("graphrag-rs-spark-build")
     builder = builder.config("spark.sql.adaptive.enabled", "true")
@@ -65,44 +92,10 @@ def main() -> None:
         )
     spark = builder.getOrCreate()
 
-    from graphrag_rs_spark.config import PipelineConfig
     from graphrag_rs_spark.plans.pipeline import build_graph
     from graphrag_rs_spark.sources.registry import read_table, save_graph_workspace
 
-    if args.config:
-        from dataclasses import replace
-
-        from graphrag_rs_spark.config_loader import load_config
-
-        base = load_config(args.config)
-        # explicit CLI flags override the file; untouched flags (None
-        # sentinel) defer to the file's values
-        overrides = {}
-        for flag, field in [
-            ("chunk_size", "chunk_size"),
-            ("chunk_overlap", "chunk_overlap"),
-            ("gleaning_rounds", "max_gleaning_rounds"),
-        ]:
-            if getattr(args, flag) is not None:
-                overrides[field] = getattr(args, flag)
-        if args.semantic_edges:
-            overrides["semantic_edges"] = True
-        if args.shuffle_partitions:
-            overrides["shuffle_partitions"] = args.shuffle_partitions
-        config = replace(base, **overrides)
-    else:
-        config = PipelineConfig(
-            chunk_size=args.chunk_size if args.chunk_size is not None else 1000,
-            chunk_overlap=(
-                args.chunk_overlap if args.chunk_overlap is not None else 200
-            ),
-            max_gleaning_rounds=(
-                args.gleaning_rounds if args.gleaning_rounds is not None else 1
-            ),
-            semantic_edges=args.semantic_edges,
-            shuffle_partitions=args.shuffle_partitions or 200,
-        )
-
+    config = build_config(args)
     transcripts = read_table(spark, args.input, args.input_format)
     t0 = time.perf_counter()
     tables = build_graph(

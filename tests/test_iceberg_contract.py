@@ -5,23 +5,24 @@ round-trip)."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from graphrag_rs_spark.config import PipelineConfig
+from graphrag_rs_spark.fixtures import transcripts_df
 from graphrag_rs_spark.sources.iceberg_contract import (
-    EDGES_PARTIAL_MERGE,
     ENTITIES_RAW_MERGE,
     snapshot_rollback_call,
     sql_parses,
     workspace_ddl,
 )
-from graphrag_rs_spark.streaming.ingest import (
-    merge_edges_partial,
-    merge_entities_raw,
-)
+from graphrag_rs_spark.streaming.ingest import IncrementalGraphSink
 
 
 def test_all_pinned_statements_parse_as_spark_sql(spark):
     stmts = [
         ENTITIES_RAW_MERGE.merge_sql(),
-        EDGES_PARTIAL_MERGE.merge_sql(),
+        # edges_raw holds occurrence rows: a batch appends, never merges
+        "INSERT INTO ws.edges_raw SELECT * FROM batch_source",
         snapshot_rollback_call("ws.entities_raw", 1234567890),
         *workspace_ddl().values(),
     ]
@@ -33,72 +34,68 @@ def test_all_pinned_statements_parse_as_spark_sql(spark):
 
 def _entities(spark, rows):
     return spark.createDataFrame(
-        rows,
+        [(*r[:6], {"conv_id": r[6], "chunk_idx": r[7], "rank": r[8]})
+         for r in rows],
         "entity_id string, name string, entity_type string, "
-        "confidence double, mention_count bigint, aliases array<string>, "
-        "order_key string",
+        "confidence float, mention_count bigint, aliases array<string>, "
+        "order_key struct<conv_id: string, chunk_idx: int, rank: int>",
     )
 
 
-def test_entities_merge_spec_matches_workspace_merge(spark):
+def test_entities_merge_spec_semantics(spark):
     old = _entities(spark, [
         # matched, target wins name (higher confidence)
-        ("E1", "Alice Cooper", "PERSON", 0.9, 3, ["Alice"], "b"),
+        ("E1", "Alice Cooper", "PERSON", 0.9, 3, ["Alice"], "c2", 0, 1),
         # target-only row must pass through
-        ("E2", "Acme Corp", "ORGANIZATION", 0.8, 1, [], "a"),
+        ("E2", "Acme Corp", "ORGANIZATION", 0.8, 1, [], "c1", 0, 0),
     ])
     new = _entities(spark, [
-        # matched, source wins name (higher confidence), aliases union
-        ("E1", "Alice M Cooper", "PERSON", 0.95, 2, ["A. Cooper"], "a"),
+        # matched, source wins name (higher confidence), aliases union,
+        # and its order key is earlier on the second struct field
+        ("E1", "Alice M Cooper", "PERSON", 0.95, 2, ["A. Cooper"], "c2", 0, 0),
         # source-only row must insert
-        ("E3", "Berlin", "LOCATION", 0.7, 5, ["BER"], "c"),
+        ("E3", "Berlin", "LOCATION", 0.7, 5, ["BER"], "c3", 1, 0),
     ])
-    def canon(df):
-        return {
-            (r[0], r[1], r[2], r[3], r[4], tuple(r[5]), r[6])
-            for r in df.collect()
-        }
-
-    want = canon(merge_entities_raw(old, new))
-    got = canon(ENTITIES_RAW_MERGE.apply(old, new))
-    assert got == want
-    # spot-check the semantics themselves, not just agreement
-    by_id = {r[0]: r for r in got}
-    assert by_id["E1"][1] == "Alice M Cooper"      # max_by(confidence)
-    assert by_id["E1"][3] == 0.95                  # greatest
-    assert by_id["E1"][4] == 5                     # summed mentions
-    assert by_id["E1"][5] == ("A. Cooper", "Alice")  # sorted union
-    assert by_id["E1"][6] == "a"                   # least order_key
-    assert "E2" in by_id and "E3" in by_id
-
-
-def _edges(spark, rows):
-    return spark.createDataFrame(
-        rows,
-        "subj string, pred string, obj string, contexts array<string>, "
-        "n_occurrences bigint",
-    )
-
-
-def test_edges_merge_spec_matches_workspace_merge(spark):
-    old = _edges(spark, [
-        ("A", "KNOWS", "B", ["c1", "c2"], 4),
-        ("A", "KNOWS", "C", ["c1"], 1),
-    ])
-    new = _edges(spark, [
-        ("A", "KNOWS", "B", ["c2", "c3"], 2),
-        ("X", "WORKS_AT", "Y", ["c9"], 7),
-    ])
-    want = {
-        (r[0], r[1], r[2], tuple(r[3]), r[4])
-        for r in merge_edges_partial(old, new).collect()
+    by_id = {
+        r["entity_id"]: r for r in ENTITIES_RAW_MERGE.apply(old, new).collect()
     }
-    got = {
-        (r[0], r[1], r[2], tuple(r[3]), r[4])
-        for r in EDGES_PARTIAL_MERGE.apply(old, new).collect()
-    }
-    assert got == want
-    assert ("A", "KNOWS", "B", ("c1", "c2", "c3"), 6) in got
+    e1 = by_id["E1"]
+    assert e1["name"] == "Alice M Cooper"          # max_by(confidence)
+    assert abs(e1["confidence"] - 0.95) < 1e-6     # greatest
+    assert e1["mention_count"] == 5                # summed mentions
+    assert e1["aliases"] == ["A. Cooper", "Alice"]  # sorted union
+    assert tuple(e1["order_key"]) == ("c2", 0, 0)  # least order_key
+    assert by_id["E2"]["name"] == "Acme Corp"      # target-only
+    assert tuple(by_id["E3"]["order_key"]) == ("c3", 1, 0)  # source-only
+    assert set(by_id) == {"E1", "E2", "E3"}
+
+
+def test_ddl_matches_published_workspace(spark, tmp_path):
+    """The DDL declares the columns and types the sink publishes, after the
+    first batch and after a merged one."""
+    ddl = workspace_ddl()
+
+    def declared(name):
+        sql = ddl[name]
+        cols = sql[sql.index("(\n") + 2:sql.index("\n) USING")]
+        return [
+            (f.name, f.dataType.simpleString())
+            for f in spark.createDataFrame([], cols).schema
+        ]
+
+    sink = IncrementalGraphSink(str(tmp_path / "ws"), PipelineConfig())
+    drops = [
+        transcripts_df(spark, 4, seed=5),
+        transcripts_df(spark, 4, seed=9).withColumn(
+            "conv_id", F.concat(F.lit("y"), F.col("conv_id"))
+        ),
+    ]
+    for batch_id, drop in enumerate(drops):
+        sink.process_batch(drop, batch_id=batch_id)
+        for name in ("entities_raw", "edges_raw"):
+            published = spark.read.parquet(str(tmp_path / "ws" / name)).schema
+            got = [(f.name, f.dataType.simpleString()) for f in published]
+            assert got == declared(name), (batch_id, name)
 
 
 def test_null_keys_follow_merge_sql_semantics(spark):
@@ -108,15 +105,15 @@ def test_null_keys_follow_merge_sql_semantics(spark):
     # own values (apply() must not pair them via null-safe equality,
     # and must not blank the target row's columns)
     old = _entities(spark, [
-        (None, "Ghost T", "PERSON", 0.9, 3, ["gt"], "b"),
-        ("E1", "Alice", "PERSON", 0.8, 1, [], "a"),
+        (None, "Ghost T", "PERSON", 0.9, 3, ["gt"], "b", 0, 0),
+        ("E1", "Alice", "PERSON", 0.8, 1, [], "a", 0, 0),
     ])
     new = _entities(spark, [
-        (None, "Ghost S", "PERSON", 0.5, 7, ["gs"], "c"),
+        (None, "Ghost S", "PERSON", 0.5, 7, ["gs"], "c", 0, 0),
     ])
     got = sorted(
         [
-            (r[0], r[1], r[3], r[4], tuple(r[5]))
+            (r[0], r[1], round(r[3], 6), r[4], tuple(r[5]))
             for r in ENTITIES_RAW_MERGE.apply(old, new).collect()
         ],
         key=str,
@@ -134,7 +131,4 @@ def test_merge_sql_carries_every_non_key_column(spark):
     sql = ENTITIES_RAW_MERGE.merge_sql()
     for col in ("name", "entity_type", "confidence", "mention_count",
                 "aliases", "order_key"):
-        assert f"{col} =" in sql
-    sql = EDGES_PARTIAL_MERGE.merge_sql()
-    for col in ("contexts", "n_occurrences"):
         assert f"{col} =" in sql

@@ -1,7 +1,6 @@
 """edges_table: the int-coded re-point/integrity join must be row-identical
-to a plain string-keyed reference on ANY input, in both raw-triple shapes
-(occurrence rows and pre-combined partials), including foreign inputs the
-pipeline never produces:
+to a plain string-keyed reference on ANY occurrence rows, including
+foreign inputs the pipeline never produces:
 
 * endpoints absent from the cluster linkmap (kept as their own id, so
   they survive only when that id is a node),
@@ -18,14 +17,13 @@ pipeline never produces:
 
 ``materialize_graph`` derives its stats key table from ``edges``; its
 node stats must equal degrees and communities recomputed from the
-reference key set, for both raw-triple input shapes.
+reference key set.
 """
 
 from __future__ import annotations
 
 from collections import Counter
 
-import pytest
 from pyspark.sql import functions as F
 
 from graphrag_rs_spark.config import PipelineConfig
@@ -34,7 +32,6 @@ from graphrag_rs_spark.operators.assembly import assemble_documents
 from graphrag_rs_spark.operators.canonicalize import canonicalize_entities
 from graphrag_rs_spark.operators.chunking import chunk_documents
 from graphrag_rs_spark.operators.extraction import (
-    edges_partial_table,
     edges_raw_table,
     entities_raw_table,
     extract_chunks,
@@ -42,7 +39,7 @@ from graphrag_rs_spark.operators.extraction import (
 from graphrag_rs_spark.operators.materialize import edges_table, materialize_graph
 
 
-def reference_edges(edges_raw, clusters, nodes, relationship_confidence=0.5):
+def reference_edges(edges_raw, clusters, nodes):
     """String-keyed stage F: left-join re-point (an endpoint with no
     non-NULL cluster keeps its raw string), drop NULL endpoints and
     self-loops, group on the strings, then keep edges whose endpoints are
@@ -56,21 +53,12 @@ def reference_edges(edges_raw, clusters, nodes, relationship_confidence=0.5):
     repointed = repoint(repoint(edges_raw, "subj"), "obj").where(
         F.col("subj") != F.col("obj")
     )
-    if "contexts" in edges_raw.columns:
-        aggs = (
-            F.lit(relationship_confidence).cast("float").alias("confidence"),
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("contexts")))
-            ).alias("context"),
-        )
-    else:
-        aggs = (
+    node_ids = nodes.select("cluster_id")
+    return (
+        repointed.groupBy("subj", "pred", "obj").agg(
             F.max("confidence").alias("confidence"),
             F.array_sort(F.collect_set("context_chunk")).alias("context"),
         )
-    node_ids = nodes.select("cluster_id")
-    return (
-        repointed.groupBy("subj", "pred", "obj").agg(*aggs)
         .join(node_ids.withColumnRenamed("cluster_id", "subj"), "subj", "left_semi")
         .join(node_ids.withColumnRenamed("cluster_id", "obj"), "obj", "left_semi")
     )
@@ -84,44 +72,28 @@ def _rows(df):
     )
 
 
-def _run_both(spark, edges_rows, cluster_rows, node_ids=None):
-    """Coded vs reference rows for both raw-triple shapes; asserts they
-    are equal and returns the occurrence-shape rows. ``node_ids``
-    defaults to the distinct cluster ids."""
+def _coded_rows(spark, edges_rows, cluster_rows, node_ids=None):
+    """Coded vs reference rows; asserts they are equal and returns them.
+    ``node_ids`` defaults to the distinct cluster ids."""
     if node_ids is None:
         node_ids = sorted({c for _, c in cluster_rows if c is not None})
     clusters = spark.createDataFrame(
         cluster_rows, "entity_id string, cluster_id string"
     )
     nodes = spark.createDataFrame([(n,) for n in node_ids], "cluster_id string")
-    occurrences = spark.createDataFrame(
+    edges_raw = spark.createDataFrame(
         edges_rows,
         "subj string, pred string, obj string, confidence double, "
         "context_chunk string",
     )
-    # one partial per occurrence: the merge must union their contexts
-    partials = spark.createDataFrame(
-        [(s, p, o, [c], 1) for s, p, o, _, c in edges_rows],
-        "subj string, pred string, obj string, contexts array<string>, "
-        "n_occurrences long",
-    )
-    got = {}
-    for shape, edges_raw in (("occurrences", occurrences), ("partials", partials)):
-        ref = _rows(reference_edges(edges_raw, clusters, nodes))
-        coded = _rows(edges_table(edges_raw, clusters, nodes))
-        assert ref == coded, shape
-        got[shape] = coded
-    # same keys and contexts; partials carry the configured confidence
-    assert [r[:3] + r[4:] for r in got["occurrences"]] == [
-        r[:3] + r[4:] for r in got["partials"]
-    ]
-    assert {r[3] for r in got["partials"]} <= {0.5}
-    return got["occurrences"]
+    coded = _rows(edges_table(edges_raw, clusters, nodes))
+    assert coded == _rows(reference_edges(edges_raw, clusters, nodes))
+    return coded
 
 
 class TestIntCodedPathParity:
     def test_pipeline_shaped_input(self, spark):
-        ref = _run_both(
+        ref = _coded_rows(
             spark,
             [
                 ("e1", "knows", "e2", 0.9, "c1"),
@@ -137,7 +109,7 @@ class TestIntCodedPathParity:
         ]
 
     def test_unmapped_and_null_endpoints(self, spark):
-        ref = _run_both(
+        ref = _coded_rows(
             spark,
             [
                 ("ghost", "knows", "e2", 0.9, "c1"),   # subj unmapped node
@@ -156,7 +128,7 @@ class TestIntCodedPathParity:
         # String grouping puts a raw "CLU" endpoint WITH rows decoded to
         # "CLU" (one output row, contexts unioned) and drops the decoded
         # self-loop (e1 -> raw CLU repoints to CLU -> CLU).
-        ref = _run_both(
+        ref = _coded_rows(
             spark,
             [
                 ("e1", "knows", "e2", 0.9, "c1"),    # CLU -> e2
@@ -171,7 +143,7 @@ class TestIntCodedPathParity:
         # Foreign input where cluster_id "X" also exists as an entity_id
         # mapped to a DIFFERENT cluster "Y": the given mapping must win
         # and no duplicate linkmap rows may fan the join out.
-        ref = _run_both(
+        ref = _coded_rows(
             spark,
             [
                 ("X", "knows", "e2", 0.9, "c1"),
@@ -189,7 +161,7 @@ class TestIntCodedPathParity:
         # it stands for itself; e5's NULL row is ignored beside its e2 row;
         # e7 has only a NULL cluster and is not a node. The NULL node id
         # (a NULL cluster_id group in nodes) never becomes an endpoint.
-        ref = _run_both(
+        ref = _coded_rows(
             spark,
             [
                 ("e1", "knows", "e3", 0.9, "c1"),
@@ -210,7 +182,7 @@ class TestIntCodedPathParity:
     def test_cluster_outside_nodes(self, spark):
         # e2's cluster K is not a node: every edge touching e2, or a raw
         # "K" endpoint, is dropped by integrity
-        ref = _run_both(
+        ref = _coded_rows(
             spark,
             [
                 ("e1", "knows", "e2", 0.9, "c1"),
@@ -225,7 +197,7 @@ class TestIntCodedPathParity:
     def test_entity_in_two_clusters(self, spark):
         # e1 is listed under clusters A and B: each edge fans out to
         # both, and the fan-out to its own cluster is a self-loop
-        ref = _run_both(
+        ref = _coded_rows(
             spark,
             [
                 ("e1", "knows", "e2", 0.9, "c1"),
@@ -264,24 +236,19 @@ def _expected_node_stats(node_ids, keys):
     return sorted((n, degree[n], root[n], size[root[n]]) for n in node_ids)
 
 
-@pytest.mark.parametrize("table", ["edges_raw_table", "edges_partial_table"])
-def test_node_stats_match_reference_key_set(spark, table):
+def test_node_stats_match_reference_key_set(spark):
     cfg = PipelineConfig()
     docs = assemble_documents(transcripts_df(spark, 8, seed=5))
     extraction = extract_chunks(chunk_documents(docs, cfg), cfg).cache()
     entities_raw = entities_raw_table(extraction)
     clusters = canonicalize_entities(entities_raw, cfg).cache()
-    occurrences = edges_raw_table(extraction, cfg.relationship_confidence)
-    edges_raw = (
-        occurrences if table == "edges_raw_table"
-        else edges_partial_table(extraction)
-    )
+    edges_raw = edges_raw_table(extraction, cfg.relationship_confidence)
 
     nodes, edges, node_stats = materialize_graph(
         edges_raw, clusters, entities_raw, cfg, cache_intermediate=True
     )
     node_ids = {r["cluster_id"] for r in nodes.collect()}
-    reference = reference_edges(occurrences, clusters, nodes).collect()
+    reference = reference_edges(edges_raw, clusters, nodes).collect()
     expected = _expected_node_stats(
         node_ids, [(r["subj"], r["pred"], r["obj"]) for r in reference]
     )

@@ -96,6 +96,54 @@ def test_triple_precision_recall(built):
     assert r >= 0.95, f"recall {r:.4f} < 0.95 ({len(got)} vs {len(oracle.triples)})"
 
 
+def _odd_turn_rows():
+    """A small generated corpus with one odd turn shape per conversation:
+    a NULL turn, an empty turn, a duplicated (conv_id, turn_idx), a turn
+    gap, and one more conversation of a single turn."""
+    rows = generate_transcripts(6, seed=11)
+    convs = sorted({r["conv_id"] for r in rows})
+    turns = {c: [r for r in rows if r["conv_id"] == c] for c in convs}
+    turns[convs[0]][1]["text"] = None
+    turns[convs[1]][1]["text"] = ""
+    dup = dict(turns[convs[2]][2], text=turns[convs[5]][0]["text"])
+    for r in turns[convs[3]][2:]:
+        r["turn_idx"] += 10
+    single = dict(turns[convs[4]][0], conv_id="single", turn_idx=0)
+    return [*rows, dup, single]
+
+
+def test_odd_turns_through_full_build_match_oracle(spark):
+    """Odd input has defined results through the whole build: chunks and
+    entities equal the oracle's, and triple P/R clears 0.95."""
+    from graphrag_rs_spark.fixtures import TRANSCRIPT_SCHEMA
+
+    rows = _odd_turn_rows()
+    config = PipelineConfig()
+    tables = build_graph(spark, spark.createDataFrame(rows, TRANSCRIPT_SCHEMA), config)
+    oracle = run_oracle(rows, config)
+
+    got_chunks = {
+        (r["chunk_id"], r["text"], r["start"], r["end"])
+        for r in tables["chunks"].collect()
+    }
+    assert got_chunks == {
+        (c["chunk_id"], c["text"], c["start"], c["end"]) for c in oracle.chunks
+    }
+    assert any(c[0].startswith("single_") for c in got_chunks)
+    got_entities = {
+        r["entity_id"]: (r["entity_type"], round(r["confidence"], 5),
+                         r["mention_count"])
+        for r in tables["entities_raw"].collect()
+    }
+    assert got_entities == {
+        eid: (e["entity_type"], round(e["confidence"], 5), e["mention_count"])
+        for eid, e in oracle.entities.items()
+    }
+    got = {(r["subj"], r["pred"], r["obj"]) for r in tables["edges"].collect()}
+    p, r = precision_recall(got, oracle.triples)
+    assert got and p >= 0.95 and r >= 0.95, (p, r)
+
+
 def test_triple_precision_recall_at_benched_blocking_config(spark):
     """bench.py runs ``min_shared_blocks=2`` (the documented large-corpus
     blocking setting); the parity fixture above runs the full-recall

@@ -79,3 +79,44 @@ def test_spark_submit_py_files(tmp_path):
     assert result["n_nodes"] > 0 and result["n_edges"] > 0
     for sub in ("entities", "relationships", "chunks", "documents", "node_stats"):
         assert (out_dir / sub).exists(), f"missing workspace table {sub}"
+
+
+def _build_job():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "build_job", os.path.join(REPO, "scripts", "build_job.py")
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+def test_build_job_has_one_config_path(tmp_path):
+    """Without --config the job builds on PipelineConfig's defaults, as an
+    empty config file does; an explicit flag overrides a file value."""
+    from graphrag_rs_spark.config import PipelineConfig
+
+    job = _build_job()
+    io = ["--input", "in", "--output", "out"]
+    empty = tmp_path / "empty.toml"
+    empty.write_text("")
+    assert (
+        job.build_config(job.parse_args(io))
+        == job.build_config(job.parse_args([*io, "--config", str(empty)]))
+        == PipelineConfig()
+    )
+
+    conf = tmp_path / "kg.toml"
+    conf.write_text(
+        "[text_processing]\nchunk_size = 700\nchunk_overlap = 50\n"
+        "[spark]\nshuffle_partitions = 12\n"
+    )
+    from_file = job.build_config(job.parse_args([*io, "--config", str(conf)]))
+    assert (from_file.chunk_size, from_file.chunk_overlap) == (700, 50)
+    assert from_file.shuffle_partitions == 12
+    flagged = job.build_config(job.parse_args(
+        [*io, "--config", str(conf), "--chunk-size", "1000"]
+    ))
+    assert (flagged.chunk_size, flagged.chunk_overlap) == (1000, 50)
+    assert flagged.shuffle_partitions == 12

@@ -1,4 +1,4 @@
-"""Structured Streaming incremental ingest: two file drops → two
+"""Structured Streaming incremental ingest: three file drops → three
 micro-batches → merged workspace equals the batch build over the union
 (the reference's incremental-equals-rebuild invariant,
 examples/MULTI_DOCUMENT_PIPELINE.md semantics)."""
@@ -36,44 +36,51 @@ def test_incremental_ingest_matches_union(spark, tmp_path, cfg):
     in_dir = tmp_path / "in"
     os.makedirs(in_dir)
 
-    batch1 = transcripts_df(spark, 10, seed=1)
-    batch2 = transcripts_df(spark, 10, seed=99)
-    # distinct conv ids per drop so the two batches are disjoint docs
-    batch2 = batch2.withColumn(
-        "conv_id", F.concat(F.lit("x"), F.col("conv_id"))
-    )
-
-    batch1.write.mode("overwrite").parquet(str(in_dir / "drop1"))
-    run_incremental_ingest(
-        spark, str(in_dir) + "/*", str(tmp_path / "ws"), str(tmp_path / "ckpt"), cfg
-    )
-    batch2.write.mode("overwrite").parquet(str(in_dir / "drop2"))
-    run_incremental_ingest(
-        spark, str(in_dir) + "/*", str(tmp_path / "ws"), str(tmp_path / "ckpt"), cfg
-    )
-
-    inc_nodes = spark.read.parquet(str(tmp_path / "ws" / "entities"))
-    inc_edges = spark.read.parquet(str(tmp_path / "ws" / "relationships"))
+    # distinct conv ids per drop so the three batches are disjoint docs
+    drops = [
+        transcripts_df(spark, 10, seed=seed).withColumn(
+            "conv_id", F.concat(F.lit(prefix), F.col("conv_id"))
+        )
+        for seed, prefix in ((1, ""), (99, "x"), (7, "z"))
+    ]
+    for i, drop in enumerate(drops):
+        drop.write.mode("overwrite").parquet(str(in_dir / f"drop{i}"))
+        run_incremental_ingest(
+            spark, str(in_dir) + "/*", str(tmp_path / "ws"),
+            str(tmp_path / "ckpt"), cfg,
+        )
 
     from graphrag_rs_spark.plans.pipeline import build_graph
 
-    full = build_graph(spark, batch1.unionByName(batch2), cfg)
+    union = drops[0].unionByName(drops[1]).unionByName(drops[2])
+    full = build_graph(spark, union, cfg)
 
-    # raw-table merge is associative and the greedy replay orders by the
-    # global first-appearance key, so incremental must equal rebuild EXACTLY
-    inc_ids = {r["cluster_id"] for r in inc_nodes.select("cluster_id").collect()}
-    full_ids = {r["cluster_id"] for r in full["nodes"].select("cluster_id").collect()}
-    assert inc_ids == full_ids
+    # the entity upsert is associative, the edge table is the union's
+    # occurrence rows and the greedy replay orders by the global
+    # first-appearance key, so incremental must equal rebuild EXACTLY,
+    # row for row
+    def node_rows(df):
+        return sorted(
+            (r["cluster_id"], r["name"], r["entity_type"],
+             round(r["confidence"], 6), r["mention_count"],
+             r["member_count"], tuple(r["aliases"]))
+            for r in df.collect()
+        )
 
-    inc_triples = {
-        (r["subj"], r["pred"], r["obj"])
-        for r in inc_edges.select("subj", "pred", "obj").collect()
-    }
-    full_triples = {
-        (r["subj"], r["pred"], r["obj"])
-        for r in full["edges"].select("subj", "pred", "obj").collect()
-    }
-    assert inc_triples == full_triples
+    def edge_rows(df):
+        return sorted(
+            (r["subj"], r["pred"], r["obj"], round(r["confidence"], 6),
+             tuple(r["context"]))
+            for r in df.collect()
+        )
+
+    def workspace(name):
+        return spark.read.parquet(str(tmp_path / "ws" / name))
+
+    inc_nodes = node_rows(workspace("entities"))
+    assert inc_nodes and inc_nodes == node_rows(full["nodes"])
+    inc_edges = edge_rows(workspace("relationships"))
+    assert inc_edges and inc_edges == edge_rows(full["edges"])
 
 
 def test_replayed_batch_is_skipped(spark, tmp_path):
