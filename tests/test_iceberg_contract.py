@@ -5,10 +5,21 @@ round-trip)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from graphrag_rs_spark.config import PipelineConfig
 from graphrag_rs_spark.fixtures import transcripts_df
+from graphrag_rs_spark.operators.assembly import assemble_documents
+from graphrag_rs_spark.operators.chunking import chunk_documents
+from graphrag_rs_spark.operators.extraction import (
+    edges_raw_table,
+    entities_raw_table,
+)
+from graphrag_rs_spark.plans.pipeline import extract_configured
 from graphrag_rs_spark.sources.iceberg_contract import (
     ENTITIES_RAW_MERGE,
     snapshot_rollback_call,
@@ -70,7 +81,76 @@ def test_entities_merge_spec_semantics(spark):
     assert set(by_id) == {"E1", "E2", "E3"}
 
 
-def test_ddl_matches_published_workspace(spark, tmp_path):
+@pytest.fixture(scope="module")
+def published(spark, tmp_path_factory):
+    """Runs the sink over two disjoint drops. Per batch: the drop, and the
+    schema and rows of each raw table the sink published (a version's
+    files are deleted when the next one is published, so rows are
+    collected at once)."""
+    ws = tmp_path_factory.mktemp("iceberg_contract") / "ws"
+    sink = IncrementalGraphSink(str(ws), PipelineConfig())
+    drops = [
+        transcripts_df(spark, 4, seed=5),
+        transcripts_df(spark, 4, seed=9).withColumn(
+            "conv_id", F.concat(F.lit("y"), F.col("conv_id"))
+        ),
+    ]
+    batches = []
+    for batch_id, drop in enumerate(drops):
+        sink.process_batch(drop, batch_id=batch_id)
+        tables = {}
+        for name in ("entities_raw", "edges_raw"):
+            df = spark.read.parquet(str(ws / name))
+            tables[name] = (df.schema, df.collect())
+        batches.append((drop, tables))
+    return batches
+
+
+def _batch_raw_tables(drop, config):
+    """The batch's own extraction-level tables, built the sink's way."""
+    chunks = chunk_documents(
+        assemble_documents(drop, separator=config.turn_separator), config
+    )
+    extraction = extract_configured(chunks, config)
+    return (
+        entities_raw_table(extraction),
+        edges_raw_table(extraction, config.relationship_confidence),
+    )
+
+
+def _canon(rows):
+    return Counter(
+        tuple(tuple(v) if isinstance(v, (list, Row)) else v for v in r)
+        for r in rows
+    )
+
+
+def test_entities_merge_spec_matches_workspace_merge(spark, published):
+    """The workspace upserts entities_raw by ENTITIES_RAW_MERGE: the second
+    published version is the spec applied to the first and the batch."""
+    cfg = PipelineConfig()
+    (drop0, first), (drop1, second) = published
+    schema, rows = first["entities_raw"]
+    assert _canon(rows) == _canon(_batch_raw_tables(drop0, cfg)[0].collect())
+    want = ENTITIES_RAW_MERGE.apply(
+        spark.createDataFrame(rows, schema), _batch_raw_tables(drop1, cfg)[0]
+    )
+    assert _canon(second["entities_raw"][1]) == _canon(want.collect())
+
+
+def test_edges_merge_spec_matches_workspace_merge(spark, published):
+    """edges_raw is append-only (the pinned ``INSERT INTO``): each published
+    version holds the previous one's occurrence rows plus the batch's."""
+    cfg = PipelineConfig()
+    want = Counter()
+    for drop, tables in published:
+        want += _canon(_batch_raw_tables(drop, cfg)[1].collect())
+        assert _canon(tables["edges_raw"][1]) == want
+    # occurrence rows, not one row per triple
+    assert len({r[:3] for r in want}) < len(want)
+
+
+def test_ddl_matches_published_workspace(spark, published):
     """The DDL declares the columns and types the sink publishes, after the
     first batch and after a merged one."""
     ddl = workspace_ddl()
@@ -83,18 +163,9 @@ def test_ddl_matches_published_workspace(spark, tmp_path):
             for f in spark.createDataFrame([], cols).schema
         ]
 
-    sink = IncrementalGraphSink(str(tmp_path / "ws"), PipelineConfig())
-    drops = [
-        transcripts_df(spark, 4, seed=5),
-        transcripts_df(spark, 4, seed=9).withColumn(
-            "conv_id", F.concat(F.lit("y"), F.col("conv_id"))
-        ),
-    ]
-    for batch_id, drop in enumerate(drops):
-        sink.process_batch(drop, batch_id=batch_id)
+    for batch_id, (_, tables) in enumerate(published):
         for name in ("entities_raw", "edges_raw"):
-            published = spark.read.parquet(str(tmp_path / "ws" / name)).schema
-            got = [(f.name, f.dataType.simpleString()) for f in published]
+            got = [(f.name, f.dataType.simpleString()) for f in tables[name][0]]
             assert got == declared(name), (batch_id, name)
 
 

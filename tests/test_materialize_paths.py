@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from graphrag_rs_spark.config import PipelineConfig
@@ -236,7 +237,9 @@ def _expected_node_stats(node_ids, keys):
     return sorted((n, degree[n], root[n], size[root[n]]) for n in node_ids)
 
 
-def test_node_stats_match_reference_key_set(spark):
+# one raw-edge shape is left: the build's occurrence rows
+@pytest.mark.parametrize("table", ["edges_raw_table"])
+def test_node_stats_match_reference_key_set(spark, table):
     cfg = PipelineConfig()
     docs = assemble_documents(transcripts_df(spark, 8, seed=5))
     extraction = extract_chunks(chunk_documents(docs, cfg), cfg).cache()
