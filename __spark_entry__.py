@@ -500,10 +500,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def hybrid_extraction_q(spark, sf_dir):
         """Hybrid-mode build (setconfig.rs:1780-1794 → lib.rs:383) through
         build_graph itself with the DeterministicStubClient as the
-        endpoint: pattern + derived-LLM extraction fused per chunk by
-        merge_extractions. Oracle: the single-process twin re-derives the
-        stub responses and re-fuses them independently
-        (oracle_twins.hybrid_extraction)."""
+        endpoint: pattern + derived-LLM extraction fused per chunk inside
+        the one LLM extraction UDF (llm_extraction.fuse_rows). Oracle: the
+        single-process twin re-derives the stub responses and re-fuses
+        them independently (oracle_twins.hybrid_extraction)."""
         from dataclasses import replace as dc_replace
 
         from graphrag_rs_spark.operators.llm_extraction import (

@@ -34,6 +34,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphrag_rs_spark.config import PipelineConfig
+from graphrag_rs_spark.rules.extraction import (
+    extract_entities,
+    extract_relationships,
+)
 
 EXTRACTION_SCHEMA = (
     "chunk_id string, conv_id string, doc_id string, chunk_idx int, "
@@ -47,14 +51,38 @@ EXTRACTION_SCHEMA = (
 _GLEANING_WIDEN = ("CONCEPT", "EVENT", "OBJECT")
 
 
+def pattern_rows(
+    text: str,
+    types_per_round: list[tuple[str, ...]],
+    target: int,
+    min_confidence: float,
+    do_rel: bool,
+) -> tuple[list, list]:
+    """One chunk's pattern extraction as the extraction table's entity and
+    triple rows: round r extracts with ``types_per_round[r]``, the first
+    round that yields at least ``target`` entities stops the loop, and its
+    entities REPLACE the earlier rounds'; triples pair the final round's
+    entities (when ``do_rel``)."""
+    for types in types_per_round:
+        ents = extract_entities(text, types, min_confidence)
+        if len(ents) >= target:
+            break
+    return (
+        [
+            (e.entity_id, e.name, e.entity_type, e.confidence, rank,
+             [(s, t) for s, t in e.mentions])
+            for rank, e in enumerate(ents)
+        ],
+        extract_relationships(ents, text) if do_rel else [],
+    )
+
+
 def _extract(
     chunks: DataFrame, config: PipelineConfig, rounds: int
 ) -> DataFrame:
-    """The one extraction UDF: each chunk runs up to ``rounds`` pattern
-    extractions, round r with the configured types plus the first r-1
-    gleaning types, and stops at the first round that yields at least
-    ``gleaning_entity_target`` entities. A round REPLACES the chunk's
-    entities; triples pair the final round's entities."""
+    """The one extraction UDF: each chunk runs :func:`pattern_rows` with up
+    to ``rounds`` rounds, round r with the configured types plus the first
+    r-1 gleaning types, stopping at ``gleaning_entity_target`` entities."""
     base = tuple(config.all_entity_types)
     types_per_round = [base + _GLEANING_WIDEN[:r] for r in range(rounds)]
     target = max(1, config.gleaning_entity_target)
@@ -64,28 +92,15 @@ def _extract(
     def extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        from graphrag_rs_spark.rules.extraction import (
-            extract_entities,
-            extract_relationships,
-        )
-
         for pdf in batches:
             out_entities = []
             out_triples = []
             for text in pdf["text"]:
-                text = text or ""
-                for types in types_per_round:
-                    ents = extract_entities(text, types, min_confidence)
-                    if len(ents) >= target:
-                        break
-                out_entities.append([
-                    (e.entity_id, e.name, e.entity_type, e.confidence, rank,
-                     [(s, t) for s, t in e.mentions])
-                    for rank, e in enumerate(ents)
-                ])
-                out_triples.append(
-                    extract_relationships(ents, text) if do_rel else []
+                ents, triples = pattern_rows(
+                    text or "", types_per_round, target, min_confidence, do_rel
                 )
+                out_entities.append(ents)
+                out_triples.append(triples)
             yield pd.DataFrame(
                 {
                     "chunk_id": pdf["chunk_id"],

@@ -22,7 +22,10 @@ sandbox cannot fake:
 * **the per-chunk gleaning loop** (extract → completion check → continue
   → merge-new, up to ``max_rounds``, gleaning_extractor.rs:112-223) run
   INSIDE the async task so every round of every chunk shares the same
-  concurrency budget.
+  concurrency budget;
+* **hybrid fusion** in the same task: each chunk's pattern rows are
+  extracted once its batch's requests return and merged with its LLM
+  rows by the gleaning merge rule (:func:`fuse_rows`).
 
 No live model exists in this sandbox, so the client is a constructor-
 injected protocol (``acomplete(prompt) -> str``); tests drive the full
@@ -37,11 +40,11 @@ import re
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from graphrag_rs_spark.config import PipelineConfig
-from graphrag_rs_spark.operators.extraction import EXTRACTION_SCHEMA
+from graphrag_rs_spark.operators.extraction import EXTRACTION_SCHEMA, pattern_rows
 from graphrag_rs_spark.rules.extraction import entity_id_for, find_mentions
 
 # ---------------------------------------------------------------------------
@@ -353,6 +356,45 @@ def _to_rows(out: dict, text: str) -> tuple[list, list]:
     return ent_rows, deduplicate_triples(triples)
 
 
+def fuse_rows(pattern: tuple[list, list], llm: tuple[list, list]) -> tuple[list, list]:
+    """Hybrid fusion of one chunk's pattern and LLM rows (the reference's
+    "hybrid" approach, setconfig.rs:1780-1787 → lib.rs:383 — LLM + pattern
+    with the gleaning merge as the fusion rule); each side is the
+    ``(entity rows, triples)`` pair of the extraction row contract.
+
+    Entities merge like :func:`merge_entity_data` (gleaning_extractor.rs:
+    229-272): key = LOWERCASE NAME, pattern rows are the ``existing`` set
+    (they keep their position), each pattern slot is replaced IN PLACE by
+    its first LLM name-twin that carries strictly more information — here
+    strictly higher confidence, compared as the stored float32, the
+    schema-level stand-in for the reference's strictly-longer description
+    (LLM entities carry the fixed 0.9 of llm_extractor.rs; pattern
+    confidences are the per-rule scores) — and never-seen LLM names append
+    afterwards in LLM order. ``rank`` is re-numbered to the merged position
+    so downstream ``order_key`` semantics hold. Triples go pattern first,
+    then LLM, keeping the first occurrence (:func:`deduplicate_triples`).
+    """
+    p_ents, p_tris = pattern
+    l_ents, l_tris = llm
+    twins: dict[str, list] = {}
+    for n in l_ents:
+        twins.setdefault(n[1].lower(), []).append(n)
+    fused = []
+    for e in p_ents:
+        conf = np.float32(e[3])
+        fused.append(next(
+            (n for n in twins.get(e[1].lower(), ()) if np.float32(n[3]) > conf),
+            e,
+        ))
+    seen = {e[1].lower() for e in p_ents}
+    fused += [n for n in l_ents if n[1].lower() not in seen]
+    return (
+        [(eid, name, etype, conf, rank, mentions)
+         for rank, (eid, name, etype, conf, _, mentions) in enumerate(fused)],
+        deduplicate_triples(p_tris + l_tris),
+    )
+
+
 # ---------------------------------------------------------------------------
 # The Spark stage
 # ---------------------------------------------------------------------------
@@ -376,10 +418,18 @@ def extract_chunks_llm(
     ``concurrency`` bounds cluster-wide in-flight requests, which is the
     knob a shared endpoint needs. Chunks whose calls exhaust retries
     degrade to empty extractions instead of failing the task.
+
+    With ``config.extraction_mode == "hybrid"`` each chunk's round-1
+    pattern rows (``extract_chunks``'s) are computed in the same task,
+    after the batch's requests return, and fused with its LLM rows by
+    :func:`fuse_rows`.
     """
     config = config or PipelineConfig()
     entity_types = tuple(config.all_entity_types)
     policy = policy or LLMCallPolicy()
+    hybrid = config.extraction_mode == "hybrid"
+    min_confidence = config.min_confidence
+    do_rel = config.extract_relationships
 
     def run_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import asyncio
@@ -403,7 +453,19 @@ def extract_chunks_llm(
             return await asyncio.gather(*[one(sem, t) for t in texts])
 
         for pdf in batches:
-            results = asyncio.run(drive(list(pdf["text"])))
+            texts = list(pdf["text"])
+            results = asyncio.run(drive(texts))
+            if hybrid:
+                # CPU-bound rules run once no request is in flight
+                results = [
+                    fuse_rows(
+                        pattern_rows(
+                            text or "", [entity_types], 1, min_confidence, do_rel
+                        ),
+                        llm,
+                    )
+                    for text, llm in zip(texts, results)
+                ]
             yield pd.DataFrame(
                 {
                     "chunk_id": pdf["chunk_id"],
@@ -418,100 +480,6 @@ def extract_chunks_llm(
     return chunks.select(
         "chunk_id", "conv_id", "doc_id", "chunk_idx", "text"
     ).mapInPandas(run_batches, schema=EXTRACTION_SCHEMA)
-
-
-def merge_extractions(pattern: DataFrame, llm: DataFrame) -> DataFrame:
-    """Hybrid fusion of two ``EXTRACTION_SCHEMA`` tables (the reference's
-    "hybrid" approach, setconfig.rs:1780-1787 → lib.rs:383 — LLM + pattern
-    with the gleaning merge as the fusion rule).
-
-    Per chunk, entities merge exactly like ``merge_entity_data``
-    (gleaning_extractor.rs:229-272): key = LOWERCASE NAME, pattern rows
-    are the ``existing`` set (they keep their position), an LLM row
-    replaces its name-twin IN PLACE only when it carries strictly more
-    information — here strictly higher confidence, the schema-level stand-
-    in for the reference's strictly-longer description (LLM entities carry
-    the fixed 0.9 of llm_extractor.rs; pattern confidences are the
-    per-rule scores) — and never-seen LLM names append afterwards in LLM
-    order. Triples concatenate pattern-first and dedupe keeping the first
-    occurrence (``deduplicate_triples`` / gleaning_extractor.rs:416-435;
-    ``array_distinct`` preserves first-occurrence order). ``rank`` is
-    re-numbered to the merged position so downstream ``order_key``
-    semantics hold.
-
-    All JVM higher-order functions — a full-outer join on the chunk key is
-    the only shuffle, and both sides are co-partitioned by the same
-    upstream chunking so AQE usually plans it shuffle-free.
-    """
-    key = ["chunk_id", "conv_id", "doc_id", "chunk_idx"]
-    p = pattern.select(
-        *key,
-        F.col("entities").alias("p_ents"),
-        F.col("triples").alias("p_tris"),
-    )
-    l = llm.select(
-        *key,
-        F.col("entities").alias("l_ents"),
-        F.col("triples").alias("l_tris"),
-    )
-    empty_ents = F.array().cast(
-        "array<struct<entity_id:string,name:string,entity_type:string,"
-        "confidence:float,rank:int,mentions:array<struct<start:int,end:int>>>>"
-    )
-    empty_tris = F.array().cast(
-        "array<struct<subj:string,obj:string,pred:string>>"
-    )
-    j = (
-        p.join(l, key, "full_outer")
-        .select(
-            *key,
-            F.coalesce("p_ents", empty_ents).alias("p_ents"),
-            F.coalesce("l_ents", empty_ents).alias("l_ents"),
-            F.coalesce("p_tris", empty_tris).alias("p_tris"),
-            F.coalesce("l_tris", empty_tris).alias("l_tris"),
-        )
-    )
-
-    # in-place replacement: each pattern slot takes its LLM name-twin when
-    # that twin's confidence is STRICTLY higher (merge_entity_data's
-    # strictly-longer rule), else keeps itself
-    def replace_slot(e):
-        twin = F.try_element_at(
-            F.filter(
-                F.col("l_ents"),
-                lambda n: (F.lower(n["name"]) == F.lower(e["name"]))
-                & (n["confidence"] > e["confidence"]),
-            ),
-            F.lit(1),
-        )
-        return F.coalesce(twin, e)
-
-    merged_existing = F.transform(F.col("p_ents"), replace_slot)
-    appended_new = F.filter(
-        F.col("l_ents"),
-        lambda n: ~F.exists(
-            F.col("p_ents"),
-            lambda e: F.lower(e["name"]) == F.lower(n["name"]),
-        ),
-    )
-    fused = F.concat(merged_existing, appended_new)
-    # re-rank to merged position (rank is positional downstream)
-    reranked = F.transform(
-        fused,
-        lambda e, i: F.struct(
-            e["entity_id"].alias("entity_id"),
-            e["name"].alias("name"),
-            e["entity_type"].alias("entity_type"),
-            e["confidence"].alias("confidence"),
-            i.cast("int").alias("rank"),
-            e["mentions"].alias("mentions"),
-        ),
-    )
-    return j.select(
-        *key,
-        reranked.alias("entities"),
-        F.array_distinct(F.concat("p_tris", "l_tris")).alias("triples"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -572,7 +540,7 @@ class DeterministicStubClient:
     the driver's ``hybrid_extraction`` row builds with this client and the
     single-process twin (``oracle_twins.hybrid_extraction``) re-derives the
     same responses and re-fuses them independently, pinning
-    :func:`merge_extractions` + the hybrid dispatch
+    :func:`fuse_rows` + the hybrid dispatch
     (setconfig.rs:1780-1794 parity) on real data."""
 
     @staticmethod

@@ -683,7 +683,7 @@ def gleaning_extraction(n_convs: int, seed: int = 42) -> pd.DataFrame:
 # ---------------------------------------------------------------------------
 # Hybrid-mode extraction (setconfig.rs:1780-1794 -> lib.rs:383 fusion):
 # pattern extraction + the DeterministicStubClient's derived "LLM" output,
-# fused by an independent reimplementation of merge_extractions'
+# fused by an independent reimplementation of llm_extraction.fuse_rows'
 # gleaning-merge semantics (in-place replacement on strictly-higher
 # confidence, append never-seen LLM names, pattern-first triple dedupe)
 # ---------------------------------------------------------------------------
@@ -750,7 +750,7 @@ def hybrid_extraction(n_convs: int, seed: int = 42) -> pd.DataFrame:
                     if tri not in seen_t:
                         seen_t.add(tri)
                         l_tris.append(tri)
-            # fusion (merge_extractions semantics, reimplemented)
+            # fusion (fuse_rows semantics, reimplemented)
             l_by_name = {}
             for le in l_ents:
                 l_by_name.setdefault(le[1].lower(), le)

@@ -44,14 +44,18 @@ LINEAGE_SCHEMA = (
     "hash_sum long"
 )
 # Part of every stage fingerprint: a checkpoint in an older layout (v2 kept
-# its lineage in a ``lineage/`` table) is recomputed once, not failed.
-LINEAGE_FORMAT = "lineage-v3:manifest"
+# its lineage in a ``lineage/`` table, v3 hashed no NULL flags) is
+# recomputed once, not failed.
+LINEAGE_FORMAT = "lineage-v4:manifest"
 
 
 def _row_hashes(df: DataFrame, *keep) -> DataFrame:
-    # xxhash64 over every column, cast to string
-    return df.select(*keep, F.xxhash64(
-        *[F.col(c).cast("string") for c in df.columns]).alias("row_hash"))
+    # xxhash64 over every column's (is-NULL flag, value cast to string):
+    # xxhash64 skips NULL arguments, so without the flag ("c", "x", NULL)
+    # and ("c", NULL, "x") would hash equal
+    return df.select(*keep, F.xxhash64(*[
+        x for c in df.columns for x in (F.isnull(c), F.col(c).cast("string"))
+    ]).alias("row_hash"))
 
 
 def _hash_totals() -> tuple:

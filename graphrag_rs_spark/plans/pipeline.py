@@ -28,7 +28,6 @@ from graphrag_rs_spark.operators.chunking import chunk_documents
 from graphrag_rs_spark.operators.extraction import (
     edges_raw_table,
     entities_raw_table,
-    extract_chunks,
     extract_gleaning,
     mentions_table,
 )
@@ -323,24 +322,20 @@ def extract_configured(
     1750-1794), for the batch build and the streaming sink alike:
     ``algorithmic`` runs the deterministic pattern gleaning extractor;
     ``semantic`` runs the batched-async LLM gleaning extractor; ``hybrid``
-    runs both and fuses per chunk with the gleaning merge rule. The LLM
-    client comes from :func:`extraction_client_factory`.
+    runs the same LLM pass, whose UDF also extracts each chunk's pattern
+    rows and fuses them with the gleaning merge rule
+    (``llm_extraction.fuse_rows``). The LLM client comes from
+    :func:`extraction_client_factory`; without one, every mode runs the
+    pattern path.
     """
     client_factory = extraction_client_factory(config, client_factory)
     if client_factory is None:
         return extract_gleaning(chunks, config)
-    from graphrag_rs_spark.operators.llm_extraction import (
-        extract_chunks_llm,
-        merge_extractions,
-    )
+    from graphrag_rs_spark.operators.llm_extraction import extract_chunks_llm
 
-    llm = extract_chunks_llm(
+    return extract_chunks_llm(
         chunks,
         client_factory,
         config,
         max_rounds=max(1, config.max_gleaning_rounds),
     )
-    if config.extraction_mode == "semantic":
-        return llm
-    # hybrid: pattern is the `existing` side of the gleaning merge
-    return merge_extractions(extract_chunks(chunks, config), llm)

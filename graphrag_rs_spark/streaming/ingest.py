@@ -40,6 +40,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from graphrag_rs_spark.config import PipelineConfig
 
@@ -242,9 +243,10 @@ def run_incremental_ingest(
     checkpoint_dir: str,
     config: PipelineConfig | None = None,
     available_now: bool = True,
-) -> None:
-    """Start the stream and (with ``available_now``) block until every
-    pending file is ingested — the batch-catchup trigger."""
+) -> StreamingQuery:
+    """Start the stream and return its query; with ``available_now``,
+    block until every pending file is ingested — the batch-catchup
+    trigger — else the caller awaits or stops the running query."""
     sink = IncrementalGraphSink(workspace_dir, config)
     stream = read_transcript_stream(spark, input_dir)
     writer = (
@@ -252,8 +254,8 @@ def run_incremental_ingest(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        writer.start()
+    if not available_now:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

@@ -69,7 +69,7 @@ def test_full_resume_calls_no_build_operator(spark, transcripts, tmp_path, monke
 
     for name in (
         "assemble_documents", "chunk_documents", "extract_configured",
-        "extract_chunks", "extract_gleaning", "entities_raw_table",
+        "extract_gleaning", "entities_raw_table",
         "edges_raw_table",
         "canonicalize_entities", "nodes_table", "edges_table",
         "node_stats_table",
@@ -146,6 +146,24 @@ def test_other_input_recomputes_from_documents(spark, transcripts, tmp_path):
     assert {"documents", "nodes", "edges"} <= set(mgr.stages_computed)
     direct = build_graph(spark, other, PipelineConfig())
     assert _outputs(again)["nodes"] == _outputs(direct)["nodes"]
+
+    # the same values with a NULL in another column are other input too
+    schema = (
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp"
+    )
+    d = str(tmp_path / "ck_null")
+    build_graph(
+        spark,
+        spark.createDataFrame([("c", 0, "user", "search", None, None)], schema),
+        PipelineConfig(), checkpoint_dir=d,
+    )
+    moved = build_graph(
+        spark,
+        spark.createDataFrame([("c", 0, "user", None, "search", None)], schema),
+        PipelineConfig(), checkpoint_dir=d,
+    )
+    assert "documents" in moved["_checkpoint"].stages_computed
 
 
 def test_same_parquet_read_twice_resumes(spark, transcripts, tmp_path):

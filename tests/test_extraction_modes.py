@@ -11,10 +11,7 @@ import pytest
 
 from graphrag_rs_spark.config import PipelineConfig
 from graphrag_rs_spark.config_loader import load_config
-from graphrag_rs_spark.operators.llm_extraction import (
-    RecordedClient,
-    merge_extractions,
-)
+from graphrag_rs_spark.operators.llm_extraction import RecordedClient, fuse_rows
 from graphrag_rs_spark.plans.pipeline import build_graph
 
 # one tiny conversation; the pattern extractor finds the PERSON names,
@@ -250,72 +247,69 @@ def test_semantic_without_client_falls_back_to_pattern(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# merge_extractions unit vectors (gleaning_extractor.rs:229-272 semantics)
+# fuse_rows unit vectors (gleaning_extractor.rs:229-272 semantics)
 # ---------------------------------------------------------------------------
-
-EXT_SCHEMA = (
-    "chunk_id string, conv_id string, doc_id string, chunk_idx int, "
-    "entities array<struct<entity_id:string, name:string, "
-    "entity_type:string, confidence:float, rank:int, "
-    "mentions:array<struct<start:int,end:int>>>>, "
-    "triples array<struct<subj:string, obj:string, pred:string>>"
-)
-
 
 def _ent(eid, name, typ, conf, rank):
     return (eid, name, typ, conf, rank, [(0, len(name))])
 
 
-def _ext_df(spark, rows):
-    return spark.createDataFrame(rows, EXT_SCHEMA)
-
-
-def test_merge_replaces_in_place_only_on_strictly_higher(spark):
+def test_merge_replaces_in_place_only_on_strictly_higher():
     """Key is lowercase name; the LLM twin replaces the pattern slot IN
     PLACE only when strictly more confident (the strictly-longer-
     description rule of merge_entity_data); equal keeps existing; new
     names append after, in LLM order; ranks renumber to merged position."""
-    pattern = _ext_df(spark, [(
-        "c1", "v", "d", 0,
+    pattern = (
         [_ent("PERSON_a", "Alice", "PERSON", 0.8, 0),
          _ent("PERSON_b", "bob", "PERSON", 0.9, 1)],
         [("PERSON_a", "PERSON_b", "KNOWS")],
-    )])
-    llm = _ext_df(spark, [(
-        "c1", "v", "d", 0,
+    )
+    llm = (
         [_ent("PERSON_a2", "ALICE", "PERSON", 0.95, 0),   # higher → replaces
          _ent("PERSON_b2", "Bob", "PERSON", 0.9, 1),      # equal → kept old
          _ent("ORG_x", "Xcorp", "ORGANIZATION", 0.9, 2)], # new → appended
         [("PERSON_a", "PERSON_b", "KNOWS"),               # dup → dropped
          ("PERSON_a2", "ORG_x", "WORKS_AT")],
-    )])
-    row = merge_extractions(pattern, llm).collect()[0]
-    ents = [(e["entity_id"], e["name"], e["confidence"], e["rank"])
-            for e in row["entities"]]
-    assert ents == [
+    )
+    ents, tris = fuse_rows(pattern, llm)
+    assert [(e[0], e[1], e[3], e[4]) for e in ents] == [
         ("PERSON_a2", "ALICE", pytest.approx(0.95), 0),  # replaced in place
         ("PERSON_b", "bob", pytest.approx(0.9), 1),      # existing kept
         ("ORG_x", "Xcorp", pytest.approx(0.9), 2),       # appended
     ]
-    tris = [(t["subj"], t["obj"], t["pred"]) for t in row["triples"]]
     assert tris == [
         ("PERSON_a", "PERSON_b", "KNOWS"),
         ("PERSON_a2", "ORG_x", "WORKS_AT"),
     ]
 
 
-def test_merge_outer_join_covers_one_sided_chunks(spark):
-    """A chunk present on only one side passes through unchanged (full
-    outer join + empty-array coalesce)."""
-    pattern = _ext_df(spark, [
-        ("c1", "v", "d", 0, [_ent("P_a", "A", "PERSON", 0.7, 0)], []),
-    ])
-    llm = _ext_df(spark, [
-        ("c2", "v", "d", 1, [_ent("O_b", "B", "ORGANIZATION", 0.9, 0)],
-         [("O_b", "O_b", "SELF")]),
-    ])
-    rows = {r["chunk_id"]: r for r in merge_extractions(pattern, llm).collect()}
-    assert [e["entity_id"] for e in rows["c1"]["entities"]] == ["P_a"]
-    assert rows["c1"]["triples"] == []
-    assert [e["entity_id"] for e in rows["c2"]["entities"]] == ["O_b"]
-    assert len(rows["c2"]["triples"]) == 1
+def test_fuse_first_strictly_higher_twin_at_float32():
+    """A slot takes its FIRST twin whose confidence is strictly higher as a
+    stored float32: a twin equal once both are rounded to float32 keeps
+    the pattern row even when it is greater as a float64."""
+    pattern = ([_ent("P_a", "Ann", "PERSON", 0.9, 0)], [])
+    llm = (
+        [_ent("P_a1", "ann", "PERSON", 0.9 + 1e-9, 0),  # float32-equal
+         _ent("P_a2", "ANN", "PERSON", 0.95, 1),        # first higher
+         _ent("P_a3", "Ann", "PERSON", 0.99, 2)],
+        [],
+    )
+    ents, _ = fuse_rows(pattern, llm)
+    assert [(e[0], e[4]) for e in ents] == [("P_a2", 0)]
+    ents, _ = fuse_rows(pattern, (llm[0][:1], []))
+    assert [e[0] for e in ents] == ["P_a"]
+
+
+def test_fuse_passes_one_side_through_when_the_other_is_empty():
+    """A chunk where one extractor found nothing gets the other side's
+    rows unchanged (ranks already positional)."""
+    pattern = ([_ent("P_a", "A", "PERSON", 0.7, 0)], [("P_a", "P_a", "SELF")])
+    llm = (
+        [_ent("O_b", "B", "ORGANIZATION", 0.9, 0),
+         _ent("O_c", "C", "ORGANIZATION", 0.9, 1)],
+        [("O_b", "O_c", "MENTIONED_WITH")],
+    )
+    empty = ([], [])
+    assert fuse_rows(pattern, empty) == pattern
+    assert fuse_rows(empty, llm) == llm
+    assert fuse_rows(empty, empty) == empty

@@ -20,7 +20,9 @@ JOB_CEILING = 63
 CHECKPOINTED_JOB_CEILING = 79
 
 
-def _build_jobs(spark, checkpoint_dir: str | None = None, **config) -> int:
+def _build_jobs(
+    spark, checkpoint_dir: str | None = None, client_factory=None, **config
+) -> int:
     from graphrag_rs_spark.config import PipelineConfig
     from graphrag_rs_spark.fixtures import transcripts_df
     from graphrag_rs_spark.plans.pipeline import build_graph
@@ -34,6 +36,7 @@ def _build_jobs(spark, checkpoint_dir: str | None = None, **config) -> int:
             spark, transcripts_df(spark, 12, seed=42),
             PipelineConfig(shuffle_partitions=4, **config),
             checkpoint_dir=checkpoint_dir,
+            client_factory=client_factory,
         )
         for name in ("nodes", "edges", "node_stats"):
             tables[name].write.format("noop").mode("overwrite").save()
@@ -57,6 +60,19 @@ def test_gleaning_build_job_ceiling(spark):
     assert jobs <= JOB_CEILING, (
         f"{jobs} Spark jobs for one 12-conv build with three gleaning "
         f"rounds (ceiling {JOB_CEILING})")
+
+
+def test_hybrid_build_job_ceiling(spark):
+    # hybrid fuses each chunk's pattern rows inside the one LLM extraction
+    # UDF, so it runs no more jobs than the pattern build
+    from graphrag_rs_spark.operators.llm_extraction import DeterministicStubClient
+
+    jobs = _build_jobs(
+        spark, client_factory=DeterministicStubClient, extraction_mode="hybrid"
+    )
+    assert jobs <= JOB_CEILING, (
+        f"{jobs} Spark jobs for one 12-conv hybrid build with the stub "
+        f"client (ceiling {JOB_CEILING})")
 
 
 def test_checkpointed_build_job_ceiling(spark, tmp_path):

@@ -125,6 +125,27 @@ def test_gleaning_is_one_extraction_pass(spark):
     assert three_jobs <= one_jobs, (three_jobs, one_jobs)
 
 
+def test_hybrid_extraction_is_one_pass(spark):
+    """Hybrid extraction fuses each chunk's pattern rows inside the one LLM
+    extraction UDF: over chunks it plans the algorithmic chain's shape,
+    one exchange and two Python stages, with no join of two extraction
+    passes on the chunk key."""
+    from graphrag_rs_spark.config import PipelineConfig
+    from graphrag_rs_spark.fixtures import transcripts_df
+    from graphrag_rs_spark.operators.assembly import assemble_documents
+    from graphrag_rs_spark.operators.chunking import chunk_documents
+    from graphrag_rs_spark.operators.llm_extraction import DeterministicStubClient
+    from graphrag_rs_spark.plans.pipeline import extract_configured
+
+    cfg = PipelineConfig(extraction_mode="hybrid")
+    chunks = chunk_documents(assemble_documents(transcripts_df(spark, 12, seed=42)), cfg)
+    plan = plan_of(extract_configured(chunks, cfg, DeterministicStubClient))
+    s = summarize(plan)
+    assert s["exchanges"] == 1, s
+    assert s["python_stages"] == 2, s
+    assert "Join" not in plan, plan
+
+
 def test_edge_repoint_broadcasts_linkmap(spark, extraction):
     """Re-pointing 10^10 raw edges through the entity->cluster linkmap must
     broadcast the (small) linkmap, never shuffle the edge table for it; the

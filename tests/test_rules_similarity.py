@@ -1,5 +1,8 @@
 """Ports of graphrag-rs string_similarity_linker.rs test vectors (rs:471-621)."""
 
+import pytest
+
+from graphrag_rs_spark.config import PipelineConfig
 from graphrag_rs_spark.rules.similarity import (
     jaccard_similarity,
     jaro_winkler_similarity,
@@ -94,3 +97,74 @@ def test_pair_similarity_new_york_city():  # rs:578-620
 
 def test_exact_match_after_normalization():
     assert pair_similarity("JOHN SMITH", "John Smith!", "PERSON", "PERSON") == 1.0
+
+
+# ASCII names with typo, token, suffix and sound-alike variants per type
+LINK_NAMES = [
+    ("Jon Smith", "PERSON"), ("John Smith", "PERSON"),
+    ("Jonathan Smith", "PERSON"), ("Jon Smyth", "PERSON"),
+    ("J. Smith", "PERSON"), ("Catherine Jones", "PERSON"),
+    ("Katherine Jones", "PERSON"), ("Kathryn Jones", "PERSON"),
+    ("Robert Brown", "PERSON"), ("Rupert Brown", "PERSON"),
+    ("Roberta Browne", "PERSON"), ("Michael Anderson", "PERSON"),
+    ("Micheal Anderson", "PERSON"), ("Mike Andersen", "PERSON"),
+    ("Microsoft", "ORGANIZATION"), ("Microsoft Corp", "ORGANIZATION"),
+    ("Microsft", "ORGANIZATION"), ("Micro Soft", "ORGANIZATION"),
+    ("Helix Analytics", "ORGANIZATION"), ("Helix Analytic", "ORGANIZATION"),
+    ("Helix Labs", "ORGANIZATION"), ("New York", "LOCATION"),
+    ("New York City", "LOCATION"), ("Newark", "LOCATION"),
+    ("San Francisco", "LOCATION"), ("San Fransisco", "LOCATION"),
+    ("Saint Francis", "LOCATION"), ("York", "LOCATION"),
+]
+
+
+@pytest.mark.parametrize(
+    "link",
+    [
+        {},
+        {"link_use_phonetic": True},
+        {"link_fuzzy_matching": False},
+        {"link_max_edit_distance": 1},
+        {"link_min_similarity": 0.7, "link_use_phonetic": True},
+    ],
+    ids=["default", "phonetic", "no_fuzzy", "edit_1", "min_0.7_phonetic"],
+)
+def test_score_pairs_matches_pair_similarity(spark, link):
+    """The Spark scorer (JVM Levenshtein, Jaro skipped under its upper
+    bound) keeps exactly the candidate pairs whose pair_similarity reaches
+    the threshold, each with that score, under every linking setting."""
+    from graphrag_rs_spark.operators.canonicalize import (
+        candidate_pairs,
+        score_pairs,
+    )
+
+    cfg = PipelineConfig(**link)
+    entities = spark.createDataFrame(
+        [(f"E{i:02d}", n, t) for i, (n, t) in enumerate(LINK_NAMES)],
+        "entity_id string, name string, entity_type string",
+    )
+    by_id = {f"E{i:02d}": nt for i, nt in enumerate(LINK_NAMES)}
+    pairs = candidate_pairs(entities, cfg).cache()
+    try:
+        candidates = [(r["id1"], r["id2"]) for r in pairs.collect()]
+        got = {
+            (r["id1"], r["id2"]): r["score"]
+            for r in score_pairs(pairs, cfg).collect()
+        }
+    finally:
+        pairs.unpersist()
+    want = {}
+    for id1, id2 in candidates:
+        (n1, t1), (n2, t2) = by_id[id1], by_id[id2]
+        score = pair_similarity(
+            n1, n2, t1, t2,
+            max_edit_distance=cfg.link_max_edit_distance,
+            use_phonetic=cfg.link_use_phonetic,
+            fuzzy_matching=cfg.link_fuzzy_matching,
+        )
+        if score >= cfg.link_min_similarity:
+            want[id1, id2] = score
+    assert want and len(want) < len(candidates)
+    assert set(got) == set(want)
+    # the score column is float32
+    assert all(got[k] == pytest.approx(want[k], abs=1e-6) for k in want)

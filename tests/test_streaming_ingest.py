@@ -182,3 +182,33 @@ def test_sink_runs_the_build_link_stages_once(spark, tmp_path, monkeypatch):
     sink.process_batch(transcripts_df(spark, 4, seed=5), batch_id=0)
     assert len(calls) == 1
     assert sink._current_batch_id() == 0
+
+
+def test_continuous_ingest_returns_its_running_query(spark, tmp_path):
+    """Without ``available_now`` the stream keeps running: the caller gets
+    its query to await or stop, and once drained it has published what the
+    catch-up trigger publishes."""
+    in_dir = tmp_path / "in"
+    transcripts_df(spark, 4, seed=5).write.parquet(str(in_dir / "drop0"))
+    cfg = PipelineConfig()
+    run_incremental_ingest(
+        spark, str(in_dir) + "/*", str(tmp_path / "ws_now"),
+        str(tmp_path / "ckpt_now"), cfg,
+    )
+    q = run_incremental_ingest(
+        spark, str(in_dir) + "/*", str(tmp_path / "ws"),
+        str(tmp_path / "ckpt"), cfg, available_now=False,
+    )
+    try:
+        assert q.isActive
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    def relationships(ws):
+        return sorted(
+            (r["subj"], r["pred"], r["obj"], r["confidence"], tuple(r["context"]))
+            for r in spark.read.parquet(str(tmp_path / ws / "relationships")).collect()
+        )
+
+    assert relationships("ws") and relationships("ws") == relationships("ws_now")
